@@ -39,27 +39,6 @@ object Metrics {
       .findFirst().map[Long](_.trim.split("\\s+")(8).toLong).orElse(-1L)
     catch { case _: Throwable => -1L }
 
-  /** Cumulative HOST busy jiffies (all cpus): user+nice+system+irq+
-    * softirq+steal from /proc/stat's aggregate line — idle and iowait
-    * excluded, guest fields excluded (guest time is already inside
-    * user on Linux). -1 when unavailable. Diffed against
-    * [[selfJiffies]] this measures CPU work done by processes OTHER
-    * than this JVM across a window — the interference signal load1
-    * only proxies (load1 counts OUR runnable threads too, so a busy
-    * bench raises it with zero external interference). */
-  def hostBusyJiffies(): Long =
-    try java.nio.file.Files.readAllLines(
-        java.nio.file.Paths.get("/proc/stat")).stream()
-      .filter(_.startsWith("cpu "))
-      .findFirst().map[Long] { line =>
-        val f = line.trim.split("\\s+")
-        // f(0)="cpu"; 1 user, 2 nice, 3 system, 4 idle, 5 iowait,
-        // 6 irq, 7 softirq, 8 steal
-        Seq(1, 2, 3, 6, 7, 8).map(i =>
-          if (i < f.length) f(i).toLong else 0L).sum
-      }.orElse(-1L)
-    catch { case _: Throwable => -1L }
-
   /** Cumulative HOST user-mode + steal jiffies (user+nice+steal from
     * /proc/stat's aggregate line; -1 when unavailable). The LOAD-GATE
     * numerator: kernel/system time is deliberately EXCLUDED because it

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted headline-query attribution probe (round-12 verdict #4 —
-  * the RegProbe discipline pointed at named queries): warm the FULL
+  * an in-JVM interleaved A/B pointed at named queries): warm the FULL
   * headline suite once untimed, then run N round-major interleaved
   * reps of just the named queries, printing per-rep wall + the host
   * 1-min load, and a min/median/max summary. One JVM, so JIT, page
@@ -25,12 +23,7 @@ object QProbe {
     val names = (if (args.length > 1) args(1)
       else "q5_tx_per_store,q25_cosine_topk").split(",").toSeq
     val reps = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    Session.tune(spark)
+    val spark = Session.builder("graft-qprobe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def force(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

@@ -593,7 +593,6 @@ object ScaleBench {
     * itself is irrelevant to the timing: every row's cum_before is
     * computed before any filtering. */
   def budgetCumsum(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val scored = docs.select(col("doc_id"),
       graft.functions.Text.tokenCount(col("text")).cast("long").as("n_tokens"),
       graft.functions.Text.qualityScore(col("text")).as("q"))

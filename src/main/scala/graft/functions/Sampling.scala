@@ -27,7 +27,6 @@ object Sampling {
   /** Deterministic sample of `df` by hashing `keyCol`. Rows sharing a
     * key are kept or dropped together. */
   def deterministicSample(df: DataFrame, keyCol: String, fraction: Double): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.filter(hashKeep(col(keyCol), fraction))
   }
 
@@ -80,7 +79,6 @@ object Sampling {
   def mixtureSample(df: DataFrame, groupCol: String, keyCol: String,
                     fractions: Map[String, Double]): DataFrame = {
     require(fractions.nonEmpty, "at least one group fraction")
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val keep = fractions.foldLeft(lit(false)) { case (acc, (g, f)) =>
       when(col(groupCol) === lit(g), hashKeep(col(keyCol), f)).otherwise(acc)
     }
@@ -148,7 +146,6 @@ object Sampling {
     * (deterministicSample) pre-thins before the window sort. */
   def stratifiedSampleN(df: DataFrame, groupCol: String, keyCol: String,
                         n: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     val h = graft.plans.GraftFunctions.hex_window(
       md5(col(keyCol).cast("string").cast("binary")), 0, 8)
     val w = org.apache.spark.sql.expressions.Window

@@ -17,9 +17,7 @@ object Text {
     * between engines are moot because only [a-z0-9] runs survive.
     * Codegen'd (graft.plans.AsciiTokens): byte-identical to
     * `filter(split(lower(c), "[^a-z0-9]+"), _ =!= "")` but ~100x
-    * cheaper — the filter lambda evaluates interpreted per element.
-    * Callers must have run GraftFunctions.register (all operator entry
-    * points do). */
+    * cheaper — the filter lambda evaluates interpreted per element. */
   def tokens(c: Column): Column =
     graft.plans.GraftFunctions.graft_tokens(lower(c))
 

@@ -976,7 +976,6 @@ object Advanced {
   // drives Warehouse.writeZOrdered; the oracle rebuilds the interleave
   // from 64 explicit shift/mask terms.
   def zorderKeys(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.lineitem(spark, dir).filter(col("l_orderkey") < 200)
       .select(col("l_orderkey"), col("l_partkey"),
         graft.plans.GraftFunctions.morton_key(

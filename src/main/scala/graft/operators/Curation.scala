@@ -107,14 +107,12 @@ object Curation {
   def sharedSubstringOn(docs: DataFrame, w: Int = SubstrW,
       key: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
         s => md5(s.cast("binary"))): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     sharedStats(windowTable(docs, w, key))
   }
 
   /** q162 on the rolling-hash fast lane — the form the scale bench
     * times and the 100 TB deployment runs. */
   def sharedSubstringFastOn(docs: DataFrame, w: Int = SubstrW): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     sharedStats(windowTableFast(docs, w))
   }
 
@@ -152,7 +150,6 @@ object Curation {
   // (the common case: benchmarks are MBs, corpora are TBs); the
   // permille is exact integer arithmetic, no float ever materializes.
   def ngramOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val wins = windowTable(
         Tables.documents(spark, dir).select("doc_id", "text"), DeconW)
       .localCheckpoint(true) // two consumers: benchmark set + corpus side
@@ -204,7 +201,6 @@ object Curation {
 
   def exactQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val tc = Tables.documents(spark, dir)
       .select(col("doc_id"),
         Text.tokenCount(col("text")).cast("long").as("tc"))
@@ -241,7 +237,6 @@ object Curation {
   // single-partition window); batch id is integer arithmetic on the
   // rank; per-batch aggregation is one hash shuffle on ~n/32 keys.
   def paddingWaste(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val t = Tables.documents(spark, dir)
       .select(col("doc_id"),
         Text.tokenCount(col("text")).cast("long").as("tc"))
@@ -297,7 +292,6 @@ object Curation {
   // ranks use the same all-integer ceil(p*n/100) both engines share.
   def sourceLengthProfile(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(spark)
     val t = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"),
         Text.tokenCount(col("text")).cast("long").as("tc"))
@@ -334,7 +328,6 @@ object Curation {
   // aggregate; countDistinct lowers to a partial-aggregated two-phase
   // plan, no distinct-heavy single task.
   def ngramDiversity(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val wins = windowTable(docs.select("doc_id", "text"), 2)
       .join(docs.select("doc_id", "source"), "doc_id")
@@ -368,7 +361,6 @@ object Curation {
   private val CoverageKs = Seq(100L, 1000L, 10000L)
 
   def vocabCoverage(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val counts = Tables.documents(spark, dir)
       .select(explode(Text.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
@@ -434,7 +426,6 @@ object Curation {
   /** Funnel survivors joined back to their text, shard-assigned and
     * sequence-packed — the frame every version writes. */
   private[graft] def packedCurated(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val idHash = graft.plans.GraftFunctions.hex_window(
       md5(col("doc_id").cast("string").cast("binary")), 0, 8)
     val cur = Llm.curatedDocs(docs)
@@ -491,7 +482,6 @@ object Curation {
   }
 
   def curatedWrite(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val root = s"/tmp/graft_curated_${spark.sparkContext.applicationId}_" +
       dir.replaceAll("[^0-9a-zA-Z]", "_")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
@@ -580,7 +570,6 @@ object Curation {
   // the query (the gate must be self-contained), but the standing
   // half is exactly what a production deployment persists.
   def incrementalCuration(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val idHash = graft.plans.GraftFunctions.hex_window(
       md5(col("doc_id").cast("string").cast("binary")), 0, 8)
@@ -755,7 +744,6 @@ object Curation {
   // broadcast (vocabulary is huge at 100 TB); the join shuffles on
   // the word key both sides. Totals ride along via a 1-row broadcast.
   def sourceDrift(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val tok = Tables.documents(spark, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("w"))
     val bySrc = tok.groupBy("source", "w").agg(count(lit(1)).as("n_ws"))
@@ -831,7 +819,6 @@ object Curation {
   private val KmvK = 256L
 
   def sourceOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val tokset = Tables.documents(spark, dir)
       .select(col("source"), explode(Text.tokens(col("text"))).as("w"))
@@ -955,7 +942,6 @@ object Curation {
   private val SpanWidths = Seq(10, 20, 40)
 
   def dupSpanProfile(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).select("doc_id", "text")
     val flags = SpanWidths.map { w =>
       val wins = windowTable(docs, w).localCheckpoint(true)

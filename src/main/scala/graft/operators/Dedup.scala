@@ -57,7 +57,6 @@ object Dedup {
     // codegen'd shingler (graft.plans.WordShingles): byte-identical to
     // array_distinct(transform(...)) but ~10x faster — higher-order
     // lambdas run interpreted
-    graft.plans.GraftFunctions.register(df.sparkSession)
     // Repartition by doc_id BEFORE the expensive map chain: a document
     // corpus often arrives as few large files (locally: one), and without
     // this the tokenize+shingle+md5 work runs on as few cores as there
@@ -244,7 +243,6 @@ object Dedup {
     * production lane when cross-engine reproducibility isn't needed. */
   def minhashSignatures(sh: DataFrame, numHashes: Int,
                         family: HashFamily = Md5Minhash): DataFrame = {
-    graft.plans.GraftFunctions.register(sh.sparkSession)
     // per-doc shingle count rides in the same aggregation — the caller
     // needs it for the Jaccard denominator, and folding it here saves a
     // whole extra pass + shuffle over the shingle table
@@ -565,7 +563,6 @@ object Dedup {
     * engine with md5). Returns (doc_id, simhash bitstring, simhash_int). */
   def simhash(df: DataFrame, idCol: String, textCol: String,
               bits: Int = 32): DataFrame = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     // same few-input-splits guard as shingleTable: spread the tokenize
     // work and pre-partition for the per-doc aggregation
     val tok = df.repartition(col(idCol)).select(col(idCol).as("doc_id"),

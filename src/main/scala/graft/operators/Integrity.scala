@@ -105,8 +105,6 @@ object Integrity {
   def bloomDecontaminateFrom(docs: DataFrame,
       benchClass: org.apache.spark.sql.Column = col("doc_id") % 10 === 0)
       : DataFrame = {
-    val spark = docs.sparkSession
-    GraftFunctions.register(spark)
     val corpus = docs.filter(!benchClass)
     val bench = docs.filter(benchClass)
     val benchSet = Dedup.shingleTable(bench, "doc_id", "text", n = 5)

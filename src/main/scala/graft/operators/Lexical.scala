@@ -40,8 +40,6 @@ object Lexical {
   /** The reusable core over any (..., textCol) corpus frame. */
   def collocationsFrom(docs: DataFrame, textCol: String,
                        minCount: Long, k: Int): DataFrame = {
-    val spark = docs.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val toks = docs
       .select(Text.tokens(col(textCol)).as("t"))
       .localCheckpoint(true) // consumed by the unigram AND bigram passes
@@ -106,7 +104,6 @@ object Lexical {
   // the token (vocab-sized), top-k as TakeOrderedAndProject.
   def vocabDrift(spark: SparkSession, dir: String,
                  minCount: Long = 10L, k: Int = 40): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     def uni(side: DataFrame): DataFrame = side
       .select(explode(Text.tokens(col("text"))).as("w"))

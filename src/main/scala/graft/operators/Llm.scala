@@ -62,7 +62,6 @@ object Llm {
 
   // ---- q18: quality scoring (length/punct/stopword ratios) -----------
   def qualityScore(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.documents(spark, dir).filter(col("doc_id") < 100)
       .select(col("doc_id"),
         Text.tokenCount(col("text")).cast("long").as("n_tokens"),
@@ -370,7 +369,6 @@ object Llm {
   // engines, the proven q24 channel, so the profile hash-matches).
   // One codegen'd projection + one grouped aggregate.
   def embeddingAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val v = col("embedding").cast("array<double>")
     val nrm = round(sqrt(graft.plans.GraftFunctions.graft_dot(v, v)), 6)
     Tables.embeddings(spark, dir)
@@ -743,7 +741,6 @@ object Llm {
   private val VocabMinCount = 5L
 
   def vocab(docs: DataFrame, textCol: String, minCount: Long): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val agg = docs.select(explode(Text.tokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
@@ -855,8 +852,6 @@ object Llm {
   private def bpeTrain(docs: DataFrame, textCol: String, k: Int,
                        minCount: Long)
       : (DataFrame, Seq[(Long, String, String, Long)]) = {
-    val spark = docs.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     // corpus -> word histogram (the one corpus-sized job), then each
     // word to its delimited character sequence. Checkpointed: every
     // merge round rescans it.
@@ -1077,7 +1072,6 @@ object Llm {
   // token counts join back on the token key.
   def surprisalScores(docs: DataFrame, idCol: String,
                       textCol: String): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val toks = docs
       .select(col(idCol).as("doc_id"), explode(Text.tokens(col(textCol))).as("token"))
       .localCheckpoint(true) // feeds the LM counts, the total, AND the scoring join
@@ -1122,7 +1116,6 @@ object Llm {
   private val PrefixTokens = 8
 
   def prefixCacheGroups(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(slice(Text.tokens(col("text")), 1, PrefixTokens).as("p"))
       .filter(size(col("p")) >= 1)
@@ -1176,7 +1169,6 @@ object Llm {
   /** Core on an arbitrary `(doc_id, text)` frame; returns UNSORTED
     * `(doc_id, n_bigrams, surprisal_sum)`. */
   def bigramSurprisalOn(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val bi = docs.select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
       .select(col("doc_id"), col("t"),
@@ -1248,7 +1240,6 @@ object Llm {
                      family: Dedup.HashFamily = Dedup.Md5Minhash): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val nIngested = docs.count()
     val nEn = docs.filter(col("lang") === "en").count()
     val qual = docs.filter(col("lang") === "en")
@@ -1755,7 +1746,6 @@ object Llm {
   // the only shuffles) broadcast-crossed at the end; the near-dup leg
   // rides the banded LSH pipeline.
   def corpusScorecard(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val base = docs.agg(count(lit(1)).as("n_docs"),
       countDistinct("source").as("n_sources"),
@@ -1942,7 +1932,6 @@ object Llm {
   // Shape at scale: ONE scan of the embeddings table, one map-side-
   // combinable groupBy(label). No joins, no windows.
   def embeddingNormAudit(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.embeddings(spark, dir)
       .select(col("label"),
         round(Similarity.dot(Similarity.asDouble(col("embedding")),
@@ -2250,7 +2239,6 @@ object Llm {
   // rank window. All joins are on the term string; the df table is tiny
   // (vocabulary-sized) and broadcasts.
   def tfidfTopTerms(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val nDocs = docs.count() // driver scalar, like a scalar subquery
     val terms = docs.select(col("doc_id"),
@@ -2293,7 +2281,6 @@ object Llm {
   private val ChunkS = 24
 
   def docChunks(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val tt = Tables.documents(spark, dir).filter(col("doc_id") < 50)
       .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .filter(size(col("t")) > 0)

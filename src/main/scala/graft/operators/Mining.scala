@@ -512,7 +512,6 @@ object Mining {
   def weightedMinhashPairs(docs: DataFrame, idCol: String, textCol: String,
                            p: Long = WjP, q: Long = WjQ,
                            numHashes: Int = 12, bands: Int = 4): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val tf = docs.repartition(col(idCol))
       .select(col(idCol).as("doc_id"),
         explode(Text.tokens(col(textCol))).as("term"))
@@ -1039,7 +1038,6 @@ object Mining {
   // the cumulative window runs over the |distinct lengths|-sized frame
   // (the pre-aggregated-window pattern — hundreds of rows, not docs).
   def ksTwoSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     ksOf(Tables.documents(spark, dir)
       .filter(col("source").isin("src1", "src2"))
       .select(col("source"),
@@ -1107,7 +1105,6 @@ object Mining {
   // histograms in a single pass (conditional sums — no self-join, no
   // pivot); the overlap fold runs on the |bins| frame.
   def histogramOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     histOverlapOf(Tables.documents(spark, dir)
       .filter(col("source").isin("src1", "src2"))
       .select(col("source"),

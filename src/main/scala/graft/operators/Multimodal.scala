@@ -280,7 +280,6 @@ object Multimodal {
     // below as [[decodeMediaMetaColumns]], the parity comparator
     // MediaMetaParitySpec pins (every planted fixture at every
     // truncation length, plus adversarial mutations).
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     val m = col("_m")
     assets
       .withColumn("_m", graft.plans.GraftFunctions.media_meta(col("content")))
@@ -407,7 +406,6 @@ object Multimodal {
     // higher-order lambdas — per-row work proportional to content bytes
     // with a ~100x constant over this compiled loop.
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     assets
       .filter(sniffKind(c) === "wav" && length(c) >= 44)
       .withColumn("n_vals", (leUInt(c, 41, 4) / 2).cast("long"))
@@ -462,7 +460,6 @@ object Multimodal {
     // as [[audioFingerprintColumns]], the parity comparator. See
     // [[audioEnergy]] for the measured rationale.
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     val fp = assets
       .filter(sniffKind(c) === "wav" && length(c) >= 44)
       .withColumn("n_vals", (leUInt(c, 41, 4) / 2).cast("long"))
@@ -537,7 +534,6 @@ object Multimodal {
     // O(samples/frame) rows per asset and shuffled them by asset_id,
     // where the segment structure is computable where the bytes are.
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     assets
       .filter(sniffKind(c) === "wav" && length(c) >= 44)
       .withColumn("n_vals", (leUInt(c, 41, 4) / 2).cast("long"))
@@ -562,7 +558,6 @@ object Multimodal {
   def audioProfile(assets: DataFrame, frame: Int = 8,
       thresholdPerSample: Long = 300000000L): DataFrame = {
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     assets
       .filter(sniffKind(c) === "wav" && length(c) >= 44)
       .withColumn("n_vals", (leUInt(c, 41, 4) / 2).cast("long"))
@@ -588,7 +583,6 @@ object Multimodal {
     * height read equals the signed read because h>0). */
   def imageProfile(assets: DataFrame): DataFrame = {
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     val w = leUInt(c, 19, 4)
     val h = leSInt32(c, 23)
     assets
@@ -664,7 +658,6 @@ object Multimodal {
     // [[audioEnergy]] for the measured rationale — here the fold paid
     // the conv(hex(substr)) tax three times per pixel.
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     val w = leUInt(c, 19, 4)
     // biHeight is SIGNED: a negative value marks a top-down BMP (row 0
     // at the top); top-down row order is out of scope for the planted
@@ -725,7 +718,6 @@ object Multimodal {
     // q127 nearest-neighbor addressing); Column form below as
     // [[imageResizeStatsColumns]], the parity comparator.
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     val w = leUInt(c, 19, 4)
     // signed biHeight + positive-dims filter: see imageStats
     val h = leSInt32(c, 23)
@@ -788,7 +780,6 @@ object Multimodal {
     // round 18: codegen'd graft.plans.BmpAHash kernel; Column form
     // below as [[imagePHashColumns]], the parity comparator.
     val c = col("content")
-    graft.plans.GraftFunctions.register(assets.sparkSession)
     val w = leUInt(c, 19, 4)
     // signed biHeight + positive-dims filter: see imageStats
     val h = leSInt32(c, 23)

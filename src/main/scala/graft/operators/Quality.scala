@@ -437,7 +437,6 @@ object Quality {
   private val ValFrac = 0.1
 
   def hashSplitQ(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.lineitem(spark, dir)
       .withColumn("split",
         graft.functions.Sampling.hashSplit(col("l_orderkey"), TrainFrac, ValFrac))
@@ -473,7 +472,6 @@ object Quality {
   private val TokenBudget = 10000L
 
   def budgetSelect(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         graft.functions.Text.tokenCount(col("text")).cast("long").as("n_tokens"),
@@ -519,7 +517,6 @@ object Quality {
   // distributed aggregates, ten bounded scalars.
   def datasetCard(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
     val toks = docs.select(
       explode(graft.functions.Text.tokens(col("text"))).as("t"))
@@ -578,7 +575,6 @@ object Quality {
   // map-side-combinable aggregate; the share is exact floor division
   // against a 1-row broadcast total (never a float ratio).
   def sourceMix(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val per = Tables.documents(spark, dir)
       .select(col("source"),
         graft.functions.Text.tokenCount(col("text")).cast("long").as("tc"))
@@ -608,7 +604,6 @@ object Quality {
   // (bucket_end - n_tokens) = tokens a pad-to-bucket batcher would
   // burn). All integer: bucket = tc div 64, waste = 64*(bucket+1) - tc.
   def lengthHistogram(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(graft.functions.Text.tokenCount(col("text")).cast("long").as("tc"))
       .select(col("tc"), expr("tc div 64L").as("bucket"))
@@ -642,7 +637,6 @@ object Quality {
   // pass for the keep filter — the same zero-shuffle decision plane
   // as q81.
   def temperatureMixQ(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val t = Tables.documents(spark, dir)
       .select(col("lang"), col("doc_id"),
         graft.functions.Text.tokenCount(col("text")).cast("long").as("tok_n"))
@@ -724,7 +718,6 @@ object Quality {
   private val PackBudget = 512L
 
   def seqPackingQ(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     graft.functions.Sampling.packSequences(
         Tables.documents(spark, dir).filter(col("doc_id") < 300),
         "doc_id", graft.functions.Text.tokenCount(col("text")), PackBudget)
@@ -767,7 +760,6 @@ object Quality {
   private val ShardPackBudget = 512L
 
   def shardedPackingQ(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir).filter(col("doc_id") < 300)
       .withColumn("shard", (col("doc_id") % 4).cast("int"))
     graft.functions.Sampling.packSequencesSharded(
@@ -844,7 +836,6 @@ object Quality {
   }
 
   def weightedSampleQ(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .withColumn("weight", sourceWeight)
       .withColumn("skey",
@@ -919,7 +910,6 @@ object Quality {
   }
 
   def cmsAccuracy(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val counts = Tables.documents(spark, dir)
       .select(explode(graft.functions.Text.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))

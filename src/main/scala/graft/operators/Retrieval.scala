@@ -22,7 +22,6 @@ import org.apache.spark.sql.functions._
 object Retrieval {
 
   private def toks(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     docs.select(col("doc_id"), explode(Text.tokens(col("text"))).as("token"))
   }
 
@@ -42,7 +41,6 @@ object Retrieval {
   // pass — no window, no shuffle beyond the two grouped aggregates.
   def groupFilter(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.plans.GraftFunctions.register(spark)
     val t = docs.select(col("lang"), col("n_chars"),
       Text.tokenCount(col("text")).cast("long").as("tok_n"))
     val med = t.groupBy("lang")
@@ -163,7 +161,6 @@ object Retrieval {
   // scan, a 1-row count attachment, a 3-way explode.
   def negativeSampling(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.plans.GraftFunctions.register(spark)
     val n = docs.agg(count(lit(1)).as("n_docs"))
     docs.filter(graft.functions.Sampling.hashKeep(col("doc_id"), 0.1))
       .select(col("doc_id"))
@@ -222,7 +219,6 @@ object Retrieval {
   // consensus label distribution.
   def majorityVote(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.plans.GraftFunctions.register(spark)
     docs.select(col("doc_id"),
         explode(array(lit(0L), lit(1L), lit(2L))).as("a"))
       .withColumn("label", pmod(graft.plans.GraftFunctions.hex_window(
@@ -256,7 +252,6 @@ object Retrieval {
   // Two grouped aggregates + a 1-row total attachment.
   def composition(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
-    graft.plans.GraftFunctions.register(spark)
     val t = docs.select(col("lang"), col("source"),
       Text.tokenCount(col("text")).cast("long").as("tok_n"))
     val grid = t.groupBy("lang", "source")
@@ -443,7 +438,6 @@ object Retrieval {
     require(phrase.nonEmpty && phrase.size == phrase.distinct.size,
       "phrase terms must be distinct (repeat terms need a multiset probe)")
     val docs = Tables.documents(spark, dir)
-    graft.plans.GraftFunctions.register(spark)
     val post = docs
       .select(col("doc_id"), posexplode(Text.tokens(col("text"))))
       .toDF("doc_id", "pos", "token")
@@ -495,7 +489,6 @@ object Retrieval {
   private val HashBuckets = 64L
 
   def featureHash(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(Text.tokens(col("text"))).as("w"))
     toks

@@ -36,7 +36,6 @@ object Robust {
   // Shape at scale: one (tc) grouped aggregate over the docs, then the
   // cumulative window on the |distinct lengths| frame.
   def mannWhitney(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     mannWhitneyOf(Tables.documents(spark, dir)
       .filter(col("source").isin("src1", "src2"))
       .select(col("source"),
@@ -150,7 +149,6 @@ object Robust {
   // array is already in the row); then one (a,b) grouped count and two
   // marginal joins on pre-aggregated vocab-sized frames.
   def collocations(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val bg = Tables.documents(spark, dir)
       .select(graft.functions.Text.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -203,7 +201,6 @@ object Robust {
   // come from a per-source window on the docs frame (docs, not
   // tokens); the rollup is conditional counting on the terms frame.
   def vocabGrowth(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"),
         graft.functions.Text.tokens(col("text")).as("t"))
@@ -677,7 +674,6 @@ object Robust {
   // runs on the |slice × distinct-length| frame, never documents).
   // Slices missing either source are dropped (AUC undefined).
   def aucBySlice(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     aucBySliceOf(Tables.documents(spark, dir)
       .filter(col("source").isin("src1", "src2"))
       .select(col("lang").as("slice"), col("source"),

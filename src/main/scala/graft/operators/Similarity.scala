@@ -45,7 +45,6 @@ object Similarity {
     * range shuffle a caller may not want at scale; the oracle-facing
     * q-entry wrappers add their own deterministic ORDER BY. */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     val q = queries.select(col("vec_id").as("query_id"),
       asDouble(col("embedding")).as("qv"))
       .withColumn("qn", norm(col("qv")))
@@ -137,7 +136,6 @@ object Similarity {
   // positional caller from the single-band era keeps its meaning.
   def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               bits: Int = 8, dim: Int = 64, bands: Int = 16): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     // eager checkpoints: both frames feed signature generation AND the
     // exact rerank (see srpNearDupPairs for the CacheManager rationale)
     val e = corpus.select(col("vec_id"), asDouble(col("embedding")).as("cv"))
@@ -176,7 +174,6 @@ object Similarity {
     * measured against the exact form in SimilaritySpec. */
   def srpNearDupPairs(emb: DataFrame, threshold: Double, bands: Int = 12,
                       bits: Int = 6, dim: Int = 64): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     // eager checkpoint, not persist: the normalized-vector frame feeds
     // both the band signatures and the verify joins, and CacheManager
     // plan-matching leaks lazily-persisted frames into UNRELATED later
@@ -196,7 +193,6 @@ object Similarity {
     * lane persists. */
   private[graft] def srpBandIndex(e: DataFrame, bands: Int, bits: Int,
                                   dim: Int): DataFrame = {
-    graft.plans.GraftFunctions.register(e.sparkSession)
     val bandSigs = (0 until bands).map(b =>
       struct(lit(b).as("band"), srpSignature(col("v"), b, bits, dim).as("sig")))
     e.select(col("vec_id"), explode(array(bandSigs: _*)).as("bs"))
@@ -253,7 +249,6 @@ object Similarity {
     * buckets. */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
               nCells: Int = 16, nProbe: Int = 4): DataFrame = {
-    graft.plans.GraftFunctions.register(corpus.sparkSession)
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
@@ -286,7 +281,6 @@ object Similarity {
     * Returns (vec_id, cv, cn, cell) — the frame Warehouse.writeIvfLayout
     * persists partitioned by cell. */
   def ivfAssign(corpusCv: DataFrame, centroids: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(corpusCv.sparkSession)
     val cents = centroids.withColumn("cent_n", norm(col("centroid")))
     val c = corpusCv.withColumn("cn", norm(col("cv")))
     c.crossJoin(broadcast(cents))
@@ -328,7 +322,6 @@ object Similarity {
     * ScaleBenchSpec. */
   def ivfAssignHierarchical(corpusCv: DataFrame, centroids: DataFrame,
                             nSuper: Int, superProbes: Int = 3): DataFrame = {
-    graft.plans.GraftFunctions.register(corpusCv.sparkSession)
     val cents = centroids.withColumn("cent_n", norm(col("centroid")))
       .localCheckpoint(true) // feeds super sample, router, and level-2
     val supers = cents.orderBy("cell").limit(nSuper)
@@ -455,7 +448,6 @@ object Similarity {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val spark = corpus.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("cv"))
       .localCheckpoint(true) // feeds count, training sample, assignment
     val n = c.count()
@@ -709,7 +701,6 @@ object Similarity {
     * cosine >= threshold. The library scale path buckets via
     * srpSignature first; this exact form is the verifier. */
   def nearDupPairs(emb: DataFrame, threshold: Double, maxId: Long): DataFrame = {
-    graft.plans.GraftFunctions.register(emb.sparkSession)
     val e = emb.filter(col("vec_id") < maxId)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("n", norm(col("v")))

@@ -96,7 +96,6 @@ object TextQuality {
   /** Core on an arbitrary `(doc_id, text)` frame (the q150/scale-lane
     * entry point). */
   def qualitySignalsOn(docs: DataFrame): DataFrame = {
-    graft.plans.GraftFunctions.register(docs.sparkSession)
     val words = graft.plans.GraftFunctions.regexp_count_only(
       lower(col("text")), "[a-z0-9]+")
     val wordChars = length(regexp_replace(lower(col("text")), "[^a-z0-9]+", ""))
@@ -208,7 +207,6 @@ object TextQuality {
   // on (doc_id, bigram), then two windows per doc. Ties on the top
   // count break to the lexicographically smallest bigram.
   def repetitionStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val t = Tables.documents(spark, dir)
       .select(col("doc_id"), Text.tokens(col("text")).as("t"))
       .filter(size(col("t")) >= 2)
@@ -476,7 +474,6 @@ object TextQuality {
   // Scale shape: one projection over the doc scan (regex counts are
   // codegen'd), one map-side-combinable grouped aggregate.
   def readability(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     readabilityOf(Tables.documents(spark, dir))
   }
 

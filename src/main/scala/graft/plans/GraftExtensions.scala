@@ -1,128 +1,65 @@
 package graft.plans
 
 import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.ExpressionBridge.{column, expression}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.functions.call_function
 
-/** Engine extensions: registers graft's custom Catalyst expressions for
-  * SQL use. Install with
+/** Engine extensions: injects graft's custom Catalyst expressions (the
+  * one table, [[GraftFunctions.table]]) so SQL text can name them, plus
+  * the [[PlanGuard]] rule. Install with
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`; for an existing
-  * session call [[GraftFunctions.register]].
+  * `spark.sql.extensions=graft.plans.GraftExtensions`; a session built
+  * without it gets the same SQL functions from [[GraftFunctions.register]].
+  * The Column helpers in [[GraftFunctions]] need neither.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "rolling_hash"),
-      (exprs: Seq[Expression]) => RollingHash(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkShingles(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_tokens"),
-      new ExpressionInfo(classOf[AsciiTokens].getName, "graft_tokens"),
-      (exprs: Seq[Expression]) => AsciiTokens(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_hex_window"),
-      new ExpressionInfo(classOf[HexWindowLong].getName, "graft_hex_window"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkHexWindow(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("token_window_hash"),
-      new ExpressionInfo(classOf[TokenWindowHash].getName, "token_window_hash"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkTokenWindowHash(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("morton_key"),
-      new ExpressionInfo(classOf[MortonKey].getName, "morton_key"),
-      (exprs: Seq[Expression]) => MortonKey(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("graft_srp_sig"),
-      new ExpressionInfo(classOf[SrpSignature].getName, "graft_srp_sig"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkSrpSig(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("graft_placeholder_null"),
-      new ExpressionInfo(classOf[PlaceholderNull].getName, "graft_placeholder_null"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkPlaceholderNull(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("graft_media_meta"),
-      new ExpressionInfo(classOf[MediaHeaderMeta].getName, "graft_media_meta"),
-      (exprs: Seq[Expression]) => MediaHeaderMeta(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_regexp_count"),
-      new ExpressionInfo(classOf[RegexCount].getName, "graft_regexp_count"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkRegexCount(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("graft_pcm16_features"),
-      new ExpressionInfo(classOf[Pcm16Features].getName, "graft_pcm16_features"),
-      (exprs: Seq[Expression]) => Pcm16Features(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_pcm16_bands"),
-      new ExpressionInfo(classOf[Pcm16BandEnergies].getName, "graft_pcm16_bands"),
-      (exprs: Seq[Expression]) => Pcm16BandEnergies(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("graft_pcm16_segments"),
-      new ExpressionInfo(classOf[Pcm16Segments].getName, "graft_pcm16_segments"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkPcm16Segments(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("graft_bmp_channel_sums"),
-      new ExpressionInfo(classOf[BmpChannelSums].getName, "graft_bmp_channel_sums"),
-      (exprs: Seq[Expression]) => GraftFunctions.mkBmpChannelSums(exprs)))
-    e.injectFunction((
-      FunctionIdentifier("graft_bmp_ahash"),
-      new ExpressionInfo(classOf[BmpAHash].getName, "graft_bmp_ahash"),
-      (exprs: Seq[Expression]) => BmpAHash(exprs.head)))
-    // Spark's own (non-public-registry) bloom expressions, surfaced
-    // under graft names: the build side of a semi-join reduction as a
-    // TypedImperativeAggregate, and the codegen'd membership probe.
-    // Same machinery Spark's InjectRuntimeFilter plants — exposed here
-    // so an operator can build the filter over an EXPLICIT key set.
-    e.injectFunction((
-      FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-      (exprs: Seq[Expression]) =>
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))))
-    e.injectFunction((
-      FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-      (exprs: Seq[Expression]) => BloomFilterMightContain(exprs(0), exprs(1))))
+    GraftFunctions.table.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
+    }
     // scale guardrail (inert until spark.graft.planGuard=warn|fail)
     e.injectOptimizerRule(session => PlanGuard(session))
   }
 }
 
+/** graft's custom expressions, two ways in:
+  *  - Column helpers (`rolling_hash`, `srp_sig`, ...) build the
+  *    expression directly, so they work on any session with no
+  *    registration and never touch a function registry;
+  *  - SQL text names them through [[table]], installed either by
+  *    [[GraftExtensions]] at session build or by [[register]] on a live
+  *    session.
+  */
 object GraftFunctions {
-  private[plans] def mkSrpSig(exprs: Seq[Expression]): SrpSignature =
+  private def mkSrpSig(exprs: Seq[Expression]): SrpSignature =
     SrpSignature(exprs.head,
       exprs(1).eval().asInstanceOf[Number].intValue(),
       exprs(2).eval().asInstanceOf[Number].intValue(),
       exprs(3).eval().asInstanceOf[Number].intValue())
-  private[plans] def mkShingles(exprs: Seq[Expression]): WordShingles =
+
+  private def mkShingles(exprs: Seq[Expression]): WordShingles =
     WordShingles(exprs.head,
       exprs(1).eval().asInstanceOf[Number].intValue())
 
-  private[plans] def mkTokenWindowHash(exprs: Seq[Expression]): TokenWindowHash =
+  private def mkTokenWindowHash(exprs: Seq[Expression]): TokenWindowHash =
     TokenWindowHash(exprs.head,
       exprs(1).eval().asInstanceOf[Number].intValue())
 
-  private[plans] def mkHexWindow(exprs: Seq[Expression]): HexWindowLong =
+  private def mkHexWindow(exprs: Seq[Expression]): HexWindowLong =
     HexWindowLong(exprs.head,
       exprs(1).eval().asInstanceOf[Number].intValue(),
       exprs(2).eval().asInstanceOf[Number].intValue())
 
-  private[plans] def mkRegexCount(exprs: Seq[Expression]): RegexCount = {
+  private def mkRegexCount(exprs: Seq[Expression]): RegexCount = {
     require(exprs(1).foldable,
       s"graft_regexp_count pattern must be a literal: ${exprs(1)}")
     RegexCount(exprs.head, String.valueOf(exprs(1).eval()))
   }
 
-  private[plans] def mkPcm16Segments(exprs: Seq[Expression]): Pcm16Segments = {
+  private def mkPcm16Segments(exprs: Seq[Expression]): Pcm16Segments = {
     require(exprs(1).foldable && exprs(2).foldable,
       s"graft_pcm16_segments frame/threshold must be literals: $exprs")
     Pcm16Segments(exprs.head,
@@ -130,234 +67,128 @@ object GraftFunctions {
       exprs(2).eval().asInstanceOf[Number].longValue())
   }
 
-  private[plans] def mkBmpChannelSums(exprs: Seq[Expression]): BmpChannelSums = {
+  private def mkBmpChannelSums(exprs: Seq[Expression]): BmpChannelSums = {
     require(exprs(1).foldable,
       s"graft_bmp_channel_sums decimate must be a literal: ${exprs(1)}")
     BmpChannelSums(exprs.head, exprs(1).eval().asInstanceOf[Number].intValue())
   }
 
-  private[plans] def mkPlaceholderNull(exprs: Seq[Expression]): PlaceholderNull =
+  private def mkPlaceholderNull(exprs: Seq[Expression]): PlaceholderNull =
     PlaceholderNull(exprs.head, exprs.tail.map { e =>
       require(e.foldable, s"graft_placeholder_null tokens must be literals: $e")
       String.valueOf(e.eval())
     })
 
-  /** Sessions already registered, weakly held (a dropped session must
-    * not leak through the guard set). Registration is idempotent —
-    * every entry point re-registers the same builders — so the guard
-    * exists purely to kill the per-call cost: before round 12,
-    * [[ensureRegistered]] ran the full 10-function
-    * `createOrReplaceTempFunction` pass on EVERY Column-helper call
-    * (a q22 build touches hex_window 100+ times → ~1300 registry
-    * writes and as many "function replaced" WARN log lines per query
-    * build — the WARN spam in the round-11 bench tail), and the
-    * driver-side churn grew with every operator added. */
-  private val registeredSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
+  /** The one function table: SQL name -> builder over the call's
+    * argument expressions. The `mk*` builders check that the arguments
+    * the expression keeps as Scala values are literals. */
+  val table: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("rolling_hash", e => RollingHash(e.head)),
+    ("word_shingles", mkShingles),
+    ("graft_dot", e => DotProduct(e(0), e(1))),
+    ("graft_tokens", e => AsciiTokens(e.head)),
+    ("graft_hex_window", mkHexWindow),
+    ("token_window_hash", mkTokenWindowHash),
+    ("morton_key", e => MortonKey(e(0), e(1))),
+    ("graft_srp_sig", mkSrpSig),
+    ("graft_placeholder_null", mkPlaceholderNull),
+    ("graft_media_meta", e => MediaHeaderMeta(e.head)),
+    ("graft_regexp_count", mkRegexCount),
+    ("graft_pcm16_features", e => Pcm16Features(e.head)),
+    ("graft_pcm16_bands", e => Pcm16BandEnergies(e.head)),
+    ("graft_pcm16_segments", mkPcm16Segments),
+    ("graft_bmp_channel_sums", mkBmpChannelSums),
+    ("graft_bmp_ahash", e => BmpAHash(e.head)),
+    // Spark's own (non-public-registry) bloom expressions, surfaced
+    // under graft names: the build side of a semi-join reduction as a
+    // TypedImperativeAggregate, and the codegen'd membership probe.
+    // Same machinery Spark's InjectRuntimeFilter plants — exposed here
+    // so an operator can build the filter over an EXPLICIT key set.
+    ("graft_bloom_agg", e => new BloomFilterAggregate(e(0), e(1), e(2))),
+    ("graft_might_contain", e => BloomFilterMightContain(e(0), e(1))))
 
-  /** Late registration on an already-built session (temp functions).
-    * First call per session does the work; repeats are a set lookup.
-    * The session enters the guard set only AFTER registration
-    * completes: marking it first would let a concurrent thread (Verify
-    * runs 311 queries on a shared-session pool) skip out of register()
-    * while the winner is mid-way through the 10 functions and analyze
-    * a plan against a still-empty registry (UNRESOLVED_ROUTINE). Two
-    * threads racing here may both run forceRegister — idempotent by
-    * construction, so correctness needs no lock.
-    *
-    * The guarded path verifies ONE sentinel function still resolves
-    * (a registry lookup, no write): if something dropped the session's
-    * temp functions after it entered the guard set, every Column
-    * helper would otherwise fail with UNRESOLVED_ROUTINE forever —
-    * the guard set has no way to observe the drop (round-12 advice).
-    * A missing sentinel falls back to [[forceRegister]]. */
+  /** Makes [[table]] callable from SQL text on a session built without
+    * [[GraftExtensions]] (temp functions; idempotent). */
   def register(spark: SparkSession): Unit =
-    if (!registeredSessions.contains(spark)) {
-      forceRegister(spark)
-      registeredSessions.add(spark)
-    } else if (!spark.sessionState.functionRegistry.functionExists(
-        FunctionIdentifier("rolling_hash"))) {
-      forceRegister(spark)
+    table.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
     }
 
-  /** Unconditional registration (re-registers even on a session the
-    * guard has seen — for the rare case of dropped temp functions). */
-  def forceRegister(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", mkShingles, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokens", exprs => AsciiTokens(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hex_window", mkHexWindow, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "token_window_hash", mkTokenWindowHash, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "morton_key", exprs => MortonKey(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_srp_sig", mkSrpSig, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_placeholder_null", mkPlaceholderNull, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_regexp_count", mkRegexCount, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_media_meta", exprs => MediaHeaderMeta(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pcm16_features", exprs => Pcm16Features(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pcm16_bands", exprs => Pcm16BandEnergies(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pcm16_segments", mkPcm16Segments, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_channel_sums", mkBmpChannelSums, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bmp_ahash", exprs => BmpAHash(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-  }
+  def rolling_hash(c: Column): Column = column(RollingHash(expression(c)))
 
-  /** Column-API handles. Each helper self-registers on the thread's
-    * active session (idempotent map put) so a pure Column builder like
-    * Text.tokens can't be used before registration; explicit
-    * [[register]] / [[GraftExtensions]] remain for SQL-text use and
-    * sessions built on other threads. */
-  /** Probe hook: when true, every Column-helper call re-runs the FULL
-    * registration pass — the pre-round-12 behavior — so RegProbe can
-    * A/B the per-call churn against the guarded path in one JVM. */
-  @volatile private[graft] var perCallRegistration = false
+  def word_shingles(tokens: Column, n: Int): Column =
+    column(WordShingles(expression(tokens), n))
 
-  private def ensureRegistered(): Unit =
-    SparkSession.getActiveSession.foreach { s =>
-      if (perCallRegistration) forceRegister(s) else register(s)
-    }
+  def graft_dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
-  def rolling_hash(c: Column): Column = {
-    ensureRegistered()
-    call_function("rolling_hash", c)
-  }
+  def graft_tokens(lowered: Column): Column =
+    column(AsciiTokens(expression(lowered)))
 
-  def word_shingles(tokens: Column, n: Int): Column = {
-    ensureRegistered()
-    call_function("word_shingles", tokens, org.apache.spark.sql.functions.lit(n))
-  }
+  def hex_window(hexStr: Column, start: Int, len: Int): Column =
+    column(HexWindowLong(expression(hexStr), start, len))
 
-  def graft_dot(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("graft_dot", a, b)
-  }
+  def token_window_hash(tokens: Column, w: Int): Column =
+    column(TokenWindowHash(expression(tokens), w))
 
-  def graft_tokens(lowered: Column): Column = {
-    ensureRegistered()
-    call_function("graft_tokens", lowered)
-  }
+  def morton_key(a: Column, b: Column): Column =
+    column(MortonKey(expression(a), expression(b)))
 
-  def hex_window(hexStr: Column, start: Int, len: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensureRegistered()
-    call_function("graft_hex_window", hexStr, lit(start), lit(len))
-  }
-
-  def token_window_hash(tokens: Column, w: Int): Column = {
-    ensureRegistered()
-    call_function("token_window_hash", tokens,
-      org.apache.spark.sql.functions.lit(w))
-  }
-
-  def morton_key(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("morton_key", a, b)
-  }
-
-  def srp_sig(vec: Column, band: Int, bits: Int, dim: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensureRegistered()
-    call_function("graft_srp_sig", vec, lit(band), lit(bits), lit(dim))
-  }
+  def srp_sig(vec: Column, band: Int, bits: Int, dim: Int): Column =
+    column(SrpSignature(expression(vec), band, bits, dim))
 
   /** Null out placeholder tokens (trimmed, case-insensitive) — the
     * codegen'd form of the ingest path's per-column normalization; see
     * [[PlaceholderNull]] for the measured rationale. */
-  def placeholder_null(c: Column, tokens: Seq[String]): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensureRegistered()
-    call_function("graft_placeholder_null", (c +: tokens.map(lit)): _*)
-  }
+  def placeholder_null(c: Column, tokens: Seq[String]): Column =
+    column(PlaceholderNull(expression(c), tokens))
 
   /** One-node media-header decode returning the full meta struct; see
     * [[MediaHeaderMeta]] for the measured rationale. */
-  def media_meta(content: Column): Column = {
-    ensureRegistered()
-    call_function("graft_media_meta", content)
-  }
+  def media_meta(content: Column): Column =
+    column(MediaHeaderMeta(expression(content)))
 
   /** One-pass PCM feature kernel (struct<energy, max_abs>); see
     * [[Pcm16Features]]. */
-  def pcm16_features(content: Column): Column = {
-    ensureRegistered()
-    call_function("graft_pcm16_features", content)
-  }
+  def pcm16_features(content: Column): Column =
+    column(Pcm16Features(expression(content)))
 
   /** Quarter-band PCM energy kernel (array<long>(4)); see
     * [[Pcm16BandEnergies]]. */
-  def pcm16_bands(content: Column): Column = {
-    ensureRegistered()
-    call_function("graft_pcm16_bands", content)
-  }
+  def pcm16_bands(content: Column): Column =
+    column(Pcm16BandEnergies(expression(content)))
 
   /** One-pass VAD segmentation kernel
     * (struct<n_frames, n_active, n_segments, longest_seg>); see
     * [[Pcm16Segments]]. */
-  def pcm16_segments(content: Column, frame: Int, threshold: Long): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensureRegistered()
-    call_function("graft_pcm16_segments", content, lit(frame), lit(threshold))
-  }
+  def pcm16_segments(content: Column, frame: Int, threshold: Long): Column =
+    column(Pcm16Segments(expression(content), frame, threshold))
 
   /** One-pass BMP channel-sum kernel (struct<sum_r, sum_g, sum_b>);
     * decimate=1 full frame, decimate=2 nearest-neighbor 2x; see
     * [[BmpChannelSums]]. */
-  def bmp_channel_sums(content: Column, decimate: Int): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensureRegistered()
-    call_function("graft_bmp_channel_sums", content, lit(decimate))
-  }
+  def bmp_channel_sums(content: Column, decimate: Int): Column =
+    column(BmpChannelSums(expression(content), decimate))
 
   /** One-pass BMP average-hash kernel (struct<b0, b1, b2, b3>); see
     * [[BmpAHash]]. */
-  def bmp_ahash(content: Column): Column = {
-    ensureRegistered()
-    call_function("graft_bmp_ahash", content)
-  }
+  def bmp_ahash(content: Column): Column =
+    column(BmpAHash(expression(content)))
 
   /** Count-only `regexp_count` twin for a constant pattern — identical
     * match count, no per-match allocation; see [[RegexCount]]. */
-  def regexp_count_only(c: Column, pattern: String): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensureRegistered()
-    call_function("graft_regexp_count", c, lit(pattern))
-  }
+  def regexp_count_only(c: Column, pattern: String): Column =
+    column(RegexCount(expression(c), pattern))
 
   /** Bloom build aggregate over a LONG key column (use xxhash64 for
     * other types). Returns one BINARY cell. */
-  def bloom_agg(key: Column, estimatedItems: Long, numBits: Long): Column = {
-    import org.apache.spark.sql.functions.lit
-    ensureRegistered()
-    call_function("graft_bloom_agg", key, lit(estimatedItems), lit(numBits))
-  }
+  def bloom_agg(key: Column, estimatedItems: Long, numBits: Long): Column =
+    column(new BloomFilterAggregate(expression(key),
+      Literal(estimatedItems), Literal(numBits)).toAggregateExpression())
 
   /** Membership probe. `bloom` must be foldable (a `lit` of collected
     * bytes) or a scalar subquery — Catalyst enforces this. */
-  def might_contain(bloom: Column, key: Column): Column = {
-    ensureRegistered()
-    call_function("graft_might_contain", bloom, key)
-  }
+  def might_contain(bloom: Column, key: Column): Column =
+    column(BloomFilterMightContain(expression(bloom), expression(key)))
 }

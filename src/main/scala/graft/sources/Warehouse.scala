@@ -51,7 +51,6 @@ object Warehouse {
     * via the codegen'd graft.plans.MortonKey expression). */
   def writeZOrdered(df: DataFrame, path: String, a: String, b: String,
                     numFiles: Int): Unit = {
-    graft.plans.GraftFunctions.register(df.sparkSession)
     df.withColumn("__z",
         graft.plans.GraftFunctions.morton_key(col(a).cast("long"), col(b).cast("long")))
       .repartitionByRange(numFiles, col("__z"))

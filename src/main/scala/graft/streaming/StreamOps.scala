@@ -319,7 +319,6 @@ object StreamOps {
     * union multiplies the stream by d=4, but each projection is a
     * codegen'd md5+mod — no state until the single bounded aggregate. */
   def streamCmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val fileSchema: StructType =
       spark.read.parquet(s"$dir/documents.parquet").schema
     val queryName = freshName("graft_cms_", dir)
@@ -725,7 +724,6 @@ object StreamOps {
     val spark = src.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    graft.plans.GraftFunctions.register(spark)
     val rows = numHashes / bands
 
     val toks = graft.plans.GraftFunctions.graft_tokens(lower(col("text")))
@@ -815,7 +813,6 @@ object StreamOps {
                            numHashes: Int = 12, bands: Int = 4,
                            threshold: Double = 0.5): DataFrame = {
     val spark = src.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val bandIdx = spark.read.parquet(s"$indexPath/bands")
       .select(col("doc_id").as("old_id"), col("band"), col("bkey"))
     val docIdx = spark.read.parquet(s"$indexPath/docs")

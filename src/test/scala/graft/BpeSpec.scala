@@ -52,7 +52,6 @@ class BpeSpec extends SparkSpec {
   }
 
   private lazy val hist: Map[String, Long] = {
-    graft.plans.GraftFunctions.register(spark)
     Tables.documents(spark, sf)
       .select(explode(Text.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n")).filter(col("n") >= 5L)

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
 class PipelineReportSpec extends SparkSpec {
 
   test("q148: bigram surprisal == driver reference (add-1 smoothed, 6-place rounding)") {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1))

@@ -110,7 +110,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("weightedSampleKey: exact A-ES keys, heavier weights overrepresented") {
-    graft.plans.GraftFunctions.register(spark)
     val docs = Tables.documents(spark, sf)
     val rows = docs
       .withColumn("w", lit(4))

@@ -67,7 +67,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_tokens is byte-identical to the filter(split(lower)) lambda form") {
-    graft.plans.GraftFunctions.register(spark)
     val gen: Gen[String] = Gen.listOfN(12, Gen.oneOf(
       Gen.alphaNumStr.map(_.take(8)), Gen.const("!@# $%"), Gen.const(""),
       Gen.const("Ünïcödé-Wörds"), Gen.const("中文 text123"),
@@ -80,7 +79,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("graft_hex_window equals conv(substr(doubled md5)) for every rotation") {
-    graft.plans.GraftFunctions.register(spark)
     val docs = samples(Gen.alphaNumStr, 100).filter(_.nonEmpty)
     val base = docs.toDF("s")
       .withColumn("h", md5(col("s").cast("binary")))

@@ -34,7 +34,6 @@ class RegexCountSpec extends SparkSpec {
 
   test("graft_regexp_count equals built-in regexp_count on all patterns") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val df = corpus.toDF("t")
     patterns.foreach { p =>
       val mismatch = df.select(
@@ -50,7 +49,6 @@ class RegexCountSpec extends SparkSpec {
 
   test("count-only result type and null behavior match the built-in") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     val df = Seq("x", null).toDF("t").select(
       regexp_count(col("t"), lit("x")).as("b"),
       graft.plans.GraftFunctions.regexp_count_only(col("t"), "x").as("g"))

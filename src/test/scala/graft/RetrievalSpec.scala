@@ -28,7 +28,6 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("majorityVote: label distribution re-derives from per-doc brute votes") {
-    graft.plans.GraftFunctions.register(spark)
     val votes = Tables.documents(spark, sf)
       .select(col("doc_id"),
         explode(array(lit(0L), lit(1L), lit(2L))).as("a"))
@@ -47,7 +46,6 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("groupFilter: kept counts re-derive from collected per-lang medians") {
-    graft.plans.GraftFunctions.register(spark)
     val toks = Tables.documents(spark, sf)
       .select(col("lang"),
         graft.functions.Text.tokenCount(col("text")).cast("long").as("t"))
@@ -71,7 +69,6 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("termRetrieval: top score re-derives from brute tf-idf") {
-    graft.plans.GraftFunctions.register(spark)
     val terms = Set("spark", "table", "hash")
     val tok = Tables.documents(spark, sf)
       .select(col("doc_id"),

@@ -16,7 +16,6 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("column API evaluates under codegen and distinguishes content") {
-    GraftFunctions.register(spark)
     val out = Seq("alpha", "alpha", "beta", null).toDF("t")
       .select(GraftFunctions.rolling_hash(col("t")).as("h"))
       .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
@@ -32,7 +31,6 @@ class RollingHashSpec extends SparkSpec {
   }
 
   test("stays inside WholeStageCodegen") {
-    GraftFunctions.register(spark)
     val df = Tables.documents(spark, sf)
       .select(GraftFunctions.rolling_hash(col("text")).as("h"))
     // `*(n)` prefixes mark operators inside a WholeStageCodegen stage.

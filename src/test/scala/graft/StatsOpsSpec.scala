@@ -128,7 +128,6 @@ class StatsOpsSpec extends SparkSpec {
   }
 
   test("q242 ks: sf0.001 output matches a BigInt recomputation") {
-    graft.plans.GraftFunctions.register(spark)
     val t = Tables.documents(spark, sf)
       .filter(col("source").isin("src1", "src2"))
       .select(col("source"),

@@ -68,9 +68,6 @@ class TimeTypeSpec extends SparkSpec {
       java.nio.file.Paths.get(Golden.ReferenceSqlDir)))
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.timeType.enabled", "true")
-    // a fresh session has no temp-function registry entries: the
-    // custom expressions the load path uses register per-session
-    graft.plans.GraftFunctions.forceRegister(s2)
     val fx = graft.sources.GoldenFixture.generate("/tmp/graft_timetype_spec")
     Golden.loadTransactions(s2, fx).localCheckpoint(true)
       .createOrReplaceTempView("transactions")

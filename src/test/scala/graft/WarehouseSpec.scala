@@ -70,7 +70,6 @@ class WarehouseSpec extends SparkSpec {
     val li = Tables.lineitem(spark, sf)
     val path = "/tmp/graft_test_wh_zorder"
     Warehouse.writeZOrdered(li, path, "l_orderkey", "l_partkey", numFiles = 4)
-    graft.plans.GraftFunctions.register(spark)
     val back = spark.read.parquet(path)
       .withColumn("__z", graft.plans.GraftFunctions.morton_key(
         col("l_orderkey").cast("long"), col("l_partkey").cast("long")))
