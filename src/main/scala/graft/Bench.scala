@@ -230,8 +230,7 @@ object Bench {
     def timedWithHost[A](key: String)(body: => A): A = {
       loadLog(key) = loadLog.getOrElse(key, Vector.empty) :+ load1()
       val s0 = stealJiffies()
-      val hb0 = Metrics.hostUserStealJiffies()
-      val sj0 = Metrics.selfUserJiffies()
+      val extCores = new Metrics.ExtCores
       val t0 = System.nanoTime()
       try body
       finally {
@@ -239,13 +238,7 @@ object Bench {
         val s1 = stealJiffies()
         stealLog(key) = stealLog.getOrElse(key, Vector.empty) :+
           (if (s0 >= 0 && s1 >= 0) s1 - s0 else -1L)
-        val hb1 = Metrics.hostUserStealJiffies()
-        val sj1 = Metrics.selfUserJiffies()
-        val ext =
-          if (hb0 >= 0 && sj0 >= 0 && hb1 >= 0 && sj1 >= 0 && wall > 0.01)
-            math.max(0.0, ((hb1 - hb0) - (sj1 - sj0)).toDouble /
-              Metrics.Hz / wall)
-          else -1.0 // /proc unavailable: no evidence, never gate on it
+        val ext = extCores.over(wall) // -1.0: no evidence, never gate on it
         extLog(key) = extLog.getOrElse(key, Vector.empty) :+ ext
         lastRepGated = ext > extCoresGate
         consecutiveGated =
@@ -524,7 +517,7 @@ object Bench {
     }
 
     // ---- per-query job-wall attribution (round-17 verdict #7) ----------
-    // One untimed pass per headline query with a job listener: the sum
+    // One untimed pass per headline query under Metrics.measure: the sum
     // of Spark job wall-times (job_wall) and the job count land in the
     // detail artifact beside the pass's own wall (rep_wall). The gap
     // rep_wall − job_wall is between-job driver work — planning, AQE
@@ -533,37 +526,16 @@ object Bench {
     // Detail file only; never feeds any reported minimum.
     val jobWall =
       scala.collection.mutable.LinkedHashMap[String, (Double, Double, Int)]()
-    if (!pastDeadline) {
-      val jwStarts = new java.util.concurrent.ConcurrentHashMap[Integer, java.lang.Long]()
-      val jwSum = new java.util.concurrent.atomic.AtomicLong(0L)
-      val jwN = new java.util.concurrent.atomic.AtomicInteger(0)
-      val jwListener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jwStarts.put(j.jobId, System.nanoTime()): Unit
-        override def onJobEnd(
-            j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = jwStarts.remove(Integer.valueOf(j.jobId))
-          if (s != null) {
-            jwSum.addAndGet(System.nanoTime() - s.longValue())
-            jwN.incrementAndGet()
-          }
-          ()
+    if (!pastDeadline) for (name <- headlinePresent) {
+      if (shedUnit(name)) skippedDeadline += s"jobwall.$name"
+      else try {
+        var wall = 0.0
+        val io = Metrics.measure(spark) {
+          val t0 = System.nanoTime(); force(name)
+          wall = (System.nanoTime() - t0) / 1e9
         }
-      }
-      spark.sparkContext.addSparkListener(jwListener)
-      try for (name <- headlinePresent) {
-        if (shedUnit(name)) skippedDeadline += s"jobwall.$name"
-        else {
-          jwSum.set(0L); jwN.set(0); jwStarts.clear()
-          val t0 = System.nanoTime()
-          val ok = try { force(name); true }
-            catch { case t: Throwable => recordErr(s"jobwall.$name", t); false }
-          val wall = (System.nanoTime() - t0) / 1e9
-          Thread.sleep(300) // drain the async listener bus
-          if (ok) jobWall(name) = (wall, jwSum.get() / 1e9, jwN.get())
-        }
-      } finally spark.sparkContext.removeSparkListener(jwListener)
+        jobWall(name) = (wall, io.jobWall, io.jobs)
+      } catch { case t: Throwable => recordErr(s"jobwall.$name", t) }
     } else skippedDeadline += "jobwall"
 
     // Baseline-shaped end-to-end ingest: the reference's only published

@@ -13,13 +13,23 @@ import scala.concurrent.duration.Duration
   * clock matters because the driver runs this per round.
   */
 object Verify {
+  /** The query names a comma-separated filter selects. An unknown name
+    * is refused: a mistyped filter must not dump nothing and pass. */
+  def selectNames(filter: String): Set[String] = {
+    val names = filter.split(",").map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(names.nonEmpty, s"empty query filter '$filter'")
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (local
     // iteration only — the driver always passes exactly 2 args and
     // gets the full map)
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
+      if (args.length > 2) Some(selectNames(args(2))) else None
     def selected[V](m: Map[String, V]): Map[String, V] =
       only.fold(m)(names => m.view.filterKeys(names).toMap)
     val cpus = sys.env.getOrElse(

@@ -146,7 +146,8 @@ object Advanced {
 
   // ---- q125: full PCM sample decode -> audio features ----------------
   // One level below q52: every 16-bit sample of each planted WAV is
-  // decoded from the raw bytes (Multimodal.pcm16Sample) and reduced to
+  // decoded from the raw bytes (the graft.plans.Pcm16Features kernel
+  // behind Multimodal.audioEnergy) and reduced to
   // integer signal features. The fixture's data bytes follow a closed
   // form ((i*37) mod 256), so the oracle recomputes the exact samples
   // arithmetically — agreement proves the byte-level PCM decode, not

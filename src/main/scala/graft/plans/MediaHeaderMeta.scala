@@ -10,11 +10,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Codegen'd media-header decoder: BYTE-FOR-BYTE the semantics of the
-  * pure-Column `Multimodal.decodeMediaMeta` pipeline (sniff + BMP/WAV/
+  * pure-Column decode it replaced (sniff + BMP/WAV/
   * PNG/GIF/WebP/TIFF/JPEG header parses), collapsed into ONE Catalyst
   * expression returning
   * struct<kind, width, height, bpp, channels, sample_rate,
-  * bits_per_sample, n_samples>.
+  * bits_per_sample, n_samples>. That Column form lives on in test
+  * scope as `MediaColumns.decodeMediaMetaColumns`, the parity
+  * comparator.
   *
   * Why a custom Expression (measured, round 18): the Column form's
   * expression tree is so large that q52 at sf0.001 spent ~18 s in
@@ -156,9 +158,9 @@ object MediaHeaderMeta {
 
   // ---- format walks ---------------------------------------------------
 
-  /** jpegSofScan: bounded marker walk, 64 segments, start pos 3.
-    * Returns (precision, height, width, ncomp) when an SOF frame
-    * header was captured. */
+  /** Mirrors `MediaColumns.jpegSofScan`: bounded marker walk, 64
+    * segments, start pos 3. Returns (precision, height, width, ncomp)
+    * when an SOF frame header was captured. */
   private def jpegSof(b: Array[Byte]): Option[(Long, Long, Long, Long)] = {
     var pos = 3L
     var alive = true
@@ -185,9 +187,10 @@ object MediaHeaderMeta {
     None
   }
 
-  /** webpDims: VP8 / VP8L / VP8X chunk after the RIFF container.
+  /** Mirrors `MediaColumns.webpDims`: VP8 / VP8L / VP8X chunk after
+    * the RIFF container.
     * Caller gates length >= 16 (the fourcc read). */
-  private def webpDims(b: Array[Byte]): (Option[Long], Option[Long]) = {
+  private def webpSize(b: Array[Byte]): (Option[Long], Option[Long]) = {
     if (bytesEq(b, 13, Array('V', 'P', '8', ' '))) {
       if (b.length >= 30 && bytesEq(b, 24, Array(0x9d, 0x01, 0x2a)))
         (Some(leU(b, 27, 2) % 16384L), Some(leU(b, 29, 2) % 16384L))
@@ -204,10 +207,10 @@ object MediaHeaderMeta {
     } else (None, None)
   }
 
-  /** tiffMeta: endian-tagged IFD walk, 64-entry cap, display-transposed
-    * dims under EXIF orientation 5-8. Caller gates length >= 8.
-    * Returns (width, height, bpp). */
-  private def tiffMeta(b: Array[Byte]): (Option[Long], Option[Long], Option[Long]) = {
+  /** Mirrors `MediaColumns.tiffMeta`: endian-tagged IFD walk, 64-entry
+    * cap, display-transposed dims under EXIF orientation 5-8. Caller
+    * gates length >= 8. Returns (width, height, bpp). */
+  private def tiffIfd(b: Array[Byte]): (Option[Long], Option[Long], Option[Long]) = {
     val little = bytesEq(b, 1, Array(0x49, 0x49))
     def u16(pos: Long): Option[Long] =
       for (b0 <- byteAt(b, pos); b1 <- byteAt(b, pos + 1))
@@ -306,11 +309,11 @@ object MediaHeaderMeta {
           out(1) = leU(b, 7, 2)
           out(2) = leU(b, 9, 2)
         case "webp" if len >= 16 =>
-          val (w, h) = webpDims(b)
+          val (w, h) = webpSize(b)
           w.foreach(v => out(1) = v)
           h.foreach(v => out(2) = v)
         case "tiff" if len >= 8 =>
-          val (w, h, bpp) = tiffMeta(b)
+          val (w, h, bpp) = tiffIfd(b)
           w.foreach(v => out(1) = v)
           h.foreach(v => out(2) = v)
           bpp.foreach(v => out(3) = v)

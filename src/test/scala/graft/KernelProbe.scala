@@ -12,7 +12,7 @@ import org.apache.spark.sql.DataFrame
   * the timed region) to measure the per-BYTE constant that dominates
   * at corpus scale.
   *
-  * Usage: runMain graft.KernelProbe [nAssets] [samplesPerChannel] [dim] [reps]
+  * Usage: Test/runMain graft.KernelProbe [nAssets] [samplesPerChannel] [dim] [reps]
   */
 object KernelProbe {
   def main(args: Array[String]): Unit = {
@@ -60,17 +60,17 @@ object KernelProbe {
         f"columns=$s%.3f s speedup=${s / f}%.1fx")
     }
     pair("audioEnergy", Multimodal.audioEnergy(wavs),
-      Multimodal.audioEnergyColumns(wavs))
+      MediaColumns.audioEnergyColumns(wavs))
     pair("audioFingerprintBands", Multimodal.audioFingerprint(wavs),
-      Multimodal.audioFingerprintColumns(wavs))
+      MediaColumns.audioFingerprintColumns(wavs))
     pair("audioSegments", Multimodal.audioSegments(wavs),
-      Multimodal.audioSegmentsColumns(wavs))
+      MediaColumns.audioSegmentsColumns(wavs))
     pair("imageStats", Multimodal.imageStats(bmps),
-      Multimodal.imageStatsColumns(bmps))
+      MediaColumns.imageStatsColumns(bmps))
     pair("imageResizeStats", Multimodal.imageResizeStats(bmps),
-      Multimodal.imageResizeStatsColumns(bmps))
+      MediaColumns.imageResizeStatsColumns(bmps))
     pair("imagePHash", Multimodal.imagePHash(bmps),
-      Multimodal.imagePHashColumns(bmps))
+      MediaColumns.imagePHashColumns(bmps))
     spark.stop()
   }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * kernels (graft.plans.Pcm16Features / Pcm16BandEnergies /
   * Pcm16Segments / BmpChannelSums / BmpAHash) must be BYTE-FOR-BYTE
   * equal to the pure-Column folds they replaced
-  * (Multimodal.{audioEnergy,audioFingerprint,audioSegments,imageStats,
+  * (MediaColumns.{audioEnergy,audioFingerprint,audioSegments,imageStats,
   * imageResizeStats,imagePHash}Columns) — on every planted fixture
   * shape, at every truncation prefix (dense through the header region,
   * strided through the sample/pixel region, where the null-poisoning
@@ -118,7 +118,7 @@ class MediaKernelsParitySpec extends SparkSpec {
   test("audioEnergy kernel equals the Column fold on fixtures, " +
     "truncations, and mutations") {
     assertRowParity(Multimodal.audioEnergy(assets),
-      Multimodal.audioEnergyColumns(assets), "audioEnergy")
+      MediaColumns.audioEnergyColumns(assets), "audioEnergy")
   }
 
   test("audioFingerprint band kernel equals the Column fold") {
@@ -133,36 +133,36 @@ class MediaKernelsParitySpec extends SparkSpec {
         .filter(col("n_vals") > 0)
         .select(col("asset_id"), col("n_vals"),
           graft.plans.GraftFunctions.pcm16_bands(c).as("bands")),
-      Multimodal.audioFingerprintColumns(assets)
+      MediaColumns.audioFingerprintColumns(assets)
         .select("asset_id", "n_vals", "bands"),
       "audioFingerprint bands")
   }
 
   test("audioSegments kernel equals the explode/window/join pipeline") {
     assertRowParity(Multimodal.audioSegments(assets),
-      Multimodal.audioSegmentsColumns(assets), "audioSegments")
+      MediaColumns.audioSegmentsColumns(assets), "audioSegments")
   }
 
   test("audioSegments kernel parity at non-default frame/threshold") {
     assertRowParity(Multimodal.audioSegments(assets, frame = 3,
         thresholdPerSample = 100000000L),
-      Multimodal.audioSegmentsColumns(assets, frame = 3,
+      MediaColumns.audioSegmentsColumns(assets, frame = 3,
         thresholdPerSample = 100000000L), "audioSegments(3)")
   }
 
   test("imageStats kernel equals the Column fold") {
     assertRowParity(Multimodal.imageStats(assets),
-      Multimodal.imageStatsColumns(assets), "imageStats")
+      MediaColumns.imageStatsColumns(assets), "imageStats")
   }
 
   test("imageResizeStats kernel equals the Column fold") {
     assertRowParity(Multimodal.imageResizeStats(assets),
-      Multimodal.imageResizeStatsColumns(assets), "imageResizeStats")
+      MediaColumns.imageResizeStatsColumns(assets), "imageResizeStats")
   }
 
   test("imagePHash kernel equals the Column fold") {
     assertRowParity(Multimodal.imagePHash(assets),
-      Multimodal.imagePHashColumns(assets), "imagePHash")
+      MediaColumns.imagePHashColumns(assets), "imagePHash")
   }
 
   test("audioProfile (fused pass) equals audioEnergy JOIN audioSegments") {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-18 optimization guard: the one-node MediaHeaderMeta decode
   * must be BYTE-FOR-BYTE equal to the pure-Column pipeline it replaced
-  * (Multimodal.decodeMediaMetaColumns) — on every planted fixture
+  * (MediaColumns.decodeMediaMetaColumns) — on every planted fixture
   * class, at EVERY truncation prefix (dense through the header region,
   * strided beyond), and under deterministic byte mutations that hit
   * the adversarial paths (marker floods, corrupt IFD counts, bad
@@ -110,7 +110,7 @@ class MediaMetaParitySpec extends SparkSpec {
     val assets = comparable.toDF("asset_id", "content").localCheckpoint(true)
     val fast = graft.operators.Multimodal.decodeMediaMeta(assets)
       .orderBy("asset_id").collect()
-    val slow = graft.operators.Multimodal.decodeMediaMetaColumns(assets)
+    val slow = MediaColumns.decodeMediaMetaColumns(assets)
       .orderBy("asset_id").collect()
     assert(fast.length == slow.length)
     fast.zip(slow).foreach { case (f, s) =>
@@ -138,7 +138,7 @@ class MediaMetaParitySpec extends SparkSpec {
       .orderBy("asset_id").collect()
     assert(rows(1).getString(1) == "unknown")
     (2 to 8).foreach(i => assert(rows(1).isNullAt(i)))
-    val slow = graft.operators.Multimodal.decodeMediaMetaColumns(assets)
+    val slow = MediaColumns.decodeMediaMetaColumns(assets)
       .orderBy("asset_id").collect()
     rows.zip(slow).foreach { case (f, s) => assert(f == s) }
   }

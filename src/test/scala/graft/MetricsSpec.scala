@@ -57,12 +57,17 @@ class MetricsSpec extends SparkSpec {
       .groupBy("l_partkey")
       .agg(sum(col("l_quantity") * col("p_retailprice")).as("v"))
 
+    def timed(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    }
+    var broadcastWall, shuffledWall = 0.0
     val broadcastIo = Metrics.measure(spark) {
-      noop(agg(li.join(broadcast(part), col("l_partkey") === col("p_partkey"))))
+      broadcastWall = timed(noop(agg(
+        li.join(broadcast(part), col("l_partkey") === col("p_partkey")))))
     }
     val shuffledIo = Metrics.measure(spark) {
-      noop(agg(li.hint("merge")
-        .join(part.hint("merge"), col("l_partkey") === col("p_partkey"))))
+      shuffledWall = timed(noop(agg(li.hint("merge")
+        .join(part.hint("merge"), col("l_partkey") === col("p_partkey")))))
     }
     // the broadcast plan's only shuffle is the final aggregate's; the
     // merge plan additionally range/hash-shuffles BOTH join inputs
@@ -70,6 +75,14 @@ class MetricsSpec extends SparkSpec {
     assert(broadcastIo.shuffleWriteBytes < shuffledIo.shuffleWriteBytes / 2,
       s"broadcast=${broadcastIo.shuffleWriteBytes}B " +
         s"shuffled=${shuffledIo.shuffleWriteBytes}B")
+    // the same listener records each job's wall: every block runs at
+    // least one job, and no job outlasts the block that ran it
+    Seq(broadcastIo -> broadcastWall, shuffledIo -> shuffledWall).foreach {
+      case (io, wall) =>
+        assert(io.jobs >= 1)
+        assert(io.jobWalls.forall(w => w >= 0.0 && w <= wall),
+          s"job walls ${io.jobWalls} vs block wall $wall")
+    }
   }
 
   test("measure sums input bytes for a plain scan") {

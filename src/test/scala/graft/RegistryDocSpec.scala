@@ -42,4 +42,14 @@ class RegistryDocSpec extends AnyFunSuite {
     assert(keys -- rows === Set.empty[String],
       "registry entries missing their OPERATORS.md row")
   }
+
+  test("Verify's query filter refuses a name the registry lacks") {
+    assert(Verify.selectNames("q1_total_margin_2m, q4_top10_products") ===
+      Set("q1_total_margin_2m", "q4_top10_products"))
+    // a typo must not dump nothing and pass
+    val e = intercept[IllegalArgumentException](
+      Verify.selectNames("q1_total_margin_2m,q4_top10_prodcts"))
+    assert(e.getMessage.contains("unknown queries: q4_top10_prodcts"))
+    intercept[IllegalArgumentException](Verify.selectNames(","))
+  }
 }
