@@ -306,7 +306,26 @@ object Golden {
   val ReferenceSqlDir: String = sys.env.getOrElse("GRAFT_REFERENCE_SQL_DIR",
     "/root/reference/src/sql/queries")
 
+  /** The six shipped reference files, by stem (`<stem>.sql`). */
+  val ReferenceSqlStems: Seq[String] = Seq(
+    "transactions_timeframe", "revenue_split_per_day",
+    "top_10_products_units_sold", "number_transactions_per_store",
+    "total_margin_signature_last_2_months",
+    "total_margin_signature_last_2_months_in_days")
+
+  /** The stems of [[ReferenceSqlStems]] with no `<stem>.sql` in `dir`. */
+  def missingReferenceSql(dir: String): Seq[String] =
+    ReferenceSqlStems.filterNot(stem => java.nio.file.Files.isRegularFile(
+      java.nio.file.Paths.get(dir, s"$stem.sql")))
+
   def verbatimSql(spark: SparkSession, dir: String): DataFrame = {
+    val missing = missingReferenceSql(ReferenceSqlDir)
+    if (missing.nonEmpty) throw new IllegalStateException(
+      s"q310 reads the six reference SQL files from $ReferenceSqlDir " +
+        "(set GRAFT_REFERENCE_SQL_DIR to use another directory); " +
+        s"missing <stem>.sql for: ${missing.mkString(", ")}")
+    val Seq(tfStem, revStem, topStem, tpsStem, m2Stem, m60Stem) =
+      ReferenceSqlStems
     val fx = GoldenFixture.generate(FixtureDir)
     loadTransactions(spark, fx).createOrReplaceTempView("transactions")
     loadProducts(spark, fx).createOrReplaceTempView("product")
@@ -314,35 +333,35 @@ object Golden {
       graft.sql.QueryRunner.runFile(spark, s"$ReferenceSqlDir/$stem.sql")
     def epochDay(c: org.apache.spark.sql.Column) =
       datediff(c, lit("1970-01-01")).cast("double")
-    val tf = raw("transactions_timeframe").select(
-      lit("transactions_timeframe").as("query"), lit(1L).as("n_rows"),
+    val tf = raw(tfStem).select(
+      lit(tfStem).as("query"), lit(1L).as("n_rows"),
       epochDay(col("last_transaction_date")).as("v1"),
       epochDay(col("first_transaction_date")).as("v2"))
-    val rev = raw("revenue_split_per_day").agg(
+    val rev = raw(revStem).agg(
       count(lit(1)).as("n_rows"),
       sum("total_revenue").cast("double").as("v1"),
       max(datediff(col("date"), lit("1970-01-01"))).cast("double").as("v2"))
-      .select(lit("revenue_split_per_day").as("query"),
+      .select(lit(revStem).as("query"),
         col("n_rows"), col("v1"), col("v2"))
-    val top = raw("top_10_products_units_sold").agg(
+    val top = raw(topStem).agg(
       count(lit(1)).as("n_rows"),
       sum("total_units_sold").cast("double").as("v1"),
       min("total_units_sold").cast("double").as("v2"))
-      .select(lit("top_10_products_units_sold").as("query"),
+      .select(lit(topStem).as("query"),
         col("n_rows"), col("v1"), col("v2"))
-    val tps = raw("number_transactions_per_store").agg(
+    val tps = raw(tpsStem).agg(
       count(lit(1)).as("n_rows"),
       sum("number_distinct_of_transactions").cast("double").as("v1"),
       sum("number_of_transactions").cast("double").as("v2"))
-      .select(lit("number_transactions_per_store").as("query"),
+      .select(lit(tpsStem).as("query"),
         col("n_rows"), col("v1"), col("v2"))
-    val m2 = raw("total_margin_signature_last_2_months").select(
-      lit("total_margin_signature_last_2_months").as("query"),
+    val m2 = raw(m2Stem).select(
+      lit(m2Stem).as("query"),
       lit(1L).as("n_rows"),
       col("total_margin_last_2_months").cast("double").as("v1"),
       lit(0.0).as("v2"))
-    val m60 = raw("total_margin_signature_last_2_months_in_days").select(
-      lit("total_margin_signature_last_2_months_in_days").as("query"),
+    val m60 = raw(m60Stem).select(
+      lit(m60Stem).as("query"),
       lit(1L).as("n_rows"),
       col("total_margin_last_60_days").cast("double").as("v1"),
       lit(0.0).as("v2"))

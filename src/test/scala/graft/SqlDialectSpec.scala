@@ -25,6 +25,26 @@ class SqlDialectSpec extends SparkSpec {
     parses("SELECT 1;")                                   // trailing semi
   }
 
+  test("missingReferenceSql lists every stem for an absent directory") {
+    val absent = s"/tmp/graft_no_reference_sql_${System.nanoTime}"
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(absent)))
+    assert(Golden.missingReferenceSql(absent) === Golden.ReferenceSqlStems)
+    assert(Golden.ReferenceSqlStems.size === 6)
+  }
+
+  test("missingReferenceSql lists only the absent file's stem") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_reference_sql")
+    val present = Golden.ReferenceSqlStems.init.map(s => dir.resolve(s"$s.sql"))
+    try {
+      present.foreach(java.nio.file.Files.createFile(_))
+      assert(Golden.missingReferenceSql(dir.toString) ===
+        Seq(Golden.ReferenceSqlStems.last))
+    } finally {
+      present.foreach(java.nio.file.Files.deleteIfExists(_))
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("all six reference files parse verbatim") {
     val dir = java.nio.file.Paths.get(Golden.ReferenceSqlDir)
     assume(java.nio.file.Files.isDirectory(dir), s"no reference at $dir")
