@@ -1,5 +1,8 @@
 package graft
 
+import org.json4s._
+import org.json4s.jackson.{compactJson, parseJsonOpt}
+
 /** Pure decision rules for the bench harness — extracted so the
   * budget/shedding/remediation policies are unit-testable without a
   * Spark session or a real loud host (round-15 verdict #1/#4/#5: the
@@ -37,6 +40,34 @@ object BenchPolicy {
     * gets a run that finishes inside it — the reserve never EXTENDS
     * the budget. */
   val RetryReserveS: Double = 90.0
+
+  /** External cores (host user+steal minus this JVM's user time, per
+    * wall second) above which a rep is load-gated: it still counts as a
+    * success, but not as a clean sample for the lane minimum. */
+  val ExtCoresGate: Double = 1.0
+
+  /** Consecutive gated reps after which remediation reps stop. */
+  val LoudCap: Int = 6
+
+  /** The stdout line's length cap: the round record parses the last JSON
+    * line of a ~2000-char stdout tail, and a longer line leaves only a
+    * suffix in the window (round 7's parsed:null). */
+  val MaxLineChars: Int = 1800
+
+  /** Renders a compact artifact line, dropping its elastic parts in
+    * `drops` order until it fits [[MaxLineChars]]: each dropped key is
+    * removed, except `queries`, which the round record reads and is
+    * emptied.
+    * The last tier is returned even if it still does not fit. */
+  def fitLine(line: JObject,
+              drops: Seq[String] = Seq("scale", "steady", "ingest", "queries")): String = {
+    val tiers = drops.inits.toSeq.reverse.map(gone => compactJson(JObject(
+      line.obj.collect {
+        case ("queries", _) if gone.contains("queries") => "queries" -> JObject()
+        case (k, v) if !gone.contains(k) => k -> v
+      })))
+    tiers.find(_.length <= MaxLineChars).getOrElse(tiers.last)
+  }
 
   /** A unit of work past the deadline is shed (skip-and-record). */
   def shed(remainingS: Double): Boolean = remainingS <= 0
@@ -76,25 +107,26 @@ object BenchPolicy {
     * BENCH_DETAIL.json text — the predictive-shed cost model's input.
     * Returns empty when the file records a DIFFERENT sf than `sfDir`:
     * sf0.1 rep times predict nothing about an sf0.01 run (10x off in
-    * either direction — premature shed or useless admission). The
-    * `reps` object holds only arrays, so the first `}` after
-    * `"reps":{` closes it; a malformed file parses to empty, never
-    * throws. */
+    * either direction — premature shed or useless admission). A
+    * malformed file parses to empty, never throws. */
   def parseDetailReps(detailJson: String,
                       sfDir: String): Map[String, Seq[Double]] =
-    try {
-      val sfMatches = """"sf":"([^"]+)"""".r.findFirstMatchIn(detailJson)
-        .exists(_.group(1) == sfDir)
-      val i = detailJson.indexOf("\"reps\":{")
-      if (i < 0 || !sfMatches) Map.empty
-      else {
-        val body = detailJson.substring(i + 8, detailJson.indexOf('}', i))
-        """"([^"]+)":\[([^\]]*)\]""".r.findAllMatchIn(body).map { m =>
-          m.group(1) -> m.group(2).split(",").toSeq
-            .flatMap(_.trim.toDoubleOption)
-        }.toMap
-      }
-    } catch { case _: Throwable => Map.empty }
+    parseJsonOpt(detailJson).filter(d => (d \ "sf") == JString(sfDir))
+      .map(_ \ "reps").collect { case JObject(fs) =>
+        fs.map { case (k, v) => k -> (v match {
+          case JArray(xs) => xs.collect {
+            case JDouble(x) => x
+            case JInt(x) => x.toDouble
+          }
+          case _ => Nil
+        }) }.toMap
+      }.getOrElse(Map.empty)
+
+  /** How many lanes the previous BENCH_DETAIL.json text lists under
+    * `rep_spread_raw`; None when it does not parse or has no such map. */
+  def rawSpreadCount(detailJson: String): Option[Int] =
+    parseJsonOpt(detailJson).map(_ \ "rep_spread_raw")
+      .collect { case JObject(fs) => fs.size }
 
   /** Simulate a priority-ordered unit trace `(key, predicted, actual)`
     * against a budget with the predictive shed: returns (ran, shed,

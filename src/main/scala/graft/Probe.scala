@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
-import org.apache.spark.sql.functions.expr
 
 /** The one probe main: where a query's time goes, in one warmed JVM.
   * Usage: runMain graft.Probe <mode> <sfDir> [targets-csv] [reps]
@@ -15,101 +14,45 @@ import org.apache.spark.sql.functions.expr
   *    is driver work between jobs. Then the final AQE plan's skeleton.
   *  - `phases`: per rep, build and execute walls plus Catalyst analysis,
   *    optimization and planning from the frame's QueryPlanningTracker.
-  * A target is a `SparkEntry.queries` name or `<lane>@x<N>`, a
-  * ScaleBench lane at replica factor N; targets default to
-  * `Bench.headline`, reps to 3. Lane fixtures are built before the
-  * first rep and deleted on the way out. `SPARK_GRAFT_EXTRA_CONFS`
-  * (`k=v;k=v`) is set on the session first, so any mode can A/B a
-  * Spark setting. */
+  * A target is a `SparkEntry.queries` name or a lane of the bench's
+  * table ([[Lanes]]): `<lane>@x<N>` for a scale lane at replica factor N,
+  * the bare name for a lane that does not scale (`ingest_*`,
+  * `q22_served`, `q0_scaling_probe`). Targets default to the headline
+  * queries, reps to 3. A lane's prep runs off the clock before each rep;
+  * its inputs are released on the way out. `SPARK_GRAFT_EXTRA_CONFS`
+  * (`k=v;k=v`) is set on the session first, so any mode can A/B a Spark
+  * setting. */
 object Probe {
   private val usage =
     "usage: Probe <plan|time|jobs|phases> <sfDir> [targets-csv] [reps]"
 
-  private type Mode = (SparkSession, String, Seq[(String, () => DataFrame)], Int) => Unit
+  /** A resolved target: its label, the off-the-clock prep each rep runs
+    * first, and the function that makes the frame a rep forces. */
+  private final case class Target(name: String, prep: () => Unit,
+                                  build: () => DataFrame)
 
-  /** A lane's rep body, built from (spark, sfDir, times, scratch dir);
-    * building it runs the lane's off-the-clock fixture prep. */
-  private type Lane = (SparkSession, String, Int, String) => () => DataFrame
+  private type Mode = (SparkSession, String, Seq[Target], Int) => Unit
 
-  private def docsLane(op: DataFrame => DataFrame): Lane = (spark, sfDir, times, _) => {
-    val docs = ScaleBench.documents(spark, sfDir, times)
-    () => op(docs)
-  }
-
-  /** The `ingest_*` lanes run over the bench's cached CSV fixture
-    * (largest file, all three files); the replica factor is ignored. */
-  private def ingestLane(op: (SparkSession, (String, Seq[String]), String) => DataFrame): Lane =
-    (spark, _, _, dir) => {
-      val fixture = graft.sources.IngestFixture.ensure(spark)
-      () => op(spark, fixture, dir)
-    }
-
-  private def nothing(spark: SparkSession): DataFrame = spark.range(0).toDF()
-
-  private val tx = graft.model.ReferenceSchemas.transactions
-
-  private val lanes: Map[String, Lane] = Map(
-    // same 1/5 slice the bench lane runs (doc_id = base*times+i, so
-    // `div times` recovers the base id in every replica)
-    "q218_weighted_jaccard" -> { (spark, sfDir, times, _) =>
-      val docs = ScaleBench.documents(spark, sfDir, times)
-        .filter(expr(s"(doc_id div $times) % 5 = 0")).localCheckpoint(true)
-      () => ScaleBench.weightedJaccard(docs)
-    },
-    "q22_minhash_xx" -> docsLane(ScaleBench.minhashPairs),
-    "q99_prefix_jaccard" -> docsLane(ScaleBench.prefixJaccard),
-    "q40_dedup_clusters" -> docsLane(ScaleBench.clusters),
-    "q162_shared_substring" -> docsLane(ScaleBench.sharedSubstring),
-    "q223_kcore" -> { (spark, sfDir, times, _) =>
-      val e = ScaleBench.kcoreEdges(spark, sfDir, times).localCheckpoint(true)
-      () => ScaleBench.kcore(e)
-    },
-    "q141_stream_incremental_cc" -> { (spark, sfDir, times, dir) =>
-      ScaleBench.streamIncCcPrep(spark, sfDir, times, dir)
-      () => ScaleBench.streamIncrementalCc(spark, sfDir, dir, times)
-    },
-    "q61_stream_rocksdb" -> { (spark, sfDir, times, dir) =>
-      ScaleBench.streamNearDupPrep(spark, sfDir, times, dir)
-      () => graft.streaming.StreamOps.withStateStore(spark,
-        graft.streaming.StreamOps.RocksDbProvider)(ScaleBench.streamNearDup(_, dir, times))
-    },
-    // the build's shuffle shape: `jobs` prints its shuffle-write MB,
-    // which must stay linear in the edge count at every factor
-    "q146_layout_build" -> { (spark, sfDir, times, _) =>
-      val e = ScaleBench.pageRankEdges(spark, sfDir, times)
-      () => { ScaleBench.pageRankLayoutBuild(spark, e, times); nothing(spark) }
-    },
-    // typed parse of the largest file vs the same read without the
-    // typed repair: the wall delta is the alignTo expression cost
-    "ingest_load_largest" -> ingestLane((spark, f, _) =>
-      graft.sources.CsvSource.alignTo(graft.sources.CsvSource.readRaw(spark, f._1), tx)),
-    "ingest_raw_read" -> ingestLane((spark, f, _) =>
-      graft.sources.CsvSource.readRaw(spark, f._1)),
-    // read -> repair -> align -> union over all three files, no write
-    "ingest_aligned" -> ingestLane((spark, f, _) =>
-      graft.sources.CsvSource.readAligned(spark, f._2, tx)),
-    // the whole lane, month-partitioned warehouse write included
-    "ingest_full_warehouse" -> ingestLane { (spark, f, dir) =>
-      graft.sources.IngestFixture.fullIngest(spark, f._2, dir); nothing(spark)
-    })
-
-  /** Parses a targets csv into (query-or-lane, replica factor), the
-    * factor None for a query. Refuses an unknown name before any query
-    * runs. */
-  private def parseTargets(csv: String): Seq[(String, Option[Int])] = {
+  /** Parses a targets csv into (label, lane, replica factor); the lane is
+    * None for a query. Refuses an unknown name before any query runs. */
+  def parseTargets(csv: String): Seq[(String, Option[Lane], Int)] = {
     val targets = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq.map { t =>
       t.split("@x", 2) match {
         case Array(q) =>
-          require(SparkEntry.queries.contains(q),
-            if (lanes.contains(q)) s"lane target '$q' needs a factor: $q@x<N>"
-            else s"unknown target '$q': not a SparkEntry query or <lane>@x<N>")
-          (q, None)
-        case Array(lane, n) =>
-          require(lanes.contains(lane), s"unknown lane '$lane' in target '$t' " +
-            s"(lanes: ${lanes.keys.toSeq.sorted.mkString(",")})")
+          val lane = Lanes.named(q, scaled = false)
+            .filterNot(_ => SparkEntry.queries.contains(q))
+          require(SparkEntry.queries.contains(q) || lane.isDefined,
+            if (Lanes.named(q, scaled = true).isDefined)
+              s"lane target '$q' needs a factor: $q@x<N>"
+            else s"unknown target '$q': not a SparkEntry query, a lane or <lane>@x<N>")
+          (q, lane, 1)
+        case Array(name, n) =>
+          val lane = Lanes.named(name, scaled = true)
+          require(lane.isDefined, s"unknown lane '$name' in target '$t' (scale " +
+            s"lanes: ${Lanes.group(Lanes.Scale).map(_.name).sorted.mkString(",")})")
           val times = n.toIntOption.filter(_ >= 1)
           require(times.isDefined, s"bad replica factor in target '$t'")
-          (lane, times)
+          (s"$name@x${times.get}", lane, times.get)
       }
     }
     require(targets.nonEmpty, s"no targets in '$csv'")
@@ -124,22 +67,24 @@ object Probe {
   }
 
   /** The one rep loop: round-major, so every target sees the same host
-    * weather within a round. */
-  private def eachRep(targets: Seq[(String, () => DataFrame)], reps: Int)(
+    * weather within a round; each rep's prep runs first, off the clock. */
+  private def eachRep(targets: Seq[Target], reps: Int)(
       body: (String, Int, () => DataFrame) => Unit): Unit =
-    for (r <- 1 to reps; (name, build) <- targets) body(name, r, build)
+    for (r <- 1 to reps; t <- targets) { t.prep(); body(t.name, r, t.build) }
 
   private val plan: Mode = (_, _, targets, _) =>
-    targets.foreach { case (name, build) =>
-      println(s"\n=================== $name ===================")
-      println(build().queryExecution.explainString(FormattedMode))
+    targets.foreach { t =>
+      t.prep()
+      println(s"\n=================== ${t.name} ===================")
+      println(t.build().queryExecution.explainString(FormattedMode))
     }
 
   private val time: Mode = (spark, sfDir, targets, reps) => {
-    Bench.headline.filterNot(n => targets.exists(_._1 == n)).foreach(n =>
+    Lanes.headline.filterNot(n => targets.exists(_.name == n)).foreach(n =>
       try force(SparkEntry.queries(n)(spark, sfDir)) catch { case _: Throwable => () })
-    targets.foreach { case (name, build) =>
-      println(f"PROBE time $name cold: ${seconds(force(build()))}%.3f s")
+    targets.foreach { t =>
+      t.prep()
+      println(f"PROBE time ${t.name} cold: ${seconds(force(t.build()))}%.3f s")
     }
     val log = collection.mutable.Map[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
@@ -152,7 +97,7 @@ object Probe {
       log(name) = log(name) :+ dt
       println(f"PROBE time $name rep$r: $dt%.3f s load1=${Metrics.load1()} ext=$ext%.2f")
     }
-    targets.foreach { case (name, _) =>
+    targets.map(_.name).foreach { name =>
       val ts = log(name).sorted
       println(f"PROBE time SUMMARY $name min=${ts.head}%.3f " +
         f"median=${ts(ts.size / 2)}%.3f max=${ts.last}%.3f")
@@ -173,7 +118,7 @@ object Probe {
         f"job_wall=${io.jobWall}%.3f s shuffle_write_mb=${io.shuffleWriteBytes / 1e6}%.2f")
     }
     // the FINAL executed plan (AQE settles it at runtime)
-    targets.foreach { case (name, _) =>
+    targets.map(_.name).foreach { name =>
       println(s"PROBE jobs $name plan:")
       last(name).queryExecution.executedPlan.toString.linesIterator
         .filter(l => l.contains("Join") || l.contains("Exchange") ||
@@ -209,7 +154,7 @@ object Probe {
       s"unknown mode '${args(0)}'; $usage"))
     val sfDir = args(1)
     val targets = parseTargets(
-      if (args.length > 2) args(2) else Bench.headline.mkString(","))
+      if (args.length > 2) args(2) else Lanes.headline.mkString(","))
     val reps = if (args.length > 3) args(3).toInt else 3
     require(reps >= 1, s"reps must be >= 1, got $reps")
     sys.env.get("SPARK_GRAFT_EXTRA_CONFS").foreach(
@@ -219,14 +164,17 @@ object Probe {
         println(s"PROBE conf: $k=$v")
       })
     val scratch = s"${sys.props("user.dir")}/target/probe_fixtures"
-    try {
-      val bodies = targets.map {
-        case (q, None) => q -> (() => SparkEntry.queries(q)(spark, sfDir))
-        case (lane, Some(n)) =>
-          s"$lane@x$n" -> lanes(lane)(spark, sfDir, n, s"$scratch/${lane}_x$n")
-      }
-      mode(spark, sfDir, bodies, reps)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
+    val inputs = collection.mutable.Map[Int, Inputs]()
+    try mode(spark, sfDir, targets.map {
+      case (q, None, _) => Target(q, () => (), () => SparkEntry.queries(q)(spark, sfDir))
+      case (label, Some(lane), n) =>
+        val in = inputs.getOrElseUpdate(n, new Inputs(spark, sfDir, n, s"$scratch/x$n"))
+        Target(label, () => lane.prep(in), () => lane.frame(in))
+    }, reps)
+    finally {
+      inputs.values.foreach(_.cleanup())
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(scratch))
+    }
   }
 
   def main(args: Array[String]): Unit = {

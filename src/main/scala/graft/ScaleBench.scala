@@ -50,13 +50,23 @@ object ScaleBench {
   private def replicate(times: Int)(mk: Int => DataFrame): DataFrame =
     (0 until times).map(mk).reduce(_.unionAll(_))
 
-  def documents(spark: SparkSession, dir: String, times: Int): DataFrame = {
-    val d = Tables.documents(spark, dir).select("doc_id", "text")
+  /** `withLang` carries the base corpus's lang column through the
+    * re-keying (the q150 pipeline's language stage reads it). */
+  def documents(spark: SparkSession, dir: String, times: Int,
+                withLang: Boolean = false): DataFrame = {
+    val d = Tables.documents(spark, dir)
+    val lang = if (withLang) Seq(col("lang")) else Nil
     replicate(times)(i => d.select(
-      (col("doc_id") * times + i).as("doc_id"),
-      translate(col("text"), Lower + Upper,
-        rot(Lower, i) + rot(Upper, i)).as("text")))
+      ((col("doc_id") * times + i).as("doc_id") +: lang) :+
+        translate(col("text"), Lower + Upper,
+          rot(Lower, i) + rot(Upper, i)).as("text"): _*))
   }
+
+  /** The fixed 1/5 corpus slice the q218 and q141 lanes run: doc_id =
+    * base*times + i, so `div times` recovers the base id and every
+    * replica contributes the same base documents. */
+  def weightedSlice(docs: DataFrame, times: Int): DataFrame =
+    docs.filter(expr(s"(doc_id div ${times}L) % 5 = 0"))
 
   def embeddings(spark: SparkSession, dir: String, times: Int,
                  dim: Int = 64): DataFrame = {
@@ -153,8 +163,9 @@ object ScaleBench {
     * (`graft_<fam>_bench_pid<NNN>_x<F>`): the pid key is what makes a
     * killed bench JVM's leftovers sweepable by
     * [[graft.sources.Warehouse.sweepStaleIndexDirs]] — the same
-    * discipline the q24/q34/pagerank registry lanes follow. Bench calls
-    * the sweep on both family prefixes before the scale blocks. */
+    * discipline the q24/q34/pagerank registry lanes follow. The bench's
+    * inputs (`Inputs.durableTables`) sweep both family prefixes before
+    * the first durable rep. */
   def benchTablePrefix(family: String, times: Int): String =
     s"graft_${family}_bench_pid${ProcessHandle.current().pid()}_x$times"
 
@@ -248,17 +259,10 @@ object ScaleBench {
     * curation pipeline (language -> quality -> exact dedup -> near-dup
     * CC -> split) over the replicated corpus. The composite inherits
     * each stage's scale shape — if any constituent regressed to
-    * superlinear, this lane catches it end-to-end. Needs lang: the
-    * replicas carry the base corpus's lang column through re-keying. */
-  def corpusPipeline(spark: SparkSession, dir: String, times: Int): DataFrame = {
-    val d = Tables.documents(spark, dir).select("doc_id", "lang", "text")
-    val reps = (0 until times).map(i => d.select(
-      (col("doc_id") * times + i).as("doc_id"), col("lang"),
-      translate(col("text"), Lower + Upper,
-        rot(Lower, i) + rot(Upper, i)).as("text")))
-      .reduce(_.unionAll(_))
-    graft.operators.Llm.corpusReportOn(reps, graft.operators.Dedup.XxMinhash)
-  }
+    * superlinear, this lane catches it end-to-end. Needs lang:
+    * `documents(..., withLang = true)`. */
+  def corpusPipeline(docs: DataFrame): DataFrame =
+    graft.operators.Llm.corpusReportOn(docs, graft.operators.Dedup.XxMinhash)
 
   /** Planted-skew join (the q185 diagnostic's companion PROOF): ~20%
     * of fact rows collapse onto ONE hot key (every 5th event), the
@@ -418,9 +422,10 @@ object ScaleBench {
     * default API gives a warm application — the build's own cost is
     * the q146_layout_build lane. */
   def pageRankDefaultPrep(spark: SparkSession, edges: DataFrame,
-                          times: Int, fp: String): Unit = {
+                          times: Int, fp: String,
+                          keySuffix: String = "full"): Unit = {
     graft.operators.Graph.pageRankStandingLayout(spark, edges,
-      family = s"pr_bench_x${times}_full", fp = fp)
+      family = s"pr_bench_x${times}_$keySuffix", fp = fp)
     ()
   }
 
@@ -561,8 +566,7 @@ object ScaleBench {
     * preserving the x1/xN curve. */
   def streamIncCcPrep(spark: SparkSession, dir: String, times: Int,
                       path: String): Unit =
-    documents(spark, dir, times)
-      .filter(expr(s"(doc_id div $times) % 5 = 0"))
+    weightedSlice(documents(spark, dir, times), times)
       .repartition(2 * times)
       .write.mode("overwrite").parquet(path)
 

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
@@ -32,17 +32,8 @@ object ScaleVerify {
     val factors =
       if (args.length > 1) args(1).split(",").toSeq.flatMap(_.trim.toIntOption)
       else Seq(10, 20)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    Session.tune(spark)
+    val spark = Session.get("graft-scale-verify")
     graft.plans.PlanGuard.installWarn(spark)
-    spark.sparkContext.setLogLevel("WARN")
 
     def pairSet(df: DataFrame, a: String, b: String): Set[(Long, Long)] =
       df.select(a, b).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -86,11 +77,8 @@ object ScaleVerify {
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val s187x1 = lineStats(linePages(docs1, 1))
 
-    // q218 weighted Jaccard on the bench lane's 1/5 slice (doc_id =
-    // base*times + i, so `div times` recovers the base id per replica)
-    def wjSlice(docs: DataFrame, times: Int): DataFrame =
-      docs.filter(expr(s"(doc_id div ${times}L) % 5 = 0"))
-    val s218x1 = statSet(ScaleBench.weightedJaccard(wjSlice(docs1, 1)))
+    // q218 weighted Jaccard on the bench lane's 1/5 slice
+    val s218x1 = statSet(ScaleBench.weightedJaccard(ScaleBench.weightedSlice(docs1, 1)))
 
     // q233 novelty: x1 per-doc (n_grams, n_novel) reference
     val s233x1 = statSet(graft.operators.Patterns.noveltyPerDoc(docs1))
@@ -177,7 +165,8 @@ object ScaleVerify {
       // be a re-keyed copy of x1's. Deterministic equality, the
       // strongest law class: any cross-replica pair or score drift at
       // the AllPairs prefix filter's scale operating point fails here.
-      val s218xN = statSet(ScaleBench.weightedJaccard(wjSlice(docsN, times)))
+      val s218xN = statSet(ScaleBench.weightedJaccard(
+        ScaleBench.weightedSlice(docsN, times)))
       val expected218 = for { (a, b, w) <- s218x1; i <- 0 until times }
         yield (a * times + i, b * times + i, w)
       val q218Pass = s218xN == expected218

@@ -12,14 +12,17 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on: runtime coalescing of shuffle partitions, skew-join
   *    splitting, and dynamic broadcast-join conversion are the knobs that
   *    keep a 100 TB plan healthy without hand-tuning per query.
-  *  - shuffle.partitions=32 locally (matches cores). On a 1000-executor
+  *  - shuffle.partitions = local cores. On a 1000-executor
   *    cluster this would be set ~2-3x total cores; AQE coalesces down.
   *  - UTC session timezone: date/timestamp semantics must match the
   *    DuckDB oracle and be machine-independent.
   */
 object Session {
-  def builder(appName: String = "graft"): SparkSession.Builder = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Local cores: `SPARK_GRAFT_CPUS`, else every available processor. */
+  def cpus: String = sys.env.getOrElse(
+    "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
+
+  def builder(appName: String = "graft"): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
       .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
@@ -38,7 +41,6 @@ object Session {
       // dynamic mode is a session-wide invariant (per-operator
       // set/restore would race across Verify's concurrent query pool)
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-  }
 
   def get(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()
@@ -46,8 +48,9 @@ object Session {
     spark
   }
 
-  /** Apply graft configs to an externally-created session (Verify/Bench
-    * create their own). Only dynamic (non-static) confs can be set here. */
+  /** Apply graft configs to an externally-created session (the
+    * `SparkEntry.entry` contract). Only dynamic (non-static) confs can be
+    * set here. */
   def tune(spark: SparkSession): SparkSession = {
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")

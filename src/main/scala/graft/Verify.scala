@@ -1,6 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import org.json4s._
+import org.json4s.jackson.compactJson
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
@@ -32,17 +33,8 @@ object Verify {
       if (args.length > 2) Some(selectNames(args(2))) else None
     def selected[V](m: Map[String, V]): Map[String, V] =
       only.fold(m)(names => m.view.filterKeys(names).toMap)
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    Session.tune(spark)
+    val spark = Session.get("graft-verify")
     graft.plans.PlanGuard.installWarn(spark)
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val pool = Executors.newFixedThreadPool(8)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
@@ -57,21 +49,8 @@ object Verify {
     }
     Await.result(Future.sequence(futures), Duration.Inf)
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = selected(SparkEntry.oracleSql)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), compactJson(JObject(
+      selected(SparkEntry.oracleSql).toList.map { case (k, v) => k -> JString(v) })))
 
     // q22x (production xxhash64 minhash lane) now shares q22's DuckDB
     // oracle — its verify join emits the exact h64-set Jaccard, which
@@ -79,18 +58,19 @@ object Verify {
     // Keep the pair-set selfcheck as a secondary artifact: it localizes
     // a failure to candidate RECALL (a borderline pair missing all
     // bands in one family) vs anything else.
-    val selfCheck = try {
-      val xx = spark.read.parquet(s"$outDir/q22x_minhash_xxhash")
-        .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val md5 = spark.read.parquet(s"$outDir/q22_minhash_lsh")
-        .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      s"""{"q22x_minhash_xxhash": {"check": "pair_set_equals_md5_lane", """ +
-        s""""pass": ${xx == md5}, "n_pairs_xx": ${xx.size}, "n_pairs_md5": ${md5.size}}}"""
+    def pairs(q: String): Set[(Long, Long)] = spark.read.parquet(s"$outDir/$q")
+      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val outcome: List[(String, JValue)] = try {
+      val (xx, md5) = (pairs("q22x_minhash_xxhash"), pairs("q22_minhash_lsh"))
+      List("pass" -> JBool(xx == md5), "n_pairs_xx" -> JInt(xx.size),
+        "n_pairs_md5" -> JInt(md5.size))
     } catch { case e: Throwable =>
-      s"""{"q22x_minhash_xxhash": {"check": "pair_set_equals_md5_lane", """ +
-        s""""pass": false, "error": ${q(String.valueOf(e.getMessage).take(160))}}}"""
+      List("pass" -> JBool(false),
+        "error" -> JString(String.valueOf(e.getMessage).take(160)))
     }
-    Files.writeString(Paths.get(s"$outDir/selfcheck.json"), selfCheck)
+    Files.writeString(Paths.get(s"$outDir/selfcheck.json"), compactJson(JObject(
+      "q22x_minhash_xxhash" -> JObject(
+        ("check" -> JString("pair_set_equals_md5_lane")) :: outcome))))
     spark.stop()
   }
 }

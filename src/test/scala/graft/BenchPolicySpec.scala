@@ -129,4 +129,43 @@ class BenchPolicySpec extends AnyFunSuite {
       BenchPolicy.simulateShedding(units, budgetS = 500.0, reserveS = 90.0)
     assert(ranAll.size === 3 && shedNone.isEmpty)
   }
+
+  test("compact line: an oversized scale block drops first, then steady, then the queries map") {
+    import org.json4s._
+    import org.json4s.jackson.parseJson
+    def lanes(n: Int, tag: String): JObject = JObject((1 to n).toList.map(i =>
+      s"${tag}_lane_$i" -> JArray(List(JDecimal(1.25), JDecimal(2.5), JNull))))
+    val queries = JObject(Lanes.headline.toList.map(_ -> JDecimal(0.512)))
+    val steady = JObject("q1_total_margin_2m" -> JDecimal(0.5))
+    def line(steady: JValue, scale: JValue, qs: JValue = queries): JObject = JObject(
+      "metric" -> JString("total"), "queries" -> qs, "steady" -> steady,
+      "errors_n" -> JInt(0), "sf" -> JString("/data/sf0.1"), "ingest" -> JNothing,
+      "scale" -> scale, "pr_shuffle_mb_x20" -> JObject("146_pagerank" -> JDecimal(1.5)))
+    def keys(v: JValue): List[String] = v match {
+      case JObject(fs) => fs.map(_._1)
+      case _ => Nil
+    }
+    def fit(l: JObject): JValue = {
+      val s = BenchPolicy.fitLine(l)
+      assert(s.length <= BenchPolicy.MaxLineChars, s)
+      parseJson(s)
+    }
+    // a line that fits is rendered whole; an absent (JNothing) part is omitted
+    val whole = fit(line(steady, lanes(2, "s")))
+    assert(keys(whole) === List("metric", "queries", "steady", "errors_n", "sf",
+      "scale", "pr_shuffle_mb_x20"))
+    // an oversized scale block goes first; steady and queries stay
+    val noScale = fit(line(steady, lanes(200, "s")))
+    assert(keys(noScale) === List("metric", "queries", "steady", "errors_n", "sf",
+      "pr_shuffle_mb_x20"))
+    assert(keys(noScale \ "queries") === Lanes.headline.toList)
+    // then steady
+    val noSteady = fit(line(lanes(200, "t"), lanes(200, "s")))
+    assert(keys(noSteady) === List("metric", "queries", "errors_n", "sf", "pr_shuffle_mb_x20"))
+    assert(keys(noSteady \ "queries") === Lanes.headline.toList)
+    // last, the queries map is emptied, never removed
+    val emptied = fit(line(steady, lanes(200, "s"), qs = lanes(200, "q")))
+    assert(keys(emptied) === List("metric", "queries", "errors_n", "sf", "pr_shuffle_mb_x20"))
+    assert((emptied \ "queries") === JObject())
+  }
 }

@@ -2,12 +2,14 @@ package graft
 
 /** `Probe.run` drives every mode on the shared test session at sf0.001
   * (`main` only adds the session's lifecycle): each mode prints its
-  * tagged lines for a query target and a ScaleBench lane target, `jobs`
+  * tagged lines for a query target and two scale lanes of the bench's
+  * table (`q29_sessionization` was not a probe lane before), `jobs`
   * accounts a rep to at least one job whose summed wall fits inside
   * the rep, and a bad mode or target is refused before any job runs. */
 class ProbeSpec extends SparkSpec {
 
-  private val targets = Seq("q4_top10_products", "q22_minhash_xx@x1")
+  private val targets =
+    Seq("q4_top10_products", "q22_minhash_xx@x1", "q29_sessionization@x1")
 
   private def probe(args: String*): Seq[String] = {
     val out = new java.io.ByteArrayOutputStream
