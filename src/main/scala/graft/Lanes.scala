@@ -208,9 +208,12 @@ object Lanes {
     // Pure compute, no shuffle, constant work at every scale: a fixed
     // count of xxhash64 chains over spark.range, whose wall tracks the
     // session's cores. Reported beside the headline, never summed into it.
+    // 128 M rows, 4x fewer than the 512 M through r18 (~23 s a rep on
+    // 4 vCPUs); the range stays constant, not sized from the cores, so
+    // walls compare across hosts (divide r18-era walls by 4).
     Lane(CoreProbe, CoreProbe, three, frame { in =>
       val chain = (1 to 16).foldLeft("id")((e, _) => s"xxhash64($e)")
-      in.spark.range(0L, 512L * 1000 * 1000, 1L,
+      in.spark.range(0L, 128L * 1000 * 1000, 1L,
         in.spark.sparkContext.defaultParallelism).selectExpr(s"$chain AS h")
     }, keep = true),
     // Baseline-shaped ingest at the reference's row counts (BASELINE.md):

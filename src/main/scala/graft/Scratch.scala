@@ -59,4 +59,10 @@ object Scratch {
     sweep
     s"${sys.props("user.dir")}/target/${base}_pid${ProcessHandle.current().pid()}"
   }
+
+  /** A builder's scratch for dataset `dataDir`: `base`, then `dataDir`
+    * with every non-alphanumeric character as `_`, then the pid last,
+    * where the dead-pid sweep finds it. */
+  def dir(base: String, dataDir: String): String =
+    dir(s"${base}_" + dataDir.replaceAll("[^0-9a-zA-Z]", "_"))
 }

@@ -24,7 +24,8 @@ object Tables {
 
   /** The events `ts` column has shipped in three parquet flavors across
     * testdata generations: TIMESTAMP(NANOS) (no native Spark type —
-    * surfaces as LongType nanos under `legacy.parquet.nanosAsLong`),
+    * surfaces as LongType nanos under `legacy.parquet.nanosAsLong`,
+    * which `Session.confs` sets),
     * plain `timestamp[us]` with isAdjustedToUTC=false (surfaces as
     * TIMESTAMP_NTZ under Spark 4's NTZ inference), and UTC-adjusted
     * micros (TimestampType). These helpers normalize any of them; the
@@ -49,7 +50,6 @@ object Tables {
     * comparisons use via epoch math) and exposes a micros-resolution
     * TimestampType `ts` for date logic. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType =>
@@ -108,5 +108,12 @@ object Tables {
   /** Register every table as a temp view so `spark.sql` works against the
     * same names the DuckDB oracle sees (SURVEY §3.1 QueryRunner path). */
   def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+    registerAll(names.map(n => n -> load(spark, dir, n)))
+
+  /** Register each frame as a temp view on its own session: the one
+    * temp-view registration in the engine. A builder that needs views
+    * registers them on a `Session.child`, never on its caller's
+    * session. */
+  def registerAll(views: Seq[(String, DataFrame)]): Unit =
+    views.foreach { case (n, df) => df.createOrReplaceTempView(n) }
 }

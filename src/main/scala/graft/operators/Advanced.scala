@@ -11,9 +11,12 @@ import org.apache.spark.sql.functions._
 object Advanced {
 
   // ---- q26: spark.sql surface over registered views (S9/S10) ---------
+  // The views live on a child session: the caller's session keeps its
+  // own temp views.
   def sqlRunner(spark: SparkSession, dir: String): DataFrame = {
-    QueryRunner.register(spark, dir)
-    QueryRunner.run(spark,
+    val views = graft.Session.child(spark)
+    QueryRunner.register(views, dir)
+    QueryRunner.run(views,
       QueryRunner.builtins("total_margin_signature_last_2_months"))
   }
   // Same result contract as q1 — the oracle is shared.
@@ -412,8 +415,7 @@ object Advanced {
   // (idempotence — vacuum must never eat a referenced file).
   def vacuumOrphans(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Warehouse
-    val root = graft.Scratch.dir("vacuum") + "_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = graft.Scratch.dir("vacuum", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val (data, man) = (s"$root/data", s"$root/manifest")
     val li = Tables.lineitem(spark, dir)
@@ -673,12 +675,8 @@ object Advanced {
   // replays a batch and proves the replay is a no-op.
   def epochSinkRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.streaming.StreamOps
-    val out = s"/tmp/graft_epoch_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val out = graft.Scratch.dir("epoch", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    // session-wide invariant, set idempotently (see Session.tune — a
-    // scoped restore here would race across Verify's concurrent pool)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
     val src = spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "events.parquet")
@@ -998,11 +996,7 @@ object Advanced {
   def warehouseRoundtrip(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Warehouse
     val li = Tables.lineitem(spark, dir)
-    // per-session scratch (applicationId): concurrent sessions on the
-    // same dataset must not race on the overwrite; summary materialized
-    // so the scratch warehouse can be deleted before returning
-    val path = s"/tmp/graft_wh_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val path = graft.Scratch.dir("wh", dir)
     Warehouse.writeMonthlyTransactions(li, path)
     val wh = Warehouse.read(spark, path)
     val maxMonth = wh.agg(max("sale_month")).head().getString(0)
@@ -1012,7 +1006,7 @@ object Advanced {
       .agg(
         count(lit(1)).as("n_rows"),
         sum(col("l_quantity").cast("decimal(18,4)")).cast("double").as("total_qty"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // cut lineage to the scratch files
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
     out
   }
@@ -1042,8 +1036,7 @@ object Advanced {
       .groupBy(col("l_shipdate"))
       .agg(count(lit(1)).as("n_items"),
         sum(col("l_quantity").cast("decimal(18,4)")).as("sum_qty"))
-    val db = graft.Scratch.dir(
-      "derby_db_" + dir.replaceAll("[^0-9a-zA-Z]", "_"))
+    val db = graft.Scratch.dir("derby_db", dir)
     JdbcSink.write(daily.repartition(4), db, "DAILY_QTY")
     JdbcSink.read(spark, db, "DAILY_QTY")
       .select(col("l_shipdate"), col("n_items").cast("long").as("n_items"),
@@ -1139,18 +1132,16 @@ object Advanced {
   }
 
   def dpoFullLoad(spark: SparkSession, dir: String): String = {
-    val path = s"/tmp/graft_dpo_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val path = graft.Scratch.dir("dpo", dir)
     graft.sources.Warehouse
       .writeMonthlyTransactions(Tables.lineitem(spark, dir), path)
     path
   }
 
-  /** Re-state the latest month with quantity+1 under
-    * partitionOverwriteMode=dynamic (a session-wide invariant, ensured
-    * idempotently — NOT scoped/restored, which would race across
-    * Verify's concurrent pool): the write carries ONLY that month's
-    * rows, so only that partition directory is replaced. */
+  /** Re-state the latest month with quantity+1 as a dynamic
+    * partition overwrite (a write option, so the session's mode is
+    * untouched): the write carries ONLY that month's rows, so only
+    * that partition directory is replaced. */
   def dpoCorrection(spark: SparkSession, dir: String, path: String): Unit = {
     val li = Tables.lineitem(spark, dir)
     val maxMonth = li.agg(max(date_format(col("l_shipdate"), "yyyy-MM")))
@@ -1159,11 +1150,8 @@ object Advanced {
       .withColumn("sale_month", date_format(col("l_shipdate"), "yyyy-MM"))
       .filter(col("sale_month") === maxMonth)
       .withColumn("l_quantity", col("l_quantity") + 1.0)
-    // dynamic overwrite is a session-wide invariant (Session.tune); set
-    // idempotently, never restored — a restore would race with other
-    // concurrently-executing partitioned writes on the shared session
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     correction.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy("sale_month").parquet(path)
   }
 
@@ -1199,9 +1187,9 @@ object Advanced {
       .select("sale_month").distinct().collect().map(_.getString(0)).toSeq
     val rewrite = withMonth
       .filter(col("sale_month").isin(affected: _*) && !erased)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     rewrite.sortWithinPartitions("l_partkey")
-      .write.mode("overwrite").partitionBy("sale_month").parquet(path)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("sale_month").parquet(path)
     val surviving = rewrite.select("sale_month").distinct()
       .collect().map(_.getString(0)).toSet
     affected.filterNot(surviving).foreach { m =>
@@ -1213,8 +1201,7 @@ object Advanced {
 
   def gdprDelete(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Warehouse
-    val path = s"/tmp/graft_gdpr_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val path = graft.Scratch.dir("gdpr", dir)
     Warehouse.writeMonthlyTransactions(Tables.lineitem(spark, dir), path)
     gdprErase(spark, dir, path)
     val out = spark.read.parquet(path)
@@ -1271,8 +1258,7 @@ object Advanced {
   }
 
   def manifestIngest(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"/tmp/graft_manifest_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = graft.Scratch.dir("manifest", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val (data, man, parts) = (s"$root/data", s"$root/manifest", s"$root/partials")
     val li = Tables.lineitem(spark, dir)
@@ -1338,8 +1324,7 @@ object Advanced {
   }
 
   def timeTravel(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"/tmp/graft_timetravel_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = graft.Scratch.dir("timetravel", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val (data, man) = (s"$root/data", s"$root/manifest")
     val li = Tables.lineitem(spark, dir)
@@ -1396,12 +1381,7 @@ object Advanced {
   // schema in the catalog instead of re-deriving it per read.
   def parquetEvolution(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
-    // per-session scratch path (applicationId) so concurrent sessions
-    // verifying the same dataset never race on the overwrite writes;
-    // the 1-row summary is materialized below so the scratch can be
-    // deleted before returning
-    val tmp = s"/tmp/graft_pqevo_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val tmp = graft.Scratch.dir("pqevo", dir)
     li.filter(col("l_linenumber") <= 3)
       .select(col("l_orderkey"), col("l_quantity"))
       .write.mode("overwrite").parquet(s"$tmp/v1")
@@ -1697,8 +1677,7 @@ object Advanced {
   // scratch path — the write+scan round trip is under the hash, the
   // oracle stays scratch-free (the q147 derive-from-source rule).
   def zoneMaps(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"/tmp/graft_zone_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = graft.Scratch.dir("zone", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     try {
       Tables.orders(spark, dir)
@@ -1740,8 +1719,7 @@ object Advanced {
   // statistics). IncrementalOpsSpec asserts the law directly:
   // incremental stats == full per-file recompute.
   def incrementalZoneMaps(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.Scratch.dir("inc_zone") + "_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = graft.Scratch.dir("inc_zone", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val orders = Tables.orders(spark, dir)
       .withColumn("bucket", pmod(col("o_orderkey"), lit(4L)))

@@ -482,8 +482,7 @@ object Curation {
   }
 
   def curatedWrite(spark: SparkSession, dir: String): DataFrame = {
-    val root = s"/tmp/graft_curated_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    val root = graft.Scratch.dir("curated", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     try {
       val packed = packedCurated(Tables.documents(spark, dir))

@@ -327,10 +327,14 @@ object Golden {
     val Seq(tfStem, revStem, topStem, tpsStem, m2Stem, m60Stem) =
       ReferenceSqlStems
     val fx = GoldenFixture.generate(FixtureDir)
-    loadTransactions(spark, fx).createOrReplaceTempView("transactions")
-    loadProducts(spark, fx).createOrReplaceTempView("product")
+    // the files name their tables; the views live on a child session,
+    // so the caller's session keeps its own
+    val views = graft.Session.child(spark)
+    graft.Tables.registerAll(Seq(
+      "transactions" -> loadTransactions(views, fx),
+      "product" -> loadProducts(views, fx)))
     def raw(stem: String): DataFrame =
-      graft.sql.QueryRunner.runFile(spark, s"$ReferenceSqlDir/$stem.sql")
+      graft.sql.QueryRunner.runFile(views, s"$ReferenceSqlDir/$stem.sql")
     def epochDay(c: org.apache.spark.sql.Column) =
       datediff(c, lit("1970-01-01")).cast("double")
     val tf = raw(tfStem).select(

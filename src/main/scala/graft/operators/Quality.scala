@@ -794,11 +794,9 @@ object Quality {
         .otherwise(regexp_replace(
           col("l_extendedprice").cast(DecimalType(18, 2)).cast("string"),
           "\\.", ",")).as("PRICE"))
-    // per-session scratch (applicationId): concurrent sessions on the
-    // same dataset must not race on the overwrite; summary materialized
-    // so the scratch CSVs can be deleted before returning
-    val tmp = s"/tmp/graft_csv_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    // summary materialized so the scratch CSVs can be deleted before
+    // returning
+    val tmp = graft.Scratch.dir("csv", dir)
     CsvSource.write(base.filter(col("LINENUMBER") <= 3), s"$tmp/a")
     CsvSource.write(base.filter(col("LINENUMBER") > 3).drop("QTY"), s"$tmp/b")
     val target = StructType(Seq(

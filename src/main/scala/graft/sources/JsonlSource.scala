@@ -137,11 +137,9 @@ object JsonlSource {
     import org.apache.spark.sql.functions._
     val docs = graft.Tables.documents(spark, dir)
       .select("doc_id", "lang", "text")
-    // per-session scratch (applicationId): concurrent sessions must not
-    // race; the aggregate is materialized so scratch can be deleted
-    // before returning
-    val tmp = s"/tmp/graft_jsonl_rt_${spark.sparkContext.applicationId}_" +
-      dir.replaceAll("[^0-9a-zA-Z]", "_")
+    // the aggregate is materialized so scratch can be deleted before
+    // returning
+    val tmp = graft.Scratch.dir("jsonl_rt", dir)
     docs.write.mode("overwrite").json(s"$tmp/good")
     spark.range(NCorrupt)
       .select(concat(lit("{\"doc_id\":"), col("id"), lit(",\"lang\":"))

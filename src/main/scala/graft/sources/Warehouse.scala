@@ -22,13 +22,11 @@ object Warehouse {
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String],
                        sortCol: Option[String] = None): Unit = {
-    // FULL-load semantics: truncate explicitly (the session runs with
-    // partitionOverwriteMode=dynamic — see Session.tune — under which
-    // a bare overwrite would leave partitions absent from `df` behind);
-    // the partition-level restate path is Advanced.dpoCorrection
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    // FULL-load semantics: a static overwrite replaces the whole path,
+    // whatever the session's mode; the partition-level restate path is
+    // Advanced.dpoCorrection
     val sorted = sortCol.map(c => df.sortWithinPartitions(c)).getOrElse(df)
-    sorted.write.mode("overwrite")
+    sorted.write.mode("overwrite").option("partitionOverwriteMode", "static")
       .partitionBy(partitionCols: _*)
       .parquet(path)
   }
@@ -73,14 +71,12 @@ object Warehouse {
     * clustering by cell bounds output at one file per cell — the
     * standard small-files discipline for partitioned lake layouts. */
   def writeIvfLayout(assigned: DataFrame, path: String): Unit = {
-    // FULL-rebuild semantics: under the session-wide dynamic
-    // partition-overwrite invariant (Session.tune) a partitioned
-    // overwrite only replaces the partitions present in the data, so a
-    // rebuild with FEWER cells than a previous layout at the same path
-    // would leave stale cell directories behind — truncate explicitly
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+    // FULL-rebuild semantics: a static overwrite replaces the whole
+    // path, so a rebuild with FEWER cells than a previous layout at the
+    // same path leaves no stale cell directory behind
     assigned.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(path)
+      .write.mode("overwrite").option("partitionOverwriteMode", "static")
+      .partitionBy("cell").parquet(path)
   }
 
   /** Frozen-quantizer incremental add: append newly-assigned vectors

@@ -40,53 +40,19 @@ object QueryRunner {
     name.flatMap(reg.get).orElse(reg.toSeq.sortBy(_._1).headOption.map(_._2))
   }
 
-  /** Built-in queries shipped with the engine (Spark SQL dialect),
-    * keyed by the reference query they re-express. */
-  val builtins: Map[String, String] = Map(
-    "total_margin_signature_last_2_months" ->
-      """WITH anchor AS (
-        |  SELECT CAST(date_trunc('month', MAX(l_shipdate)) AS DATE) AS anchor_month FROM lineitem
-        |), w AS (
-        |  SELECT add_months(anchor_month, -1) AS start_date,
-        |         add_months(anchor_month, 1) AS end_exclusive
-        |  FROM anchor
-        |)
-        |SELECT CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |         - p_retailprice * l_quantity * 0.8 AS DECIMAL(18,4))) AS DOUBLE)
-        |       AS total_margin_last_2_months
-        |FROM lineitem JOIN part ON p_partkey = l_partkey JOIN w ON TRUE
-        |WHERE p_size >= 25
-        |  AND CAST(l_shipdate AS DATE) >= w.start_date
-        |  AND CAST(l_shipdate AS DATE) <  w.end_exclusive""".stripMargin,
-    "total_margin_signature_last_2_months_in_days" ->
-      """SELECT COALESCE(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount)
-        |         - p_retailprice * l_quantity * 0.8 AS DECIMAL(18,4))) AS DOUBLE), 0.0)
-        |       AS total_margin_last_60_days
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_size >= 25
-        |  AND CAST(l_shipdate AS DATE)
-        |      BETWEEN ((SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem) - INTERVAL 60 DAY)
-        |          AND  (SELECT MAX(CAST(l_shipdate AS DATE)) FROM lineitem)""".stripMargin,
-    "number_transactions_per_store" ->
-      """SELECT l_suppkey,
-        |       COUNT(DISTINCT l_orderkey) AS number_distinct_of_transactions,
-        |       COUNT(l_orderkey) AS number_of_transactions
-        |FROM lineitem GROUP BY 1
-        |ORDER BY number_of_transactions DESC, l_suppkey ASC""".stripMargin,
-    "revenue_split_per_day" ->
-      """SELECT CAST(l_shipdate AS DATE) AS sale_date,
-        |       CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE)
-        |       AS total_revenue
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-    "top_10_products_units_sold" ->
-      """SELECT l_partkey,
-        |       CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) AS total_units_sold
-        |FROM lineitem GROUP BY 1
-        |ORDER BY total_units_sold DESC, l_partkey ASC LIMIT 10""".stripMargin,
-    "transactions_timeframe" ->
-      """SELECT MAX(CAST(l_shipdate AS DATE)) AS last_transaction_date,
-        |       MIN(CAST(l_shipdate AS DATE)) AS first_transaction_date
-        |FROM lineitem""".stripMargin)
+  /** Built-in queries shipped with the engine, keyed by the reference
+    * query they re-express: the reference questions' SQL texts, which
+    * Spark runs as written and the DuckDB oracle checks q1-q6 with. */
+  val builtins: Map[String, String] = {
+    import graft.operators.Retail
+    Map(
+      "total_margin_signature_last_2_months" -> Retail.totalMarginLast2MonthsSql,
+      "total_margin_signature_last_2_months_in_days" -> Retail.totalMarginLast60DaysSql,
+      "number_transactions_per_store" -> Retail.transactionsPerStoreSql,
+      "revenue_split_per_day" -> Retail.revenuePerDaySql,
+      "top_10_products_units_sold" -> Retail.top10ProductsSql,
+      "transactions_timeframe" -> Retail.timeframeSql)
+  }
 }
 
 /** CLI: --list | --path <file.sql> | --name <q> | --sql "<text>"

@@ -31,24 +31,15 @@ object StreamOps {
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Run `f` against a CLONED session (shared SparkContext, private
-    * SQLConf) whose streaming state store is `provider`. A clone —
-    * not set/restore on the caller's conf — because the provider is
-    * read at query START: a restore racing another session thread's
-    * query start (Verify's concurrent query pool) would flip that
-    * query's store mid-flight. The parent's runtime SQL conf is copied
-    * first so the clone plans identically (shuffle partitions,
-    * nanosAsLong, ...); static/non-settable keys are skipped. */
+  /** Run `f` against a child session (`Session.child`) whose
+    * streaming state store is `provider`. A child — not set/restore on
+    * the caller's conf — because the provider is read at query START: a
+    * restore racing another session thread's query start (Verify's
+    * concurrent query pool) would flip that query's store mid-flight. */
   def withStateStore[T](spark: SparkSession, provider: String)(
-      f: SparkSession => T): T = {
-    val s2 = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try s2.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    s2.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
-    f(s2)
-  }
+      f: SparkSession => T): T =
+    f(graft.Session.child(spark,
+      "spark.sql.streaming.stateStore.providerClass" -> provider))
 
   /** State-store count from estimated STATE SIZE, not session
     * parallelism (round-13 verdict #4). Every microbatch commits one
@@ -152,8 +143,8 @@ object StreamOps {
       autoStatePartitions(spark,
         math.ceil(p.numRowsTotal * growthMargin).toLong, rowsPerStore))
 
-  /** Run `f` against a CLONED session whose shuffle-partition count is
-    * `n` — the scoped form of the state-store dial. A clone, not
+  /** Run `f` against a child session whose shuffle-partition count is
+    * `n` — the scoped form of the state-store dial. A child, not
     * set/restore on the caller's conf, for the same reason as
     * [[withStateStore]]: a restore racing another session thread's
     * query start (Verify's concurrent pool) would flip that query's
@@ -162,15 +153,8 @@ object StreamOps {
     * partitions — fine for sink-side reductions, which are bounded by
     * the stream's OUTPUT, not its input. */
   def withShufflePartitions[T](spark: SparkSession, n: Int)(
-      f: SparkSession => T): T = {
-    val s2 = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try s2.conf.set(k, v)
-      catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    s2.conf.set("spark.sql.shuffle.partitions", n.toString)
-    f(s2)
-  }
+      f: SparkSession => T): T =
+    f(graft.Session.child(spark, "spark.sql.shuffle.partitions" -> n.toString))
 
   /** One stateful operator's progress in one microbatch — the
     * state-size evidence row behind the RocksDB parity lanes. */
@@ -193,20 +177,12 @@ object StreamOps {
     prefix + math.abs(dir.hashCode).toString + "_" +
       queryCounter.incrementAndGet().toString
 
-  /** Ensure `spark.sql.legacy.parquet.nanosAsLong=true` for `f` — the
-    * testdata events file carries TIMESTAMP(NANOS). Deliberately NO
-    * restore: the flag is a session-wide invariant (Session.tune sets
-    * it too), and a set/try/restore here would race across Verify's
-    * concurrent query pool — one query's restore can unset the flag
-    * while another query's microbatch is mid-plan. */
-  private def withNanosAsLong[T](spark: SparkSession)(f: => T): T = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    f
-  }
-
-  /** Drain a bounded stream through a memory sink and return the sink
-    * table; the per-run checkpoint temp dir is deleted afterwards (a
-    * leaked dir per call adds up over a long-lived driver). */
+  /** Drain a bounded stream through a memory sink and return its rows
+    * as a local frame. The sink already holds every row on the driver;
+    * the frame owns them, so the sink's temp view is dropped and the
+    * session is left as it was. The per-run checkpoint temp dir is
+    * deleted too (a leaked dir per call adds up over a long-lived
+    * driver). */
   private def drain(df: DataFrame, queryName: String,
                     mode: String): DataFrame = {
     val spark = df.sparkSession
@@ -233,14 +209,16 @@ object StreamOps {
       q.stop()
       org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
     }
-    spark.table(queryName)
+    val sink = spark.table(queryName)
+    val rows = sink.collect()
+    spark.catalog.dropTempView(queryName)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), sink.schema)
   }
 
   /** Hourly tumbling-window counts + exact value sums over the events
     * stream, executed with the AvailableNow-style drain (memory sink)
     * so a bounded parquet replay terminates. */
-  def hourlyEventRollup(spark: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(spark) {
+  def hourlyEventRollup(spark: SparkSession, dir: String): DataFrame = {
     // Static schema probe (cheap; metadata only) so readStream needs no
     // inference. ts arrives as LongType nanos (TIMESTAMP(NANOS) parquet).
     val fileSchema: StructType =
@@ -277,8 +255,7 @@ object StreamOps {
     * exactness discipline as the batch lane: untouched input doubles
     * for O/H/L/C, DECIMAL(18,4) for volume. Oracle = the batch SQL —
     * a drained bounded replay must equal the batch bar table exactly. */
-  def streamOhlcBars(spark: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(spark) {
+  def streamOhlcBars(spark: SparkSession, dir: String): DataFrame = {
     val fileSchema: StructType =
       spark.read.parquet(s"$dir/events.parquet").schema
     val queryName = freshName("graft_ohlc_", dir)
@@ -351,8 +328,7 @@ object StreamOps {
     * groupBy at 100 TB/day. Downstream, a per-type count must equal the
     * batch count over the original (un-doubled) events — the q42
     * oracle. */
-  def streamingDedup(spark: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(spark) {
+  def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
     val fileSchema: StructType =
       spark.read.parquet(s"$dir/events.parquet").schema
     val queryName = freshName("graft_dedup_", dir)
@@ -391,8 +367,7 @@ object StreamOps {
     * equals the batch GROUP BY for ANY ttl — eviction never trades
     * correctness, only state size. */
   def statefulUserTotals(spark: SparkSession, dir: String,
-                         ttlUs: Long = 3600L * 1000000L): DataFrame =
-    withNanosAsLong(spark) {
+                         ttlUs: Long = 3600L * 1000000L): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
     val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
@@ -548,8 +523,7 @@ object StreamOps {
   /** [[sessionStatsFrom]] over the testdata events file — the q101
     * oracle entry (same oracle as the batch q29). */
   def streamingSessionStats(spark: SparkSession, dir: String,
-                            gapUs: Long): DataFrame =
-    withNanosAsLong(spark) {
+                            gapUs: Long): DataFrame = {
     val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
     val queryName = freshName("graft_sess_", dir)
     val raw = spark.readStream.schema(fileSchema)
@@ -575,8 +549,7 @@ object StreamOps {
     * state per side is the in-window rows of its stream — the exact
     * quantity the watermark evicts. */
   def streamStreamAttribution(spark: SparkSession, dir: String,
-                              windowUs: Long = 3600L * 1000000L): DataFrame =
-    withNanosAsLong(spark) {
+                              windowUs: Long = 3600L * 1000000L): DataFrame = {
     val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
     val queryName = freshName("graft_ss_join_", dir)
     val tsUs =
@@ -637,13 +610,9 @@ object StreamOps {
     * StreamJoinSpec can re-invoke a batch and prove the replay is a
     * no-op. */
   def epochUpsert(path: String)(batch: DataFrame, batchId: Long): Unit = {
-    // dynamic overwrite is a session-wide invariant (Session.tune); set
-    // idempotently, never restored — a restore would race with other
-    // concurrently-executing partitioned writes on the shared session
-    batch.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     batch.withColumn("epoch_id", lit(batchId))
-      .write.mode("overwrite").partitionBy("epoch_id").parquet(path)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("epoch_id").parquet(path)
   }
 
   /** Drain `src` through the exactly-once epoch sink into `path`. */
@@ -1025,8 +994,7 @@ object StreamOps {
     * crash-recovery contract: state store + source offsets + sink log
     * all resume from the same WAL, so a restart is invisible in the
     * output. */
-  def streamRestartDedup(spark: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(spark) {
+  def streamRestartDedup(spark: SparkSession, dir: String): DataFrame = {
     val root = graft.Scratch.dir("restart_" + math.abs(dir.hashCode))
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
     val in = s"$root/in"
@@ -1067,8 +1035,7 @@ object StreamOps {
       |       CAST(SUM(n_chars) AS BIGINT) AS sum_chars
       |FROM documents""".stripMargin
 
-  def streamLateData(spark: SparkSession, dir: String): DataFrame =
-    withNanosAsLong(spark) {
+  def streamLateData(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{StructType, StructField, LongType, TimestampType}
     val path = graft.Scratch.dir("late_fixture_" + math.abs(dir.hashCode))
     val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema

@@ -25,7 +25,12 @@ import scala.concurrent.{Await, ExecutionContext, Future}
   * in its own test, guarded by the presence of that directory exactly
   * like SqlDialectSpec and TimeTypeSpec; the batches run every other
   * query. Batch names are computed over ALL query names (q310
-  * included), so they stay stable whether or not the files exist. */
+  * included), so they stay stable whether or not the files exist.
+  *
+  * Every batch and the q310 test also check that the queries left the
+  * shared session as they found it: the same conf and the same temp
+  * views. A builder that needs its own views or conf takes a
+  * `Session.child`. */
 class QueriesSmokeSpec extends SparkSpec {
 
   test("entry returns rows") {
@@ -46,6 +51,26 @@ class QueriesSmokeSpec extends SparkSpec {
   private val batches = allNames.grouped(40).toSeq
   private val referenceSqlQuery = "q310_verbatim_ref_sql"
 
+  /** The shared session's conf and temp-view names. */
+  private def sessionState(): (Map[String, String], Set[String]) =
+    (spark.conf.getAll,
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet)
+
+  /** Runs `body`, then fails naming each conf key and temp view that
+    * differs from before it. */
+  private def assertSessionUnchanged(body: => Unit): Unit = {
+    val (conf0, views0) = sessionState()
+    body
+    val (conf1, views1) = sessionState()
+    val keys = (conf0.keySet ++ conf1.keySet).toSeq.sorted
+      .filter(k => conf0.get(k) != conf1.get(k))
+      .map(k => s"$k: ${conf0.getOrElse(k, "<unset>")} -> ${conf1.getOrElse(k, "<unset>")}")
+    val views = ((views0 diff views1) ++ (views1 diff views0)).toSeq.sorted
+    assert(keys.isEmpty && views.isEmpty,
+      s"queries changed the shared session: conf [${keys.mkString(", ")}]; " +
+        s"temp views added or dropped [${views.mkString(", ")}]")
+  }
+
   /** None when `name` yields columns and materializes (it may have 0
     * rows at tiny sf); else the failure, labelled with the name. */
   private def smokeFailure(name: String): Option[String] =
@@ -65,7 +90,7 @@ class QueriesSmokeSpec extends SparkSpec {
       "queries, 8-way)") {
       val pool = Executors.newFixedThreadPool(8)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
+      try assertSessionUnchanged {
         val futures = batch.filterNot(_ == referenceSqlQuery)
           .map(name => Future(smokeFailure(name)))
         val failures =
@@ -79,6 +104,6 @@ class QueriesSmokeSpec extends SparkSpec {
       "reference SQL files)") {
     assume(Files.isDirectory(Paths.get(Golden.ReferenceSqlDir)),
       s"no reference SQL directory at ${Golden.ReferenceSqlDir}")
-    smokeFailure(referenceSqlQuery).foreach(fail(_))
+    assertSessionUnchanged(smokeFailure(referenceSqlQuery).foreach(fail(_)))
   }
 }

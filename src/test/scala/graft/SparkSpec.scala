@@ -3,15 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (one JVM, one session). */
+/** Shared local session for all suites (one JVM, one session): graft's
+  * own session conf, sized for tests. */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = Session.builder("graft-test")
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")

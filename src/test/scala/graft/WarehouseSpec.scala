@@ -18,6 +18,23 @@ class WarehouseSpec extends SparkSpec {
       li.filter(date_format(col("l_shipdate"), "yyyy-MM") === "2001-06").count())
   }
 
+  test("full-load write replaces the whole path, even on a dynamic-mode session") {
+    val dynamic = Session.child(spark,
+      "spark.sql.sources.partitionOverwriteMode" -> "dynamic")
+    val li = Tables.lineitem(dynamic, sf)
+    val path = Scratch.dir("wh_full_load_spec")
+    def months: Set[String] = Warehouse.read(spark, path)
+      .select("sale_month").distinct().collect().map(_.getString(0)).toSet
+    try {
+      Warehouse.writeMonthlyTransactions(li, path)
+      val last = months.max
+      assert(months.size > 1)
+      Warehouse.writeMonthlyTransactions(
+        li.filter(date_format(col("l_shipdate"), "yyyy-MM") === last), path)
+      assert(months === Set(last))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
+  }
+
   test("bucketed tables join without any shuffle (co-located join)") {
     val li = Tables.lineitem(spark, sf)
       .select("l_orderkey", "l_partkey", "l_quantity")
