@@ -73,7 +73,7 @@ final class Inputs(val spark: SparkSession, val sfDir: String,
     cut(ScaleBench.pageRankEdges(spark, sfDir, times))(_.prEdges().limit(256)))
   // the lineitem metadata digest the q146 registry default keys its
   // catalog version on
-  lazy val prFp: String = operators.Graph.dirFingerprint(s"$sfDir/lineitem.parquet")
+  lazy val prFp: String = Tables.dirFingerprint(s"$sfDir/lineitem.parquet")
   // the default lane's standing layout; the slice's is its own family, so
   // a limited-edge layout is never served to the timed reps
   val prStanding: () => Unit = once {

@@ -677,7 +677,7 @@ object Advanced {
     import graft.streaming.StreamOps
     val out = graft.Scratch.dir("epoch", dir)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = Tables.fileSchema(spark, dir, "events")
     val src = spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)

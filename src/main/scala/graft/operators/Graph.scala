@@ -811,25 +811,9 @@ object Graph {
     // the measured bench lanes run the same sizing, so the default
     // path and its artifact numbers are one configuration
     val t = pageRankStandingLayout(spark, pageRankEdges(spark, dir),
-      family = "pr_q146", fp = dirFingerprint(s"$dir/lineitem.parquet"))
+      family = "pr_q146", fp = Tables.dirFingerprint(s"$dir/lineitem.parquet"))
     val ranks = pageRankOnBucketed(spark, t).localCheckpoint(true)
     ranks.orderBy(col("r").desc, col("node").asc).limit(20)
-  }
-
-  /** Driver-side metadata fingerprint of an input path: file names,
-    * lengths and mtimes folded into one hex digest — the manifest-style
-    * "did the source change" signal (a LIST call at 100 TB, never a
-    * data scan). Stable across processes for unchanged data. */
-  def dirFingerprint(path: String): String = {
-    def walk(f: java.io.File): Seq[String] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).sortBy(_.getName)
-          .toSeq.flatMap(walk)
-      else Seq(s"${f.getName}:${f.length()}:${f.lastModified()}")
-    val md = java.security.MessageDigest.getInstance("SHA-1")
-    walk(new java.io.File(path)).foreach(s =>
-      md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-    md.digest().take(8).map("%02x".format(_)).mkString
   }
 
   // Families this JVM registered standing layouts under, so bench
@@ -1027,7 +1011,7 @@ object Graph {
     * concurrently by Verify's query pool every round. */
   def pageRankBucketed(spark: SparkSession, dir: String): DataFrame = {
     val t = pageRankStandingLayout(spark, pageRankEdges(spark, dir),
-      family = "pr_q146", fp = dirFingerprint(s"$dir/lineitem.parquet"))
+      family = "pr_q146", fp = Tables.dirFingerprint(s"$dir/lineitem.parquet"))
     val ranks = pageRankOnBucketed(spark, t).localCheckpoint(true)
     ranks.orderBy(col("r").desc, col("node").asc).limit(20)
   }

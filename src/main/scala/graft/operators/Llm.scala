@@ -251,7 +251,7 @@ object Llm {
     val fam = "lsh_q311"
     val v = Dedup.lshIndexGetOrPublish(spark,
       Tables.documents(spark, dir), "doc_id", "text", fam,
-      fp = Graph.dirFingerprint(s"$dir/documents.parquet"), n = 3)
+      fp = Tables.dirFingerprint(s"$dir/documents.parquet"), n = 3)
     graft.sources.IndexCatalog.vacuum(spark, fam)
     Dedup.minhashLshPairsFromCatalog(spark, fam, numHashes = NumHashes,
         bands = Bands, threshold = 0.5, version = v)
@@ -271,7 +271,7 @@ object Llm {
                            family: String): Int =
     Dedup.lshIndexGetOrPublish(spark,
       Tables.documents(spark, dir), "doc_id", "text", family,
-      fp = Graph.dirFingerprint(s"$dir/documents.parquet"), n = 3)
+      fp = Tables.dirFingerprint(s"$dir/documents.parquet"), n = 3)
 
   def minhashLshServed(spark: SparkSession, family: String,
                        version: Int): DataFrame =
@@ -613,7 +613,7 @@ object Llm {
     val docs = Tables.documents(spark, dir)
     val tag = math.abs(dir.hashCode).toString
     val idxPath = graft.Scratch.dir(s"incc_idx_$tag")
-    val fileSchema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val fileSchema = Tables.fileSchema(spark, dir, "documents")
     val src = spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
@@ -1499,7 +1499,7 @@ object Llm {
     val idxPath = graft.Scratch.dir(s"xcorpus_idx_$tag")
     StreamOps.writeNearDupIndex(docs.filter(col("doc_id") < 250),
       "doc_id", "text", idxPath, n = 3, numHashes = NumHashes, bands = Bands)
-    val fileSchema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val fileSchema = Tables.fileSchema(spark, dir, "documents")
     val src = spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
@@ -1616,7 +1616,7 @@ object Llm {
     val fam = "srp_q24"
     val v = Similarity.srpIndexGetOrPublish(spark,
       Tables.embeddings(spark, dir), fam,
-      fp = Graph.dirFingerprint(s"$dir/embeddings.parquet"),
+      fp = Tables.dirFingerprint(s"$dir/embeddings.parquet"),
       bands = NdBands, bits = NdBits, dim = 64)
     graft.sources.IndexCatalog.vacuum(spark, fam)
     Similarity.srpPairsFromCatalog(spark, fam, threshold = 0.4, version = v)
@@ -2043,7 +2043,7 @@ object Llm {
     val fam = "ivf_q34"
     val emb = Tables.embeddings(spark, dir)
     val v = Similarity.ivfIndexGetOrPublish(spark, emb, fam,
-      fp = Graph.dirFingerprint(s"$dir/embeddings.parquet"), nCells = 16)
+      fp = Tables.dirFingerprint(s"$dir/embeddings.parquet"), nCells = 16)
     graft.sources.IndexCatalog.vacuum(spark, fam)
     Similarity.ivfTopKFromCatalog(spark, fam,
         emb.filter(col("vec_id") < 10), k = 5, nProbe = 4, version = v)

@@ -219,10 +219,9 @@ object StreamOps {
     * stream, executed with the AvailableNow-style drain (memory sink)
     * so a bounded parquet replay terminates. */
   def hourlyEventRollup(spark: SparkSession, dir: String): DataFrame = {
-    // Static schema probe (cheap; metadata only) so readStream needs no
-    // inference. ts arrives as LongType nanos (TIMESTAMP(NANOS) parquet).
-    val fileSchema: StructType =
-      spark.read.parquet(s"$dir/events.parquet").schema
+    // The file schema, resolved once per session, so readStream needs no
+    // inference; tsTimestamp normalises whichever ts flavor it holds.
+    val fileSchema: StructType = graft.Tables.fileSchema(spark, dir, "events")
     val queryName = freshName("graft_stream_", dir)
 
     val tsCol =
@@ -256,8 +255,7 @@ object StreamOps {
     * for O/H/L/C, DECIMAL(18,4) for volume. Oracle = the batch SQL —
     * a drained bounded replay must equal the batch bar table exactly. */
   def streamOhlcBars(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema: StructType =
-      spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema: StructType = graft.Tables.fileSchema(spark, dir, "events")
     val queryName = freshName("graft_ohlc_", dir)
     val tsCol = graft.Tables.tsTimestamp(fileSchema("ts").dataType)
     val stream = spark.readStream.schema(fileSchema)
@@ -296,8 +294,7 @@ object StreamOps {
     * union multiplies the stream by d=4, but each projection is a
     * codegen'd md5+mod — no state until the single bounded aggregate. */
   def streamCmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema: StructType =
-      spark.read.parquet(s"$dir/documents.parquet").schema
+    val fileSchema: StructType = graft.Tables.fileSchema(spark, dir, "documents")
     val queryName = freshName("graft_cms_", dir)
     val toks = spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "documents.parquet")
@@ -329,8 +326,7 @@ object StreamOps {
     * batch count over the original (un-doubled) events — the q42
     * oracle. */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema: StructType =
-      spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema: StructType = graft.Tables.fileSchema(spark, dir, "events")
     val queryName = freshName("graft_dedup_", dir)
 
     def src: DataFrame = {
@@ -370,7 +366,7 @@ object StreamOps {
                          ttlUs: Long = 3600L * 1000000L): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = graft.Tables.fileSchema(spark, dir, "events")
     val queryName = freshName("graft_state_", dir)
     val tsUs =
       graft.Tables.tsMicros(fileSchema("ts").dataType)
@@ -524,7 +520,7 @@ object StreamOps {
     * oracle entry (same oracle as the batch q29). */
   def streamingSessionStats(spark: SparkSession, dir: String,
                             gapUs: Long): DataFrame = {
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = graft.Tables.fileSchema(spark, dir, "events")
     val queryName = freshName("graft_sess_", dir)
     val raw = spark.readStream.schema(fileSchema)
       .option("pathGlobFilter", "events.parquet")
@@ -550,7 +546,7 @@ object StreamOps {
     * quantity the watermark evicts. */
   def streamStreamAttribution(spark: SparkSession, dir: String,
                               windowUs: Long = 3600L * 1000000L): DataFrame = {
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val fileSchema = graft.Tables.fileSchema(spark, dir, "events")
     val queryName = freshName("graft_ss_join_", dir)
     val tsUs =
       graft.Tables.tsMicros(fileSchema("ts").dataType)
@@ -653,8 +649,7 @@ object StreamOps {
   def streamingNearDupCandidates(spark: SparkSession, dir: String,
                                  n: Int = 3, numHashes: Int = 12,
                                  bands: Int = 4): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val fileSchema = docs.schema
+    val fileSchema = graft.Tables.fileSchema(spark, dir, "documents")
     // state-store count sized to the pipeline's state law (≤ docs ×
     // bands live bucket entries), not session parallelism — the
     // round-13 verdict-#4 default. The row term is ESTIMATED from file
@@ -1038,10 +1033,8 @@ object StreamOps {
   def streamLateData(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.{StructType, StructField, LongType, TimestampType}
     val path = graft.Scratch.dir("late_fixture_" + math.abs(dir.hashCode))
-    val fileSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    val tsCol = graft.Tables.tsTimestamp(fileSchema("ts").dataType)
-    val base = spark.read.parquet(s"$dir/events.parquet")
-      .select(col("event_id"), tsCol.as("ts_utc"))
+    val base = graft.Tables.events(spark, dir)
+      .select(col("event_id"), col("ts").as("ts_utc"))
       .withColumn("b", pmod(col("event_id"), lit(3L)))
     for (k <- 0L to 2L) {
       val sub = s"$path/b$k"

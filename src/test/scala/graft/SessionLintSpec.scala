@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * session, and a builder that needs views or conf overrides takes a
   * `Session.child`. This spec scans the builder sources and fails, by
   * file:line, on the three ways a builder used to change or depend on
-  * shared state:
+  * shared state, and on one way it used to skip `Tables`:
   *
   *  - `conf.set(`: a per-call conf write races any query running
   *    concurrently on the same session (Verify's pool) and outlives the
@@ -18,6 +18,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *    through `Tables.registerAll`.
   *  - a `"/tmp/` literal: scratch that is neither per-process nor swept.
   *    Use `Scratch.dir(base, dataDir)`.
+  *  - `read.parquet(s"$dir/`: a star-schema table read around `Tables`
+  *    infers its schema with a Spark job on every call. Use
+  *    `Tables.load`, or `Tables.fileSchema` for a stream's schema.
   *
   * Comment lines are not code and are skipped. */
 class SessionLintSpec extends AnyFunSuite {
@@ -37,7 +40,8 @@ class SessionLintSpec extends AnyFunSuite {
   private val rules: Seq[(String, scala.util.matching.Regex)] = Seq(
     "conf.set" -> """\bconf\s*\.\s*set\(""".r,
     "temp view" -> """\bcreate(OrReplace)?(Global)?TempView\b""".r,
-    "/tmp literal" -> """"/tmp/""".r)
+    "/tmp literal" -> """"/tmp/""".r,
+    "star-schema read" -> """read\s*\.\s*parquet\(\s*s"\$\{?dir\}?/""".r)
 
   private case class Site(file: String, line: Int, rule: String, text: String)
 
@@ -89,7 +93,8 @@ class SessionLintSpec extends AnyFunSuite {
       "\nFix: a write mode goes in .option(...) on the write; a conf " +
         "override or a view goes on graft.Session.child(spark, ...), views " +
         "through Tables.registerAll; scratch goes in " +
-        "graft.Scratch.dir(base, dataDir)."))
+        "graft.Scratch.dir(base, dataDir); a testdata table is read with " +
+        "Tables.load, its stream schema taken from Tables.fileSchema."))
   }
 
   test("self-test: each rule catches its synthetic site; comments do not count") {
@@ -100,12 +105,13 @@ class SessionLintSpec extends AnyFunSuite {
       "    df.createOrReplaceTempView(\"lineitem\")",
       "    df.createTempView(\"lineitem\")",
       "    val tmp = s\"/tmp/graft_x_${dir}\"",
+      "    val fileSchema = spark.read.parquet(s\"$dir/events.parquet\").schema",
       "    // spark.conf.set(\"k\", \"v\") in a comment",
       "    * df.createOrReplaceTempView(\"v\") in a doc comment")
     val sites = scanText("Synthetic.scala", bad)
     assert(sites.map(s => (s.line, s.rule)) === Seq(
       1 -> "conf.set", 3 -> "conf.set", 4 -> "temp view", 5 -> "temp view",
-      6 -> "/tmp literal"))
+      6 -> "/tmp literal", 7 -> "star-schema read"))
   }
 
   test("the allowed list carries no dead entries") {
