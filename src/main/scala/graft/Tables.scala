@@ -2,17 +2,9 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
-import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
-
-import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated testdata star schema
   * (`/root/testdata/sf*`, see TESTDATA.md). One parquet file per table.
@@ -21,17 +13,14 @@ import scala.util.control.NonFatal
   * loader is the single seam where that swap happens (path -> catalog
   * name), so every operator above it is storage-agnostic.
   *
-  * Table metadata is resolved once per session, the way a catalog
-  * resolves a table name. What is memoised, per `SparkSession` (held
-  * weakly, so a `Session.child` resolves on its own and a dropped
-  * session takes its entries with it):
-  *
-  *  - a table's file schema, keyed by its path and the path's
-  *    [[dirFingerprint]]: a rewritten file is a new identity and is
-  *    inferred again. Inference is a Spark job that reads a footer;
-  *    reading with the memoised schema skips it.
-  *  - a data file's parquet row-group count, keyed by the file's path,
-  *    length and mtime, for [[fanOut]].
+  * A table's schema is resolved once per session, the way a catalog
+  * resolves a table name. The memo holds one thing: a table's file
+  * schema, per `SparkSession` (held weakly, so a `Session.child`
+  * resolves on its own and a dropped session takes its entries with
+  * it), keyed by the table's path and the path's [[dirFingerprint]]: a
+  * rewritten file is a new identity and is inferred again. Inference
+  * is a Spark job that reads a footer; reading with the memoised
+  * schema skips it.
   *
   * Nothing else is kept. Every [[load]] builds a new relation (fresh
   * expression ids, a fresh file listing), so no relation, plan or
@@ -43,15 +32,12 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  private final class Resolved {
-    val schemas = new ConcurrentHashMap[String, (String, StructType)]()
-    val rowGroups = new ConcurrentHashMap[(String, Long, Long), Integer]()
-  }
+  /** Per session: table path -> (its [[dirFingerprint]], its file schema). */
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (String, StructType)]]()
 
-  private val resolved = new java.util.WeakHashMap[SparkSession, Resolved]()
-
-  private def resolvedFor(spark: SparkSession): Resolved =
-    resolved.synchronized(resolved.computeIfAbsent(spark, _ => new Resolved))
+  private def schemasOf(spark: SparkSession): ConcurrentHashMap[String, (String, StructType)] =
+    schemas.synchronized(schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap))
 
   /** The table's schema as stored in its file (for events, before the
     * `ts` normalisation of [[events]]), inferred once per session and
@@ -60,7 +46,7 @@ object Tables {
   def fileSchema(spark: SparkSession, dir: String, name: String): StructType = {
     val path = s"$dir/$name.parquet"
     val fp = dirFingerprint(path)
-    resolvedFor(spark).schemas.compute(path, (_, known) =>
+    schemasOf(spark).compute(path, (_, known) =>
       if (known != null && known._1 == fp) known
       else (fp, spark.read.parquet(path).schema))._2
   }
@@ -139,22 +125,25 @@ object Tables {
     * cores the session has; measured on the sf0.1 headline block, the
     * scan stage was the serial bottleneck of q3/q4/q5/q17/q20.
     *
-    * When fewer of the scan's partitions read rows than
-    * `defaultParallelism` ([[busyPartitions]]), one shuffle of the
-    * (projected) input spreads the per-row work across every core:
-    * hash-partitioned on `keys` when given (choose the downstream
-    * aggregation keys so the exchange also satisfies the aggregate's
-    * distribution and no second full-size exchange is planned),
-    * round-robin otherwise. When the input already has enough busy
-    * splits — any real warehouse table — this is the identity: no
-    * exchange is added, so at 100 TB it never shuffles. The gate also
-    * tracks the core count, so lower-core runs fan out to
-    * proportionally fewer partitions. The rule is a count, not
-    * a byte threshold: skipping the fan-out for small files measured
-    * slower (q17 at sf0.1 0.495 → 0.746 s).
+    * When the planned scan has fewer partitions than
+    * `defaultParallelism`, one shuffle of the (projected) input spreads
+    * the per-row work across every core: hash-partitioned on `keys`
+    * when given (choose the downstream aggregation keys so the
+    * exchange also satisfies the aggregate's distribution and no second
+    * full-size exchange is planned), round-robin otherwise. When the
+    * input already has enough splits — any real warehouse table — this
+    * is the identity: no exchange is added, so at 100 TB it never
+    * shuffles. The gate also tracks the core count, so lower-core runs
+    * fan out to proportionally fewer partitions. The rule is a count,
+    * not a byte threshold: skipping the fan-out for small files
+    * measured slower (q17 at sf0.1 0.495 → 0.746 s). A one-row-group
+    * file cut into as many byte splits as there are cores passes the
+    * gate with one split reading rows (sf0.1 lineitem on 2 cores);
+    * capping the count by row groups measured no gain there (q3/q4/q5,
+    * 10 pairs).
     *
-    * Contract: call on a freshly scanned/projected frame (any other
-    * frame is planned for its partition count, and an exchange below
+    * Contract: call on a freshly scanned/projected frame (the
+    * partition probe plans the frame; anything with an exchange below
     * would be eagerly materialized by AQE), and project FIRST so the
     * one shuffle carries only the needed columns (guide §2.3).
     * Row-level results are unchanged: every caller aggregates with
@@ -162,58 +151,10 @@ object Tables {
     * re-sorts explicitly. */
   def fanOut(df: DataFrame, keys: Column*): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (busyPartitions(df) >= p) df
+    if (df.rdd.getNumPartitions >= p) df
     else if (keys.isEmpty) df.repartition(p)
     else df.repartition(p, keys: _*)
   }
-
-  /** How many of the frame's scan partitions read rows, from file
-    * metadata alone when the frame is a projected file scan. Spark's
-    * own split sizing (`FilePartition.maxSplitBytes`, `splitFiles`,
-    * `getFilePartitions`, as the file scan plans it) gives the
-    * partitions; a parquet file's splits past its row-group count read
-    * no rows (a row group is read by the one split holding its
-    * midpoint), so each file counts at most its row groups. Any other
-    * frame (a `range`, a bucketed or filtered scan) is planned for
-    * `rdd.getNumPartitions`. */
-  private def busyPartitions(df: DataFrame): Int =
-    fileScan(df.queryExecution.analyzed) match {
-      case Some(r) =>
-        val spark = r.sparkSession
-        val dirs = r.location.listFiles(Nil, Nil)
-        val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
-        val perFile = dirs.flatMap(d => d.files.map { f =>
-          val splits = PartitionedFileUtil.splitFiles(f, f.getPath,
-            r.fileFormat.isSplitable(spark, r.options, f.getPath), maxSplit, d.values)
-          (splits, math.min(splits.size, rowGroups(r, f)))
-        })
-        val splits = perFile.flatMap(_._1).sortBy(-_.length)
-        val partitions = FilePartition.getFilePartitions(spark, splits, maxSplit).size
-        math.min(partitions, perFile.map(_._2).sum)
-      case None => df.rdd.getNumPartitions
-    }
-
-  private def fileScan(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
-    case p: Project => fileScan(p.child)
-    case l: LogicalRelation => l.relation match {
-      case r: HadoopFsRelation if r.bucketSpec.isEmpty => Some(r)
-      case _ => None
-    }
-    case _ => None
-  }
-
-  /** A parquet file's row-group count, read from its footer once per
-    * session and file identity; unbounded for other formats, and for a
-    * footer that does not read (the scan itself reports that file). */
-  private def rowGroups(r: HadoopFsRelation, f: FileStatusWithMetadata): Int =
-    if (!r.fileFormat.isInstanceOf[ParquetFileFormat]) Int.MaxValue
-    else resolvedFor(r.sparkSession).rowGroups.computeIfAbsent(
-      (f.getPath.toString, f.getLen, f.getModificationTime), _ =>
-        try {
-          val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(
-            f.fileStatus, r.sparkSession.sparkContext.hadoopConfiguration))
-          try Int.box(reader.getRowGroups.size) finally reader.close()
-        } catch { case NonFatal(_) => Int.box(Int.MaxValue) })
 
   def lineitem(spark: SparkSession, dir: String): DataFrame   = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame     = load(spark, dir, "orders")

@@ -31,27 +31,6 @@ class FanOutSpec extends SparkSpec {
     assert(parts.forall(_.getLong(1) == 1L)) // each key in exactly one partition
   }
 
-  test("fanOut spreads a single-row-group file that Spark cuts into many byte splits") {
-    val bytes = new java.io.File(s"$sf/lineitem.parquet").length
-    val p = spark.sparkContext.defaultParallelism
-    val child = Session.child(spark, "spark.sql.files.maxPartitionBytes" -> (bytes / 4).toString)
-    val scan = Tables.lineitem(child, sf).select("l_partkey", "l_quantity")
-    assert(scan.rdd.getNumPartitions >= p) // byte splits alone pass a partition count
-    val busy = Tables.fanOut(scan).select(spark_partition_id()).distinct().count()
-    assert(busy == p)
-  }
-
-  test("fanOut counts a multi-file scan's partitions from its files as the scan plans them") {
-    val p = spark.sparkContext.defaultParallelism
-    Seq(3, 8, 16).foreach { n =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_fanout_").toString
-      spark.range(0, 1000, 1, n).write.mode("overwrite").parquet(dir)
-      val scan = spark.read.parquet(dir)
-      assert((Tables.fanOut(scan) eq scan) == (scan.rdd.getNumPartitions >= p), s"$n files")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    }
-  }
-
   test("langIdFrom over precomputed counts equals the inline langId") {
     import graft.functions.Text
     import spark.implicits._
