@@ -81,11 +81,6 @@ final class Inputs(val spark: SparkSession, val sfDir: String,
     onCleanup(operators.Graph.dropStandingLayouts(spark))
   }
   def prFamily: String = if (parent.isEmpty) "full" else "warm"
-  val prLayout: () => String = once {
-    val t = ScaleBench.pageRankBucketedLayout(spark, prEdges(), times)
-    onCleanup(spark.sql(s"DROP TABLE IF EXISTS $t"))
-    t
-  }
   // a row-limit slice of a symmetric edge set is no longer symmetric and
   // its peel can outrun the round budget: the slice warms on the full set
   val kcEdges: () => DataFrame =
@@ -103,17 +98,22 @@ final class Inputs(val spark: SparkSession, val sfDir: String,
     ScaleBench.streamIncCcPrep(spark, sfDir, times, s"$root/incc")
     s"$root/incc"
   }(_.inccPath()))
-  /** The durable lanes' pid-keyed index tables: a killed bench JVM's
-    * leftovers are swept first (an orphan directory fails the next
-    * saveAsTable's location check), and this run's dropped in cleanup. */
-  val durableTables: () => Unit = once(cut {
-    Seq("srp", "ivf").foreach(f => sources.Warehouse.sweepStaleIndexDirs(
-      spark, s"graft_${f}_bench_"))
-    val (srp, ivf) = (ScaleBench.benchTablePrefix("srp", times),
-      ScaleBench.benchTablePrefix("ivf", times))
-    onCleanup(Seq(s"${srp}_vecs", s"${srp}_bands", s"${ivf}_cents",
-      s"${ivf}_cells").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")))
-  }(_.durableTables()))
+  /** An index-catalog family for one durable lane at this factor,
+    * shared with the slice: a killed bench JVM's leftovers are dropped
+    * on first use, and this run's versions in cleanup. */
+  private def family(kind: String): () => String = once {
+    val f = s"${kind}_bench_x$times"
+    sources.IndexCatalog.dropFamily(spark, f)
+    onCleanup(sources.IndexCatalog.dropFamily(spark, f))
+    f
+  }
+  val srpFamily: () => String = cut(family("srp"))(_.srpFamily)
+  val ivfFamily: () => String = cut(family("ivf"))(_.ivfFamily)
+  val prBuildFamily: () => String = cut(family("pr_build"))(_.prBuildFamily)
+  val prLayoutFamily: () => String = cut(family("pr_layout"))(_.prLayoutFamily)
+  // q179's layout: 32 buckets, published once and pinned by every rep
+  val prLayoutVersion: () => Int = once(operators.Graph.pageRankLayoutPublish(
+    spark, prEdges(), prLayoutFamily(), buckets = 32))
   val layoutPath: String = s"$root/ivf_layout"
   // written by the q34_ivf_build lane, read by q34_ivf_probe
   var ivfIndex: Option[(DataFrame, DataFrame)] = None
@@ -233,17 +233,22 @@ object Lanes {
     scale("q22_minhash_xx")(in => ScaleBench.minhashPairs(in.docs)),
     scale("q24_srp_neardup", prep = _.srpBits())(in =>
       ScaleBench.srpPairsWithBits(in.emb, in.srpBits())),
-    // the durable lanes build and serve persisted bucketed index tables,
-    // beside their in-memory comparators
-    scale("q24_srp_durable", prep = in => { in.srpBits(); in.durableTables() })(in =>
-      ScaleBench.srpDurable(in.emb, in.srpBits(), in.times)),
-    // back-to-back reps, with the index tables re-read off the clock: the
-    // lane measures build-and-serve, not the page cache's eviction history
-    scale("q34_ivf_durable", consecutive = true, prep = { in =>
-      in.durableTables()
-      val p = ScaleBench.benchTablePrefix("ivf", in.times)
-      ScaleBench.preTouchWarehouseTables(in.spark, Seq(s"${p}_cents", s"${p}_cells"))
-    })(in => ScaleBench.ivfDurable(in.emb, in.times)),
+    // the durable lanes publish a fresh index-catalog version per rep and
+    // serve from it, beside their in-memory comparators
+    scale("q24_srp_durable", prep = in => { in.srpBits(); in.srpFamily() }) { in =>
+      val v = operators.Similarity.srpIndexPublish(in.emb, in.srpFamily(),
+        bands = 12, bits = in.srpBits(), dim = 64)
+      operators.Similarity.srpPairsFromCatalog(in.spark, in.srpFamily(),
+        threshold = 0.4, version = v)
+    },
+    // the q34 oracle point (16 cells, 4 probes) for a 64-query batch,
+    // reps back-to-back
+    scale("q34_ivf_durable", consecutive = true, prep = _.ivfFamily()) { in =>
+      val e = in.emb.localCheckpoint(true)
+      val v = operators.Similarity.ivfIndexPublish(e, in.ivfFamily(), nCells = 16)
+      operators.Similarity.ivfTopKFromCatalog(in.spark, in.ivfFamily(),
+        e.orderBy("vec_id").limit(64), k = 5, nProbe = 4, version = v)
+    },
     scale("q29_sessionization")(in => ScaleBench.sessionStats(in.ev)),
     scale("q236_interval_coverage")(in => ScaleBench.intervalCoverage(in.ev)),
     scale("q284_active_users", slack = Some((1.25, "user-day ROWS are exactly linear (ScaleVerify q284 law: 40083 -> 801660 at x20); the residual byte drift is the distinct leg's LZ4 ratio degrading as replicas interleave value runs (measured 22.0x total, 24.1x on the distinct alone)")))(in =>
@@ -281,22 +286,24 @@ object Lanes {
       finally olds.foreach { case (k, v) => v.fold(c.unset(k))(c.set(k, _)) }
     }),
     // q146's default serves a standing bucketed layout, built in the prep;
-    // the build's own cost is q146_layout_build (fresh table per rep)
+    // the build's own cost is q146_layout_build (a fresh version per rep)
     scale("q146_pagerank", prep = _.prStanding(), slack = Some((superlinear, "standing-layout serve: O(V) rank exchanges only; headroom for replica-interleaving LZ4 drift")))(in =>
       ScaleBench.pageRankDefault(in.spark, in.prEdges(), in.times, in.prFp,
         keySuffix = in.prFamily)),
     Lane("q146_layout_build", Scale, three, action(in =>
-      ScaleBench.pageRankLayoutBuild(in.spark, in.prEdges(), in.times)),
-      _.prEdges(), slack = Some((superlinear, "one deterministic O(E) repartition exchange (outdeg is a window over the co-partitioned data — the join form AQE-flipped broadcast->SMJ at x20, a 139x plan-flip curve); headroom for replica-interleaving LZ4 drift"))),
+      operators.Graph.pageRankLayoutPublish(in.spark, in.prEdges(), in.prBuildFamily())),
+      in => { in.prEdges(); in.prBuildFamily() }, slack = Some((superlinear, "one deterministic O(E) repartition exchange (outdeg is a window over the co-partitioned data — the join form AQE-flipped broadcast->SMJ at x20, a 139x plan-flip curve); headroom for replica-interleaving LZ4 drift"))),
     // the pre-round-13 default (AQE chooses the per-round join)
     scale("q146_pagerank_aqe", comparator, _.prEdges(), slack = Some((Double.PositiveInfinity, "AQE plan flip: broadcast rank side at x1, SMJ at xN — x1 bytes are not comparable; q179/q146_merge carry the pagerank byte law")))(in =>
       ScaleBench.pageRank(in.prEdges())),
     // the unbucketed plan at 100 TB: per-round join pinned to sort-merge
     scale("q146_pagerank_merge", comparator, _.prEdges(), slack = Some((superlinear, "deliberately pessimal sort-merge comparator arm")))(in =>
       ScaleBench.pageRankMerge(in.prEdges())),
-    // times only the read-in-place rounds over the layout built in the prep
-    scale("q179_pagerank_bucketed", prep = _.prLayout(), warm = false)(in =>
-      ScaleBench.pageRankBucketed(in.spark, in.prLayout())),
+    // times only the read-in-place rounds over the layout published in the
+    // prep; the rounds never exchange the O(E) edge table
+    scale("q179_pagerank_bucketed", prep = _.prLayoutVersion(), warm = false)(in =>
+      operators.Graph.pageRankFromCatalog(in.spark, in.prLayoutFamily(),
+        version = in.prLayoutVersion())),
     scale("q155_budget_cumsum")(in => ScaleBench.budgetCumsum(in.docs)),
     scale("q133_bloom_decon")(in => ScaleBench.bloomDecon(in.docs, in.times)),
     // q61's stateful candidate pipeline in `times` fixed-size microbatches,

@@ -126,49 +126,6 @@ object ScaleBench {
     Similarity.srpNearDupPairs(emb, threshold = 0.4, bands = 12, bits = bits,
       dim = 64)
 
-  /** q24's pid-keyed DURABLE-index operating point — the registry
-    * key's form in rounds 13-14; since round 15 the registry default
-    * is the versioned-catalog get-or-publish path and THIS lane stays
-    * as the measured per-rep build-and-serve comparator (the crash-
-    * sweep fallback form): identical pipeline to [[srpPairsWithBits]] but the
-    * vecs + band-index frames persist as bucketed catalog tables per
-    * rep, so this lane times the build-and-serve cost of the durable
-    * path while the checkpoint lane above stays the in-memory
-    * comparator. Tables are pid-keyed + factor-named (round-13 advice:
-    * a factor-only name left by a killed bench JVM is an unsweepable
-    * orphan DIRECTORY that fails the next bench's saveAsTable location
-    * check — pid-keying puts them under the shared sweep's liveness
-    * rule); the block drops them. */
-  def srpDurable(emb: DataFrame, bits: Int, times: Int): DataFrame =
-    Similarity.srpNearDupPairsDurable(emb, threshold = 0.4, bands = 12,
-      bits = bits, dim = 64,
-      tablePrefix = Some(benchTablePrefix("srp", times)))
-
-  /** q34's pid-keyed DURABLE-index operating point — the registry
-    * key's form in rounds 13-14; since round 15 the registry default
-    * is the versioned-catalog path and this lane is its measured
-    * per-rep build comparator: sampled centroids + cell assignments persisted as
-    * bucketed catalog tables, top-k probed off the standing tables.
-    * Fixed 16 cells / 4 probes (the q34 oracle point: assignment is
-    * n x 16 dots — linear; the auto-cells scaling story lives in the
-    * q34_ivf_topk/build/probe lanes). */
-  def ivfDurable(emb: DataFrame, times: Int, nQueries: Int = 64): DataFrame = {
-    val e = emb.localCheckpoint(true)
-    Similarity.ivfSampledTopKDurable(
-      e.orderBy("vec_id").limit(nQueries), e, k = 5, nCells = 16,
-      nProbe = 4, tablePrefix = Some(benchTablePrefix("ivf", times)))
-  }
-
-  /** Pid-keyed durable-lane table prefix
-    * (`graft_<fam>_bench_pid<NNN>_x<F>`): the pid key is what makes a
-    * killed bench JVM's leftovers sweepable by
-    * [[graft.sources.Warehouse.sweepStaleIndexDirs]] — the same
-    * discipline the q24/q34/pagerank registry lanes follow. The bench's
-    * inputs (`Inputs.durableTables`) sweep both family prefixes before
-    * the first durable rep. */
-  def benchTablePrefix(family: String, times: Int): String =
-    s"graft_${family}_bench_pid${ProcessHandle.current().pid()}_x$times"
-
   /** q99's operating point: prefix-filtered exact Jaccard. Used by
     * ScaleBenchSpec to prove replica-correctness (pair set = N re-keyed
     * copies of 1x); deliberately NOT a timed scale entry — exact
@@ -412,7 +369,7 @@ object ScaleBench {
     // metadata digest the caller threads through)
     val t = graft.operators.Graph.pageRankStandingLayout(spark, edges,
       family = s"pr_bench_x${times}_$keySuffix", fp = fp)
-    graft.operators.Graph.pageRankOnBucketed(spark, t)
+    graft.operators.Graph.pageRankOnLayout(spark.table(t))
       .localCheckpoint(true)
   }
 
@@ -427,17 +384,6 @@ object ScaleBench {
     graft.operators.Graph.pageRankStandingLayout(spark, edges,
       family = s"pr_bench_x${times}_$keySuffix", fp = fp)
     ()
-  }
-
-  /** The layout BUILD cost, kept on a clock of its own now that the
-    * default lane serves from a standing table: one fresh (nonce-named)
-    * bucketed build per rep, dropped in finally. */
-  def pageRankLayoutBuild(spark: SparkSession, edges: DataFrame,
-                          times: Int): Unit = {
-    val t = graft.operators.Graph.pageRankEdgeLayout(spark, edges,
-      buckets = spark.sparkContext.defaultParallelism,
-      suffix = s"_build_x$times")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
   /** The AQE-chooses COMPARATOR (the pre-round-13 default): the
@@ -457,21 +403,6 @@ object ScaleBench {
     * AQE-chooses lane. */
   def pageRankMerge(edges: DataFrame): DataFrame =
     graft.operators.Graph.pageRankOnMerge(edges)
-
-  /** q179's operating point: build the bucketed edge layout ONCE per
-    * factor (off the clock — it is the standing table a 100 TB graph
-    * pipeline maintains), then time the same fixed-round iteration
-    * reading it in place. 32 buckets = the local[32] analog of
-    * bucket-per-executor; the timed rounds never exchange the O(E)
-    * edge table, so this lane's x1/xN curve is the zero-edge-exchange
-    * variant the unbucketed q146 lane is compared against. */
-  def pageRankBucketedLayout(spark: SparkSession, edges: DataFrame,
-                             times: Int): String =
-    graft.operators.Graph.pageRankEdgeLayout(spark, edges,
-      buckets = 32, suffix = s"_x$times")
-
-  def pageRankBucketed(spark: SparkSession, table: String): DataFrame =
-    graft.operators.Graph.pageRankOnBucketed(spark, table)
 
   private val streamLaneCounter = new java.util.concurrent.atomic.AtomicInteger
 
@@ -685,7 +616,7 @@ object ScaleBench {
 
   /** Sequentially read every byte under `path` into a scratch buffer —
     * re-populating the OS page cache for an on-disk layout a timed rep
-    * is about to read (round-16 verdict #1: the durable-IVF lanes were
+    * is about to read (round-16 verdict #1: the IVF lanes were
     * the last >5x raw rep spread on the board — a rep whose layout
     * files were evicted by the ~28 heavy lanes between round-major
     * slots measured 6.9x its warm sibling; the lane should measure the
@@ -703,16 +634,5 @@ object ScaleBench {
         finally in.close()
       } else Option(f.listFiles()).getOrElse(Array.empty).foreach(walk)
     try walk(new java.io.File(path)) catch { case _: Throwable => () }
-  }
-
-  /** [[preTouchDir]] over warehouse TABLE directories (the durable
-    * lanes' bucketed index tables). Missing dirs are skipped — the
-    * first rep has nothing to warm. */
-  def preTouchWarehouseTables(spark: SparkSession,
-                              tables: Seq[String]): Unit = {
-    val wh = new java.io.File(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    tables.foreach(t => preTouchDir(
-      new java.io.File(wh, t.toLowerCase(java.util.Locale.ROOT)).getPath))
   }
 }

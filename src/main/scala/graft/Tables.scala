@@ -64,7 +64,10 @@ object Tables {
   /** Driver-side metadata fingerprint of an input path: file names,
     * lengths and mtimes folded into one hex digest — the manifest-style
     * "did the source change" signal (a LIST call at 100 TB, never a
-    * data scan). Stable across processes for unchanged data. */
+    * data scan). Stable across processes for unchanged data. The walk
+    * is local: a `file:` URI resolves to its path, and any other scheme
+    * is refused, since walking it as a local name would fingerprint
+    * every version of it alike. */
   def dirFingerprint(path: String): String = {
     def walk(f: java.io.File): Seq[String] =
       if (f.isDirectory)
@@ -72,10 +75,22 @@ object Tables {
           .toSeq.flatMap(walk)
       else Seq(s"${f.getName}:${f.length()}:${f.lastModified()}")
     val md = java.security.MessageDigest.getInstance("SHA-1")
-    walk(new java.io.File(path)).foreach(s =>
+    walk(new java.io.File(localPath(path))).foreach(s =>
       md.update(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
     md.digest().take(8).map("%02x".format(_)).mkString
   }
+
+  private val UriScheme = "^([a-zA-Z][a-zA-Z0-9+.-]*):".r
+
+  private def localPath(path: String): String =
+    UriScheme.findPrefixMatchOf(path).map(_.group(1).toLowerCase) match {
+      case None => path
+      case Some("file") =>
+        val u = java.net.URI.create(path)
+        Option(u.getPath).getOrElse(u.getSchemeSpecificPart)
+      case Some(scheme) => throw new IllegalArgumentException(
+        s"dirFingerprint walks local files only; cannot fingerprint $scheme path $path")
+    }
 
   /** The events `ts` column has shipped in three parquet flavors across
     * testdata generations: TIMESTAMP(NANOS) (no native Spark type —

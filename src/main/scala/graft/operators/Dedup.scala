@@ -315,7 +315,7 @@ object Dedup {
   }
 
   /** The (doc_id, h64[, __h]) shingle-index projection
-    * [[minhashLshPairs]] materializes — factored so the durable lane
+    * [[minhashLshPairs]] materializes — factored so the catalog index
     * persists the IDENTICAL frame the checkpoint lane pins. */
   private def shingleIndexFrame(df: DataFrame, idCol: String,
                                 textCol: String, n: Int,
@@ -371,37 +371,12 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Durable-index form of [[minhashLshPairs]] (round-11 verdict #7):
-    * the shingle index is PERSISTED as a doc_id-bucketed catalog table
-    * (Warehouse.writeBucketed) instead of localCheckpoint'd, then the
-    * IDENTICAL downstream runs off the persisted table. Same pairs by
-    * construction (MinhashDurableIndexSpec + q311 pin the equality);
-    * different fault domain: localCheckpoint blocks are executor-pinned
-    * — losing one executor at 100 TB kills the index AND the truncated
-    * lineage needed to rebuild it mid-job — while the bucketed table
-    * survives executor loss and is REUSABLE across jobs (build once,
-    * serve every downstream dedup pass). Bucketing on doc_id means the
-    * verify join's two index probes read co-partitioned buckets.
-    * Returns the pairs; the caller owns the table lifecycle (the name
-    * is returned via `tableOut` when inspection/reuse is wanted). */
-  def minhashLshPairsDurable(df: DataFrame, idCol: String, textCol: String,
-                             n: Int = 3, numHashes: Int = 12, bands: Int = 4,
-                             threshold: Double = 0.5,
-                             family: HashFamily = Md5Minhash,
-                             nBuckets: Int = 8,
-                             table: Option[String] = None): DataFrame = {
-    val spark = df.sparkSession
-    val t = table.getOrElse("graft_lsh_index_" +
-      spark.sparkContext.applicationId.replaceAll("[^0-9a-zA-Z]", "_"))
-    graft.sources.Warehouse.writeBucketed(
-      shingleIndexFrame(df, idCol, textCol, n, family), t, "doc_id", nBuckets)
-    lshPairsFromIndex(spark.table(t), numHashes, bands, threshold, family)
-  }
-
   /** Publish the MinHash-LSH shingle index into the VERSIONED catalog
-    * (round-13 verdict #3): one part `shingles` — the identical
-    * doc_id-bucketed frame [[minhashLshPairsDurable]] persists, now
-    * named, versioned and snapshot-isolated. Returns the version. */
+    * (round-13 verdict #3): one part `shingles`, the shingle index
+    * [[minhashLshPairs]] checkpoints, persisted bucketed on doc_id (the
+    * verify join's probe key), named, versioned and snapshot-isolated.
+    * Unlike a localCheckpoint it survives executor loss and serves
+    * later jobs with no rebuild. Returns the version. */
   def lshIndexPublish(df: DataFrame, idCol: String, textCol: String,
                       family: String, n: Int = 3,
                       hashFamily: HashFamily = Md5Minhash,

@@ -812,7 +812,7 @@ object Graph {
     // path and its artifact numbers are one configuration
     val t = pageRankStandingLayout(spark, pageRankEdges(spark, dir),
       family = "pr_q146", fp = Tables.dirFingerprint(s"$dir/lineitem.parquet"))
-    val ranks = pageRankOnBucketed(spark, t).localCheckpoint(true)
+    val ranks = pageRankOnLayout(spark.table(t)).localCheckpoint(true)
     ranks.orderBy(col("r").desc, col("node").asc).limit(20)
   }
 
@@ -836,8 +836,7 @@ object Graph {
     * DEFAULT path since round 15. `edges` is by-name: a reuse hit never
     * constructs the edge frame. Returns the version's physical table
     * name (re-registered as an external bucketed table when this
-    * process didn't build it — IndexCatalog.readPart's restoration);
-    * serving touches the table dir so staleness ages on use. */
+    * process didn't build it — IndexCatalog.readPart's restoration). */
   def pageRankStandingLayout(spark: SparkSession, edges: => DataFrame,
                              family: String, fp: String,
                              buckets: Int = -1): String = {
@@ -853,7 +852,6 @@ object Graph {
         name("edges"), "src", b, Some("src"))
       Seq(IndexCatalog.Part("edges", "src", b, "src"))
     }
-    // vacuum replaces the liveness sweep on the catalog path:
     // superseded-fingerprint versions age out past the grace window
     IndexCatalog.vacuum(spark, family)
     IndexCatalog.resolvePart(spark, family, v, "edges")
@@ -892,29 +890,6 @@ object Graph {
   // x20 lane's 7.6 s before the pin). PlanAuditSpec pins the exchange
   // count; GraphSpec pins rank-identity with the unbucketed lane.
 
-  /** Build the bucketed (src, dst, outdeg) edge layout as a managed
-    * table; returns the table name (caller drops — inside try/finally,
-    * since a failed iteration must not leak the table). `suffix`
-    * disambiguates concurrent layouts within one session (Verify runs
-    * q146/q179 on one pool; bench scale factors). The name is
-    * PID-keyed so [[graft.sources.Warehouse.sweepStaleIndexDirs]] can
-    * liveness-check orphan directories left by killed JVMs — an
-    * appId-keyed first cut produced exactly the unsweepable-orphan
-    * class the shared sweep exists to prevent. */
-  def pageRankEdgeLayout(spark: SparkSession, edges: DataFrame,
-                         buckets: Int = 8, suffix: String = ""): String = {
-    graft.sources.Warehouse.sweepStaleIndexDirs(spark, "graft_pr_edges_")
-    // per-invocation nonce on top of the pid key (round-13 advice: a
-    // constant within-JVM name let two concurrent builds of the same
-    // suffix race each other's drop); the sweep regex tolerates any
-    // suffix shape
-    val t = s"graft_pr_edges_pid${ProcessHandle.current().pid()}" +
-      s"${suffix}_n${layoutNonce.incrementAndGet()}"
-    graft.sources.Warehouse.writeBucketed(
-      layoutFrame(edges, buckets), t, "src", buckets, Some("src"))
-    t
-  }
-
   /** The (src, dst, outdeg) frame a layout build writes: ONE
     * deterministic O(E) exchange at every scale. The first cut joined
     * edges against a groupBy-outdeg aggregate, which let AQE broadcast
@@ -936,14 +911,6 @@ object Graph {
       .repartition(buckets, col("src"))
       .withColumn("outdeg", count(lit(1)).over(Window.partitionBy("src")))
   }
-
-  private val layoutNonce = new java.util.concurrent.atomic.AtomicLong(0)
-
-  /** The identical integer-exact recurrence as [[pageRankOn]], reading
-    * the bucketed layout per round instead of a checkpointed frame. */
-  def pageRankOnBucketed(spark: SparkSession, table: String,
-                         rounds: Int = PageRankRounds): DataFrame =
-    pageRankOnLayout(spark.table(table), rounds)
 
   /** Publish the bucketed (src, dst, outdeg) edge layout into the
     * VERSIONED index catalog (round-13 verdict #3): part `edges`,
@@ -971,9 +938,10 @@ object Graph {
     pageRankOnLayout(IndexCatalog.readPart(spark, family, v, "edges"), rounds)
   }
 
-  /** The recurrence over ANY materialized (src, dst, outdeg) layout
-    * frame — table-backed ([[pageRankOnBucketed]]) or catalog-backed
-    * ([[pageRankFromCatalog]]). */
+  /** The identical integer-exact recurrence as [[pageRankOn]] over ANY
+    * materialized (src, dst, outdeg) layout frame — a standing layout's
+    * table or a pinned catalog version ([[pageRankFromCatalog]]) — read
+    * per round instead of a checkpointed frame. */
   def pageRankOnLayout(ed: DataFrame,
                        rounds: Int = PageRankRounds): DataFrame = {
     var r = ed.select(col("src").as("node")).distinct()
@@ -1012,7 +980,7 @@ object Graph {
   def pageRankBucketed(spark: SparkSession, dir: String): DataFrame = {
     val t = pageRankStandingLayout(spark, pageRankEdges(spark, dir),
       family = "pr_q146", fp = Tables.dirFingerprint(s"$dir/lineitem.parquet"))
-    val ranks = pageRankOnBucketed(spark, t).localCheckpoint(true)
+    val ranks = pageRankOnLayout(spark.table(t)).localCheckpoint(true)
     ranks.orderBy(col("r").desc, col("node").asc).limit(20)
   }
 

@@ -237,17 +237,15 @@ object Llm {
     * oracle as q22, so hash-equality with DuckDB doubles as the
     * checkpoint-vs-durable pair-set equality law at Verify scale
     * (MinhashDurableIndexSpec pins it at test scale and proves the
-    * persisted table is reusable). */
+    * published index is reusable). */
   def minhashLshDurable(spark: SparkSession, dir: String): DataFrame = {
     // Since round 15 the DEFAULT durable path is the VERSIONED
     // IndexCatalog (round-14 verdict #2): get-or-publish keyed by the
     // source's metadata fingerprint (same data ⇒ reuse the published
     // shingle index, across processes; new data ⇒ mint the next
     // version), probe PINNED at the returned version (the q136
-    // snapshot law — a concurrent rebuild is invisible), vacuum in
-    // place of the pid-liveness sweep. The pid-keyed table lane
-    // (minhashLshPairsDurable + sweepStaleIndexDirs) remains the
-    // crash-sweep fallback and the bench's per-rep build comparator.
+    // snapshot law — a concurrent rebuild is invisible), vacuum
+    // reclaims superseded versions and crashed builds' directories.
     val fam = "lsh_q311"
     val v = Dedup.lshIndexGetOrPublish(spark,
       Tables.documents(spark, dir), "doc_id", "text", fam,
@@ -1610,9 +1608,7 @@ object Llm {
   def embeddingNearDup(spark: SparkSession, dir: String): DataFrame = {
     // catalog-default durable path since round 15 (round-14 verdict
     // #2): get-or-publish by source fingerprint, pinned-version probe,
-    // vacuum in place of the pid sweep — see minhashLshDurable (q311)
-    // for the full rationale; srpNearDupPairsDurable stays as the
-    // pid-keyed fallback lane
+    // vacuum — see minhashLshDurable (q311) for the full rationale
     val fam = "srp_q24"
     val v = Similarity.srpIndexGetOrPublish(spark,
       Tables.embeddings(spark, dir), fam,
@@ -2034,12 +2030,11 @@ object Llm {
     * vacuum) and the probe runs off the standing tables — the oracle
     * hash re-gates the catalog build every round; SrpIvfDurableIndexSpec pins
     * durable ≡ in-memory top-k-for-top-k and proves reuse-without-
-    * rebuild via ivfTopKFromTables. (q76 separately gates the
+    * rebuild via ivfTopKFromCatalog. (q76 separately gates the
     * cell-PARTITIONED serving layout.) */
   def ivfTopKQuery(spark: SparkSession, dir: String): DataFrame = {
     // catalog-default durable path since round 15 (round-14 verdict
-    // #2) — see minhashLshDurable (q311) for the rationale;
-    // ivfSampledTopKDurable stays as the pid-keyed fallback lane
+    // #2) — see minhashLshDurable (q311) for the rationale
     val fam = "ivf_q34"
     val emb = Tables.embeddings(spark, dir)
     val v = Similarity.ivfIndexGetOrPublish(spark, emb, fam,

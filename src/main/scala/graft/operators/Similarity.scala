@@ -189,8 +189,8 @@ object Similarity {
     emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("n", norm(col("v")))
 
-  /** The SRP band index (vec_id, band, sig) — the frame the durable
-    * lane persists. */
+  /** The SRP band index (vec_id, band, sig) — the frame the catalog
+    * index persists. */
   private[graft] def srpBandIndex(e: DataFrame, bands: Int, bits: Int,
                                   dim: Int): DataFrame = {
     val bandSigs = (0 until bands).map(b =>
@@ -214,30 +214,6 @@ object Similarity {
       .select(col("vec_a"), col("vec_b"),
         round(cosine(col("x.v"), col("y.v"), col("x.n"), col("y.n")), 6).as("cos"))
       .filter(col("cos") >= threshold)
-  }
-
-  /** Durable-index form of [[srpNearDupPairs]] (round-12 verdict #3,
-    * extending the q311 pattern): the normalized-vector frame and the
-    * SRP band index persist as bucketed catalog tables
-    * (`<prefix>_vecs` on vec_id — the verify join's probe key;
-    * `<prefix>_bands` on sig — the candidate self-join's bucket key)
-    * instead of executor-pinned localCheckpoints, then the IDENTICAL
-    * downstream runs off the tables. Same pairs by construction
-    * (SrpIvfDurableIndexSpec + the q24 oracle pin it); the index
-    * survives executor loss and is reusable across jobs. */
-  def srpNearDupPairsDurable(emb: DataFrame, threshold: Double,
-                             bands: Int = 12, bits: Int = 6, dim: Int = 64,
-                             nBuckets: Int = 8,
-                             tablePrefix: Option[String] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val t = tablePrefix.getOrElse("graft_srp_index_" +
-      spark.sparkContext.applicationId.replaceAll("[^0-9a-zA-Z]", "_"))
-    val e = srpVecFrame(emb).localCheckpoint(true) // feeds both writes
-    graft.sources.Warehouse.writeBucketed(e, s"${t}_vecs", "vec_id", nBuckets)
-    graft.sources.Warehouse.writeBucketed(
-      srpBandIndex(e, bands, bits, dim), s"${t}_bands", "sig", nBuckets)
-    srpPairsFrom(spark.table(s"${t}_vecs"), spark.table(s"${t}_bands"),
-      threshold)
   }
 
   /** IVF (inverted-file) ANN: k-means centroids partition the corpus
@@ -496,63 +472,6 @@ object Similarity {
     ivfTopKWith(queries, c, centroids, k, nProbe)
   }
 
-  /** Durable-index form of [[ivfSampledTopK]] (round-12 verdict #3):
-    * the centroid table AND the assigned corpus persist as bucketed
-    * catalog tables (`<prefix>_cents` / `<prefix>_cells`, both
-    * bucketed on cell — the probe join's key) instead of transient
-    * frames, then [[ivfTopKFromTables]] probes the standing tables.
-    * Same top-k by construction (assignment and probing are
-    * deterministic — SrpIvfDurableIndexSpec + the q34 oracle pin it);
-    * the index is the build-once/serve-every-batch artifact, same
-    * fault story as the q311 LSH table. The cell-PARTITIONED layout
-    * (q76, Warehouse.writeIvfLayout) remains the partition-pruned
-    * serving layout; this lane covers the k-means/sampled BUILD
-    * outputs that previously lived only in localCheckpoint. */
-  def ivfSampledTopKDurable(queries: DataFrame, corpus: DataFrame, k: Int,
-                            nCells: Int = 16, nProbe: Int = 4,
-                            nBuckets: Int = 8,
-                            tablePrefix: Option[String] = None): DataFrame = {
-    val spark = corpus.sparkSession
-    val t = tablePrefix.getOrElse("graft_ivf_index_" +
-      spark.sparkContext.applicationId.replaceAll("[^0-9a-zA-Z]", "_"))
-    val c = corpus.select(col("vec_id"), asDouble(col("embedding")).as("cv"))
-      .localCheckpoint(true) // feeds centroid sample AND assignment
-    val centroids = c.orderBy("vec_id").limit(nCells)
-      .select(col("vec_id").cast("int").as("cell"), col("cv").as("centroid"))
-    graft.sources.Warehouse.writeBucketed(
-      centroids, s"${t}_cents", "cell", 1)
-    graft.sources.Warehouse.writeBucketed(
-      ivfAssign(c, spark.table(s"${t}_cents")), s"${t}_cells", "cell",
-      nBuckets)
-    ivfTopKFromTables(spark, t, queries, k, nProbe)
-  }
-
-  /** Probe a standing durable IVF index (built by
-    * [[ivfSampledTopKDurable]]) with NO rebuild: centroids route the
-    * queries, assigned cells rerank — the reuse-without-rebuild path
-    * the spec law exercises. */
-  def ivfTopKFromTables(spark: SparkSession, tablePrefix: String,
-                        queries: DataFrame, k: Int, nProbe: Int): DataFrame = {
-    // serving refreshes the dirs' mtimes: the stale-index sweep ages on
-    // idle-since-last-USE, and reads alone don't move a dir's mtime
-    Seq("_cells", "_cents").foreach(s =>
-      graft.sources.Warehouse.touchIndexDir(spark, tablePrefix + s))
-    ivfRerank(spark.table(s"${tablePrefix}_cells"),
-      ivfProbes(queries, spark.table(s"${tablePrefix}_cents"), nProbe), k)
-  }
-
-  /** Probe a standing durable SRP index (built by
-    * [[srpNearDupPairsDurable]]) with NO rebuild — the SRP twin of
-    * [[ivfTopKFromTables]], touching the table dirs so the stale-index
-    * sweep sees the serve as recent use. */
-  def srpPairsFromTables(spark: SparkSession, tablePrefix: String,
-                         threshold: Double): DataFrame = {
-    Seq("_vecs", "_bands").foreach(s =>
-      graft.sources.Warehouse.touchIndexDir(spark, tablePrefix + s))
-    srpPairsFrom(spark.table(s"${tablePrefix}_vecs"),
-      spark.table(s"${tablePrefix}_bands"), threshold)
-  }
-
   /** The catalog build closure both SRP publish paths share: parts
     * `vecs` (bucketed by vec_id — the verify join's probe key) +
     * `bands` (by sig — the candidate self-join's bucket key). `emb` is
@@ -571,9 +490,9 @@ object Similarity {
 
   /** Publish the SRP index into the VERSIONED catalog (round-13
     * verdict #3): mints family@vN with parts `vecs` (bucketed by
-    * vec_id) + `bands` (by sig) — the same two frames the pid-keyed
-    * durable lane persists, now named and snapshot-isolated. Returns
-    * the minted version. */
+    * vec_id) + `bands` (by sig) — the two frames [[srpNearDupPairs]]
+    * checkpoints, persisted, named and snapshot-isolated. Returns the
+    * minted version. */
   def srpIndexPublish(emb: DataFrame, family: String,
                       bands: Int = 12, bits: Int = 6, dim: Int = 64,
                       nBuckets: Int = 8): Int =
@@ -627,7 +546,8 @@ object Similarity {
 
   /** Publish the sampled-centroid IVF index into the versioned catalog:
     * parts `cents` + `cells`, both bucketed on cell (the probe join's
-    * key) — [[ivfSampledTopKDurable]]'s tables, named and versioned. */
+    * key) — [[ivfSampledTopK]]'s centroids and assignments, persisted,
+    * named and versioned. */
   def ivfIndexPublish(corpus: DataFrame, family: String, nCells: Int = 16,
                       nBuckets: Int = 8): Int =
     graft.sources.IndexCatalog.mintParts(corpus.sparkSession, family)(
@@ -642,8 +562,8 @@ object Similarity {
       graft.sources.IndexCatalog.hexDigest(s"$fp|c$nCells|nb$nBuckets"))(
       ivfCatalogBuild(corpus, nCells, nBuckets))
 
-  /** IVF top-k served from a pinned catalog version — the versioned
-    * form of [[ivfTopKFromTables]]. */
+  /** IVF top-k served from a pinned catalog version, with no rebuild:
+    * centroids route the queries, the assigned cells rerank. */
   def ivfTopKFromCatalog(spark: SparkSession, family: String,
                          queries: DataFrame, k: Int, nProbe: Int,
                          version: Int = -1): DataFrame = {

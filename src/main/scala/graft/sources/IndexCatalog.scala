@@ -3,13 +3,13 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Named, VERSIONED index tables — the q136 manifest/snapshot
-  * discipline applied to the durable indexes (round-13 verdict #3).
-  *
-  * The pid-keyed durable tables (LSH q311, SRP q24, IVF q34, PageRank
-  * layout q146) are session-lifetime artifacts: correct for one job,
-  * but the first thing a SECOND user of the same warehouse hits is
-  * "whose index is this and can I rebuild it while you probe?". This
-  * catalog answers it the way every table format does:
+  * discipline applied to the durable indexes (round-13 verdict #3),
+  * and graft's one mechanism for persisting a built index (LSH q311,
+  * SRP q24, IVF q34, PageRank layout q146/q179, and the bench lanes
+  * that time them). The first thing a SECOND user of the same
+  * warehouse hits is "whose index is this and can I rebuild it while
+  * you probe?". This catalog answers it the way every table format
+  * does:
   *
   *  - an index FAMILY is a logical name (`srp_docs`); a BUILD mints
   *    the next version and writes its parts as bucketed tables named
@@ -24,12 +24,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    only that version's parts — a build landing vN+1 mid-probe is
   *    INVISIBLE to it (the q136 snapshot-isolation law, asserted per
   *    family in IndexCatalogSpec);
-  *  - VACUUM (not the liveness sweep) reclaims: it drops versions that
-  *    are (a) not the current one, (b) outside the keep-window, and
-  *    (c) past a grace age — the standard "no reader still holds it"
+  *  - VACUUM reclaims: it drops versions that are (a) not the
+  *    current one, (b) outside the keep-window, and (c) past a grace
+  *    age (by `publishedMs`) — the standard "no reader still holds it"
   *    heuristic when pins aren't centrally tracked (Delta VACUUM's
   *    retention check). Unreferenced tables from crashed builds age
-  *    out the same way.
+  *    out past the same grace, by directory mtime.
   *
   * Local-mode caveat, by design: Spark's in-memory catalog dies with
   * the JVM, so a LATER process sees the version tables only as
@@ -222,8 +222,7 @@ object IndexCatalog {
     * #1): when the family's CURRENT version was built from the same
     * source fingerprint `fp` and its parts are still present, serve it
     * WITHOUT invoking `build` (the by-name/closure discipline: a reuse
-    * hit never constructs the input frame), touching the part dirs so
-    * the liveness sweep ages on use; otherwise mint the next version
+    * hit never constructs the input frame); otherwise mint the next version
     * recording `fp`. New data ⇒ new fingerprint ⇒ rebuild; same data ⇒
     * reuse — across processes, because the decision reads only the
     * manifest and the warehouse listing (a LIST call at 100 TB, never
@@ -238,10 +237,7 @@ object IndexCatalog {
           e.fp == fp && e.parts.nonEmpty &&
             e.parts.forall(p => partPresent(spark, family, e, p.name))))
       reusable match {
-        case Some(e) =>
-          e.parts.foreach(p => Warehouse.touchIndexDir(spark,
-            tableName(family, e.v, p.name, e.sfx)))
-          e.v
+        case Some(e) => e.v
         case None => mintParts(spark, family, fp)(build)
       }
     }

@@ -106,9 +106,7 @@ object Warehouse {
     // location fails validateTableLocation, and a JVM killed between a
     // prior write and its drop leaves exactly that — a directory with
     // NO catalog entry (the in-memory catalog died with the JVM). With
-    // no entry the dir is debris by definition, so clear it; pid
-    // REUSE can defeat the liveness sweep for our own names, which is
-    // why the guard lives here and not only in the sweep.
+    // no entry the dir is debris by definition, so clear it.
     if (!df.sparkSession.catalog.tableExists(table))
       try {
         val wh = new java.io.File(new java.net.URI(
@@ -119,75 +117,7 @@ object Warehouse {
     val w = df.write.mode("overwrite").format("parquet")
       .bucketBy(nBuckets, bucketCol)
     sortCol.fold(w)(c => w.sortBy(c)).saveAsTable(table)
-    touchIndexDir(df.sparkSession, table) // build counts as a use
   }
-
-  /** Sweep stale durable-index directories left by DEAD sessions.
-    * Managed tables of a dead in-memory catalog are orphan DIRECTORIES
-    * under spark-warehouse (no catalog entry survives the JVM), so
-    * DROP TABLE cannot reach them — the Scratch-sweep discipline
-    * applies, INCLUDING its liveness rule: table names are pid-keyed
-    * (`<prefix>_pid<NNN>`; an appId cannot be liveness-checked, and an
-    * appId-keyed first cut deleted a LIVE concurrent session's index
-    * mid-query — the exact collision tools/concurrent_verify.sh exists
-    * to catch). A pid-keyed dir is swept ONLY when its owning pid is
-    * dead and it is over 30 min old; the 24 h hard ceiling applies
-    * JUST to names that fail the pid regex (pre-pid legacy debris,
-    * which has no liveness to check). The round-13 form applied the
-    * ceiling unconditionally, which re-introduced the
-    * delete-a-live-session's-index collision for any session older
-    * than a day (round-13 advice) — a long-lived service embedding the
-    * standing PageRank layout is exactly such a session. Pid-reuse
-    * staleness is handled by the TOUCH discipline instead:
-    * [[touchIndexDir]] refreshes the dir mtime on every build AND
-    * serve, so a dir that is both "pid alive" (reused) and untouched
-    * for 30 min is the only false-survivor class left, and it falls
-    * the moment the reused pid exits. Within a session, overwrite
-    * semantics replace rather than accumulate. Best-effort by design.
-    *
-    * Factored from the q311 LSH lane so the IVF/SRP/PageRank durable
-    * lanes (q34/q24/q146) share one audited sweep. */
-  def sweepStaleIndexDirs(spark: SparkSession, prefix: String): Unit = {
-    // the optional suffix covers multi-table indexes (`..._pid7_vecs`,
-    // `..._pid7_bands`): they must resolve to their owning pid, not
-    // fall through to the age-only legacy arm
-    val pidRe = (java.util.regex.Pattern.quote(prefix) + "pid(\\d+)(_.*)?").r
-    try {
-      val wh = new java.io.File(new java.net.URI(
-        spark.conf.get("spark.sql.warehouse.dir")).getPath)
-      val cutoff = System.currentTimeMillis() - 30L * 60 * 1000
-      val hardCutoff = System.currentTimeMillis() - 24L * 60 * 60 * 1000
-      Option(wh.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.startsWith(prefix))
-        .filter { f =>
-          f.getName match {
-            case pidRe(pid, _) =>
-              val dead = ProcessHandle.of(pid.toLong)
-                .map[Boolean](h => !h.isAlive).orElse(true)
-              dead && f.lastModified() < cutoff
-            case _ => // pre-pid legacy name: no liveness; age decides
-              f.lastModified() < hardCutoff
-          }
-        }
-        .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    } catch { case _: Throwable => () }
-  }
-
-  /** Refresh a managed index table's directory mtime — called on every
-    * build AND serve of a durable index, so [[sweepStaleIndexDirs]]'
-    * age test measures idle time since last USE, not since creation
-    * (reads do not update a directory's mtime on their own). This is
-    * what lets the sweep stay pid-liveness-gated without a
-    * live-pid-overriding hard ceiling: a pid-reused orphan is never
-    * touched, so it ages out the moment its accidental owner exits.
-    * Best-effort, like the sweep. */
-  def touchIndexDir(spark: SparkSession, table: String): Unit =
-    try {
-      val wh = new java.io.File(new java.net.URI(
-        spark.conf.get("spark.sql.warehouse.dir")).getPath)
-      val d = new java.io.File(wh, table.toLowerCase(java.util.Locale.ROOT))
-      if (d.exists()) d.setLastModified(System.currentTimeMillis())
-    } catch { case _: Throwable => () }
 
   /** List a directory's parquet data files (driver-side metadata walk —
     * one name per file, never data; at 100 TB this is the object-store

@@ -239,10 +239,12 @@ class GraphSpec extends SparkSpec {
     val edges = Graph.pageRankEdges(spark, sf)
     val plain = Graph.pageRankOn(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val t = Graph.pageRankEdgeLayout(spark, edges, suffix = "_spec")
+    val fam = "layout_spec_bucketed"
+    val v = Graph.pageRankLayoutPublish(spark, edges, fam, buckets = 8)
+    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
     try {
       // rank identity: the layout changes WHERE bytes move, never values
-      val bucketed = Graph.pageRankOnBucketed(spark, t).collect()
+      val bucketed = Graph.pageRankOnLayout(spark.table(t)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(bucketed === plain, "bucketed ranks diverge from unbucketed")
       // shuffle-volume law (the Metrics half of the proof), in the
@@ -261,14 +263,14 @@ class GraphSpec extends SparkSpec {
           Graph.pageRankOn(edges).write.mode("overwrite").format("noop").save()
         }
         val swBucketed = shuffled {
-          Graph.pageRankOnBucketed(spark, t)
+          Graph.pageRankOnLayout(spark.table(t))
             .write.mode("overwrite").format("noop").save()
         }
         info(f"shuffle write: unbucketed ${swPlain / 1e3}%.0f KB vs bucketed ${swBucketed / 1e3}%.0f KB")
         assert(swBucketed < swPlain * 6 / 10,
           s"bucketed layout should cut per-round shuffle: $swBucketed vs $swPlain")
       } finally spark.conf.set(key, prev)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+    } finally graft.sources.IndexCatalog.dropFamily(spark, fam)
   }
 
   test("layout build: one deterministic O(E) exchange, one file per bucket") {
@@ -283,9 +285,11 @@ class GraphSpec extends SparkSpec {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1") // the regime the flip hid in
-    val t =
-      try Graph.pageRankEdgeLayout(spark, edges, buckets = 8, suffix = "_shape")
+    val fam = "layout_spec_shape"
+    val v =
+      try Graph.pageRankLayoutPublish(spark, edges, fam, buckets = 8)
       finally spark.conf.set(key, prev)
+    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
     try {
       // checkpointed input, exactly like the bench lanes: the law is
       // about the BUILD's shuffle, not the edge derivation's
@@ -313,7 +317,7 @@ class GraphSpec extends SparkSpec {
       val aggDeg = edges.groupBy("src").count()
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(winDeg === aggDeg, "window outdeg diverges from groupBy outdeg")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+    } finally graft.sources.IndexCatalog.dropFamily(spark, fam)
   }
 
   test("standing layout: serve ≡ build-then-serve, reuse without rebuild, " +
@@ -324,14 +328,17 @@ class GraphSpec extends SparkSpec {
     graft.sources.IndexCatalog.dropFamily(spark, fam)
     try {
       // build-then-serve (the explicit path) as the reference ranks
-      val tRef = Graph.pageRankEdgeLayout(spark, edges, suffix = "_specref")
+      val refFam = "layout_spec_ref"
       val ref =
-        try Graph.pageRankOnBucketed(spark, tRef).collect()
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-        finally spark.sql(s"DROP TABLE IF EXISTS $tRef")
+        try {
+          val vRef = Graph.pageRankLayoutPublish(spark, edges, refFam, buckets = 8)
+          Graph.pageRankOnLayout(spark.table(graft.sources.IndexCatalog
+            .resolvePart(spark, refFam, vRef, "edges"))).collect()
+            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        } finally graft.sources.IndexCatalog.dropFamily(spark, refFam)
       // standing path: first call builds (and publishes family@v1)...
       val t1 = Graph.pageRankStandingLayout(spark, edges, fam, fp)
-      val served = Graph.pageRankOnBucketed(spark, t1).collect()
+      val served = Graph.pageRankOnLayout(spark.table(t1)).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(served === ref, "standing-layout ranks diverge from build-then-serve")
       // ...reuse-without-rebuild: same family+fingerprint returns the

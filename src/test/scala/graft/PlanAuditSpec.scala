@@ -274,8 +274,10 @@ class PlanAuditSpec extends SparkSpec {
     val key = "spark.sql.autoBroadcastJoinThreshold"
     val prev = spark.conf.get(key)
     spark.conf.set(key, "-1")
-    val t = graft.operators.Graph.pageRankEdgeLayout(
-      spark, graft.operators.Graph.pageRankEdges(spark, sf), suffix = "_audit")
+    val fam = "layout_spec_audit"
+    val v = graft.operators.Graph.pageRankLayoutPublish(spark,
+      graft.operators.Graph.pageRankEdges(spark, sf), fam, buckets = 8)
+    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
     try {
       val round = graft.operators.Graph.pageRankRoundFrame(spark, t)
       round.write.mode("overwrite").format("noop").save()
@@ -288,7 +290,7 @@ class PlanAuditSpec extends SparkSpec {
         s"expected 2 exchanges (rank alignment + aggregate), got $nEx:\n$plan")
     } finally {
       spark.conf.set(key, prev)
-      spark.sql(s"DROP TABLE IF EXISTS $t")
+      graft.sources.IndexCatalog.dropFamily(spark, fam)
     }
   }
 

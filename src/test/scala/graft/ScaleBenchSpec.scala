@@ -240,13 +240,15 @@ class ScaleBenchSpec extends SparkSpec {
     // the per-round edge-exchange volume
     val edges = ScaleBench.pageRankEdges(spark, sf, 3)
     val mMerge = mb(graft.operators.Graph.pageRankOnMerge(edges))
-    val t = graft.operators.Graph.pageRankEdgeLayout(spark, edges,
-      buckets = 4, suffix = "_bytelaw")
+    val fam = "layout_spec_bytelaw"
+    val v = graft.operators.Graph.pageRankLayoutPublish(spark, edges, fam,
+      buckets = 4)
+    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
     try {
-      val mBucketed = mb(graft.operators.Graph.pageRankOnBucketed(spark, t))
+      val mBucketed = mb(graft.operators.Graph.pageRankOnLayout(spark.table(t)))
       assert(mBucketed < 0.6 * mMerge,
         s"bucketed=$mBucketed MB vs merge=$mMerge MB — layout saving gone")
-    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+    } finally graft.sources.IndexCatalog.dropFamily(spark, fam)
   }
 
   test("scale-block plans stay cartesian-free at 10x") {

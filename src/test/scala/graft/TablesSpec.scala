@@ -82,4 +82,13 @@ class TablesSpec extends SparkSpec {
     val path = s"$sf/lineitem.parquet"
     assert(j.count() == selfJoin(spark.read.parquet(path), spark.read.parquet(path)).count())
   }
+
+  test("a file: URI fingerprints as its path; another scheme is refused") {
+    val p = new java.io.File(s"$sf/lineitem.parquet").getAbsolutePath
+    assert(Tables.dirFingerprint("file:" + p) == Tables.dirFingerprint(p))
+    assert(Tables.dirFingerprint("file://" + p) == Tables.dirFingerprint(p))
+    val remote = "hdfs://namenode:8020/warehouse/lineitem.parquet"
+    val e = intercept[IllegalArgumentException](Tables.dirFingerprint(remote))
+    assert(e.getMessage.contains(remote))
+  }
 }
