@@ -43,7 +43,7 @@ object Bench {
     log(key) = log.getOrElse(key, Vector.empty) :+ v
 
   /** `v` rounded half-up to `dec` places, as the artifacts print it. */
-  private def num(v: Double, dec: Int): JValue =
+  private[graft] def num(v: Double, dec: Int): JValue =
     if (v.isNaN || v.isInfinite) JNull
     else JDecimal(BigDecimal(v).setScale(dec, BigDecimal.RoundingMode.HALF_UP))
 

@@ -71,16 +71,6 @@ final class Inputs(val spark: SparkSession, val sfDir: String,
     once(cut(operators.Similarity.autoSrpBits(emb.count()))(_.srpBits()))
   val prEdges: () => DataFrame = once(
     cut(ScaleBench.pageRankEdges(spark, sfDir, times))(_.prEdges().limit(256)))
-  // the lineitem metadata digest the q146 registry default keys its
-  // catalog version on
-  lazy val prFp: String = Tables.dirFingerprint(s"$sfDir/lineitem.parquet")
-  // the default lane's standing layout; the slice's is its own family, so
-  // a limited-edge layout is never served to the timed reps
-  val prStanding: () => Unit = once {
-    ScaleBench.pageRankDefaultPrep(spark, prEdges(), times, prFp, prFamily)
-    onCleanup(operators.Graph.dropStandingLayouts(spark))
-  }
-  def prFamily: String = if (parent.isEmpty) "full" else "warm"
   // a row-limit slice of a symmetric edge set is no longer symmetric and
   // its peel can outrun the round budget: the slice warms on the full set
   val kcEdges: () => DataFrame =
@@ -111,6 +101,15 @@ final class Inputs(val spark: SparkSession, val sfDir: String,
   val ivfFamily: () => String = cut(family("ivf"))(_.ivfFamily)
   val prBuildFamily: () => String = cut(family("pr_build"))(_.prBuildFamily)
   val prLayoutFamily: () => String = cut(family("pr_layout"))(_.prLayoutFamily)
+  // q146's standing layout; the slice's is its own family, so a
+  // limited-edge layout is never served to the timed reps
+  val prFamily: () => String = cut(family("pr"))(_ => family("pr_warm"))
+  // the lineitem metadata digest the q146 default keys its layout on
+  lazy val prFp: String = Tables.dirFingerprint(s"$sfDir/lineitem.parquet")
+  /** q146's get-or-publish: builds the standing layout on first use
+    * and returns the reused version after. */
+  def prStanding(): Int = operators.Graph.pageRankLayoutGetOrPublish(
+    spark, prEdges(), prFamily(), prFp)
   // q179's layout: 32 buckets, published once and pinned by every rep
   val prLayoutVersion: () => Int = once(operators.Graph.pageRankLayoutPublish(
     spark, prEdges(), prLayoutFamily(), buckets = 32))
@@ -288,17 +287,17 @@ object Lanes {
     // q146's default serves a standing bucketed layout, built in the prep;
     // the build's own cost is q146_layout_build (a fresh version per rep)
     scale("q146_pagerank", prep = _.prStanding(), slack = Some((superlinear, "standing-layout serve: O(V) rank exchanges only; headroom for replica-interleaving LZ4 drift")))(in =>
-      ScaleBench.pageRankDefault(in.spark, in.prEdges(), in.times, in.prFp,
-        keySuffix = in.prFamily)),
+      operators.Graph.pageRankFromCatalog(in.spark, in.prFamily(),
+        version = in.prStanding())),
     Lane("q146_layout_build", Scale, three, action(in =>
       operators.Graph.pageRankLayoutPublish(in.spark, in.prEdges(), in.prBuildFamily())),
       in => { in.prEdges(); in.prBuildFamily() }, slack = Some((superlinear, "one deterministic O(E) repartition exchange (outdeg is a window over the co-partitioned data — the join form AQE-flipped broadcast->SMJ at x20, a 139x plan-flip curve); headroom for replica-interleaving LZ4 drift"))),
     // the pre-round-13 default (AQE chooses the per-round join)
     scale("q146_pagerank_aqe", comparator, _.prEdges(), slack = Some((Double.PositiveInfinity, "AQE plan flip: broadcast rank side at x1, SMJ at xN — x1 bytes are not comparable; q179/q146_merge carry the pagerank byte law")))(in =>
-      ScaleBench.pageRank(in.prEdges())),
+      operators.Graph.pageRankOn(in.prEdges())),
     // the unbucketed plan at 100 TB: per-round join pinned to sort-merge
     scale("q146_pagerank_merge", comparator, _.prEdges(), slack = Some((superlinear, "deliberately pessimal sort-merge comparator arm")))(in =>
-      ScaleBench.pageRankMerge(in.prEdges())),
+      operators.Graph.pageRankOnMerge(in.prEdges())),
     // times only the read-in-place rounds over the layout published in the
     // prep; the rounds never exchange the O(E) edge table
     scale("q179_pagerank_bucketed", prep = _.prLayoutVersion(), warm = false)(in =>

@@ -346,64 +346,6 @@ object ScaleBench {
       .localCheckpoint(true)
   }
 
-  /** The DEFAULT PageRank path (round-13 verdict #2): get-or-build the
-    * STANDING bucketed layout, then iterate read-in-place — exactly
-    * what Graph.pageRank (the q146 registry key) runs since round 14
-    * (and, since round 15, through the versioned catalog — family per
-    * factor+suffix below, same get-or-publish law).
-    * The first call per (key, buckets) pays the build; every later one
-    * serves from the standing table, so after the untimed warm builds
-    * it, the timed reps measure the default's steady state — the
-    * serve-only wall the round-13 verdict asked the default to reach.
-    * The build cost stays a measured artifact via the
-    * q146_layout_build lane. `keySuffix` separates the warm pass's
-    * LIMITED edge slice from the full input (same key would serve the
-    * wrong layout). */
-  def pageRankDefault(spark: org.apache.spark.sql.SparkSession,
-                      edges: DataFrame, times: Int, fp: String,
-                      keySuffix: String = "full"): DataFrame = {
-    // same bucket sizing as Graph.pageRank (defaultParallelism), so the
-    // lane measures EXACTLY the configuration the default runs; since
-    // round 15 the standing registry is the versioned IndexCatalog
-    // (family per factor+suffix, fingerprint = the sf dir's lineitem
-    // metadata digest the caller threads through)
-    val t = graft.operators.Graph.pageRankStandingLayout(spark, edges,
-      family = s"pr_bench_x${times}_$keySuffix", fp = fp)
-    graft.operators.Graph.pageRankOnLayout(spark.table(t))
-      .localCheckpoint(true)
-  }
-
-  /** Untimed prep for the default lane: build the standing layout for
-    * the FULL edge set (same family [[pageRankDefault]] uses) before
-    * the rep loop, so every timed rep measures the steady serve the
-    * default API gives a warm application — the build's own cost is
-    * the q146_layout_build lane. */
-  def pageRankDefaultPrep(spark: SparkSession, edges: DataFrame,
-                          times: Int, fp: String,
-                          keySuffix: String = "full"): Unit = {
-    graft.operators.Graph.pageRankStandingLayout(spark, edges,
-      family = s"pr_bench_x${times}_$keySuffix", fp = fp)
-    ()
-  }
-
-  /** The AQE-chooses COMPARATOR (the pre-round-13 default): the
-    * fixed-round integer PageRank iteration over checkpointed frames
-    * (edges+outdegrees checkpointed once inside, ranks checkpointed
-    * per round). Kept as a measured lane so the default-vs-AQE delta
-    * stays a per-round artifact. */
-  def pageRank(edges: DataFrame): DataFrame =
-    graft.operators.Graph.pageRankOn(edges)
-
-  /** The 100 TB-shaped UNBUCKETED lane: the identical recurrence with
-    * the per-round join pinned to sort-merge, because at 100 TB the
-    * rank table outgrows any broadcast and this is the plan the
-    * unbucketed iteration actually runs. The q179-vs-this comparison
-    * (wall-time AND measured shuffle bytes) is the like-for-like
-    * evidence for the bucketed layout; plain q146 remains the
-    * AQE-chooses lane. */
-  def pageRankMerge(edges: DataFrame): DataFrame =
-    graft.operators.Graph.pageRankOnMerge(edges)
-
   private val streamLaneCounter = new java.util.concurrent.atomic.AtomicInteger
 
   /** OFF-the-clock prep for the streaming near-dup scale lane: write

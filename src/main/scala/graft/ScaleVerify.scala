@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
+import org.json4s._
+import org.json4s.jackson.compactJson
 
 /** Recorded correctness pass for the AUTO-SCALING lanes at replicated
   * gate scale (x10/x20) — the operating points the tri-scale oracle
@@ -223,21 +225,30 @@ object ScaleVerify {
       val recall = (brute intersect ivf).size.toDouble / brute.size
       val q34Pass = recall >= 0.8
 
-      // Locale.ROOT: the f-interpolator is locale-sensitive and a comma
-      // decimal separator would corrupt the JSON artifact
-      def d(fmt: String, v: Double): String =
-        String.format(java.util.Locale.ROOT, fmt, Double.box(v))
-      println(
-        s"""{"scale_verify":{"sf":"$sfDir","factor":$times,""" +
-        s""""q22_xx_replica_subset":{"pass":$q22Pass,"n_pairs":${p22xN.size},"expected":${expected.size},"recall":${d("%.4f", q22Recall)},"cand_pairs":$cand22xN,"cand_x1":$cand22x1,"cand_ratio":${d("%.2f", cand22xN.toDouble / math.max(cand22x1, 1L))}},""" +
-        s""""q24_srp_auto":{"pass":$q24Pass,"n_pairs":$nPairs,"n_false_positive":$nBad,"x1_pairs":$n24x1},""" +
-        s""""q162_substr_replica":{"pass":$q162Pass,"n_docs":${s162xN.size},"expected":${expected162.size}},""" +
-        s""""q187_line_dedup_replica":{"pass":$q187Pass,"n_pages":${s187xN.size},"expected":${expected187.size}},""" +
-        s""""q218_weighted_replica":{"pass":$q218Pass,"n_pairs":${s218xN.size},"expected":${expected218.size}},""" +
-        s""""q233_novelty_replica":{"pass":$q233Pass,"n_docs":${s233xN.size},"expected":${expected233.size}},""" +
-        s""""q236_coverage_replica":{"pass":$q236Pass,"n_users":${s236xN.size},"expected":${expected236.size}},""" +
-        s""""q284_dau_scaling":{"pass":$q284Pass,"n_days":${s284xN.size},"expected":${expected284.size}},""" +
-        s""""q34_ivf_auto":{"pass":$q34Pass,"recall_at_5":${d("%.3f", recall)}}}}""")
+      def check(pass: Boolean, fields: (String, JValue)*): JObject =
+        JObject(("pass" -> JBool(pass)) :: fields.toList)
+      println(compactJson(JObject("scale_verify" -> JObject(
+        "sf" -> JString(sfDir), "factor" -> JInt(times),
+        "q22_xx_replica_subset" -> check(q22Pass,
+          "n_pairs" -> JInt(p22xN.size), "expected" -> JInt(expected.size),
+          "recall" -> Bench.num(q22Recall, 4), "cand_pairs" -> JInt(cand22xN),
+          "cand_x1" -> JInt(cand22x1),
+          "cand_ratio" -> Bench.num(cand22xN.toDouble / math.max(cand22x1, 1L), 2)),
+        "q24_srp_auto" -> check(q24Pass, "n_pairs" -> JInt(nPairs),
+          "n_false_positive" -> JInt(nBad), "x1_pairs" -> JInt(n24x1)),
+        "q162_substr_replica" -> check(q162Pass,
+          "n_docs" -> JInt(s162xN.size), "expected" -> JInt(expected162.size)),
+        "q187_line_dedup_replica" -> check(q187Pass,
+          "n_pages" -> JInt(s187xN.size), "expected" -> JInt(expected187.size)),
+        "q218_weighted_replica" -> check(q218Pass,
+          "n_pairs" -> JInt(s218xN.size), "expected" -> JInt(expected218.size)),
+        "q233_novelty_replica" -> check(q233Pass,
+          "n_docs" -> JInt(s233xN.size), "expected" -> JInt(expected233.size)),
+        "q236_coverage_replica" -> check(q236Pass,
+          "n_users" -> JInt(s236xN.size), "expected" -> JInt(expected236.size)),
+        "q284_dau_scaling" -> check(q284Pass,
+          "n_days" -> JInt(s284xN.size), "expected" -> JInt(expected284.size)),
+        "q34_ivf_auto" -> check(q34Pass, "recall_at_5" -> Bench.num(recall, 3))))))
     }
     spark.stop()
   }

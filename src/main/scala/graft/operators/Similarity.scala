@@ -509,7 +509,7 @@ object Similarity {
                            nBuckets: Int = 8): Int =
     // hyperparameters fold into the reuse key (round-15 advice): same
     // data + different bands/bits/dim/buckets is a DIFFERENT index —
-    // the pageRankStandingLayout bucket-count discipline, applied here
+    // the pageRankLayoutGetOrPublish bucket-count discipline, applied here
     graft.sources.IndexCatalog.getOrMint(spark, family,
       graft.sources.IndexCatalog.hexDigest(
         s"$fp|b$bands|w$bits|d$dim|nb$nBuckets"))(

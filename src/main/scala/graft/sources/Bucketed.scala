@@ -17,30 +17,32 @@ import org.apache.spark.sql.functions._
   * tables (load.py); bucketing is the lakehouse analog of its indexed
   * warehouse, re-expressed as Spark's native clustered layout.
   *
-  * The tables live in the session catalog (in-memory, no Hive) with
-  * per-application names; `ensureTables` is idempotent per session.
+  * The two bucketed copies are one [[IndexCatalog]] family with parts
+  * `li` and `ord`, published once per (lineitem, orders, bucket count)
+  * fingerprint and served from a pinned version, so a rerun reuses them
+  * and vacuum reclaims superseded versions.
   */
 object Bucketed {
   private val NumBuckets = 8
+  private val Family = "coloc_q117"
 
-  private def tag(spark: SparkSession): String =
-    spark.sparkContext.applicationId.replaceAll("[^0-9a-zA-Z]", "_")
-
-  /** Write lineitem/orders bucketed by their join keys (idempotent per
-    * session). Returns the two table names. */
-  def ensureTables(spark: SparkSession, dir: String): (String, String) = {
-    val t = tag(spark) + "_" + dir.replaceAll("[^0-9a-zA-Z]", "_")
-    val (liT, ordT) = (s"graft_li_bkt_$t", s"graft_ord_bkt_$t")
-    if (!spark.catalog.tableExists(liT)) {
+  /** Get-or-publish lineitem/orders bucketed and sorted by their join
+    * keys. Returns the version to pin. */
+  def ensureTables(spark: SparkSession, dir: String): Int = {
+    val fp = IndexCatalog.hexDigest(
+      s"${Tables.dirFingerprint(s"$dir/lineitem.parquet")}|" +
+        s"${Tables.dirFingerprint(s"$dir/orders.parquet")}|b$NumBuckets")
+    IndexCatalog.getOrMint(spark, Family, fp) { (_, name) =>
       Warehouse.writeBucketed(
         Tables.lineitem(spark, dir)
           .select("l_orderkey", "l_extendedprice", "l_quantity"),
-        liT, "l_orderkey", NumBuckets, Some("l_orderkey"))
+        name("li"), "l_orderkey", NumBuckets, Some("l_orderkey"))
       Warehouse.writeBucketed(
         Tables.orders(spark, dir).select("o_orderkey", "o_orderpriority"),
-        ordT, "o_orderkey", NumBuckets, Some("o_orderkey"))
+        name("ord"), "o_orderkey", NumBuckets, Some("o_orderkey"))
+      Seq(IndexCatalog.Part("li", "l_orderkey", NumBuckets, "l_orderkey"),
+        IndexCatalog.Part("ord", "o_orderkey", NumBuckets, "o_orderkey"))
     }
-    (liT, ordT)
   }
 
   /** The co-located joined frame (pre-aggregation), exposed so the plan
@@ -52,34 +54,23 @@ object Bucketed {
     * would otherwise broadcast the small side, which is also correct
     * but demonstrates nothing. */
   def colocatedJoinFrame(spark: SparkSession, dir: String): DataFrame = {
-    val (liT, ordT) = ensureTables(spark, dir)
-    joinFrame(spark, liT, ordT)
+    val v = ensureTables(spark, dir)
+    IndexCatalog.readPart(spark, Family, v, "li").hint("merge")
+      .join(IndexCatalog.readPart(spark, Family, v, "ord").hint("merge"),
+        col("l_orderkey") === col("o_orderkey"))
   }
 
-  private def joinFrame(spark: SparkSession, liT: String,
-                        ordT: String): DataFrame =
-    spark.table(liT).hint("merge")
-      .join(spark.table(ordT).hint("merge"),
-        col("l_orderkey") === col("o_orderkey"))
-
   /** q117: revenue per order priority over the co-located join. The
-    * only exchange in the whole plan is the 5-row aggregate's. The
-    * 5-row summary is materialized so the managed bucketed tables can
-    * be DROPPED before returning — otherwise every Verify/Bench run
-    * leaks two fact-table copies into the warehouse dir (table names
-    * embed the applicationId, so nothing ever reuses them). */
+    * only exchange in the whole plan is the 5-row aggregate's. */
   def bucketedJoin(spark: SparkSession, dir: String): DataFrame = {
-    val (liT, ordT) = ensureTables(spark, dir)
-    val out = joinFrame(spark, liT, ordT)
-      .groupBy("o_orderpriority")
+    val out = colocatedJoinFrame(spark, dir)
+    IndexCatalog.vacuum(spark, Family)
+    out.groupBy("o_orderpriority")
       .agg(
         count(lit(1)).as("n_items"),
         sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double")
           .as("revenue"))
-      .localCheckpoint(true) // cut lineage to the catalog tables
-    spark.sql(s"DROP TABLE IF EXISTS $liT")  // managed: drop deletes data
-    spark.sql(s"DROP TABLE IF EXISTS $ordT")
-    out.orderBy("o_orderpriority")
+      .orderBy("o_orderpriority")
   }
 
   val bucketedJoinSql: String =

@@ -31,21 +31,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    retention check). Unreferenced tables from crashed builds age
   *    out past the same grace, by directory mtime.
   *
+  * A family name is `[a-z0-9_]+` and never contains `_v<digit>`, and
+  * every entry point refuses any other name ([[checkFamily]]). So a
+  * directory named `graft_idx_<f>_v<N>…` can only be family `<f>`'s:
+  * vacuum and dropFamily sweep by that prefix and never touch a
+  * sibling family, with no need to read the siblings' manifests.
+  *
   * Local-mode caveat, by design: Spark's in-memory catalog dies with
   * the JVM, so a LATER process sees the version tables only as
-  * warehouse DIRECTORIES. [[readPart]] therefore falls back from
-  * `spark.table` to a direct parquet read of the table location —
-  * values identical, bucket METADATA (the shuffle-free join) lost
-  * until re-registration; with a persistent metastore (the 100 TB
-  * deployment) the same code keeps it. Concurrent builders in separate
-  * processes can race a version number; the loser's tables are
-  * unreferenced (vacuum food) and the manifest move is atomic either
-  * way — REALLY unreferenced, because physical version dirs carry the
-  * builder's pid+nonce mint suffix (round 15: two processes racing the
-  * same version number write DIFFERENT directories; deterministic
-  * suffix-free names had both committers interleaving into one dir
-  * while the winner probed it). A real deployment swaps the file move
-  * for the metastore's conditional put.
+  * warehouse DIRECTORIES. [[readPart]] therefore re-registers a
+  * bucketed part from its manifest spec, or falls back to a direct
+  * parquet read of the table location; with a persistent metastore
+  * (the 100 TB deployment) the catalog entry survives. Concurrent
+  * builders in separate processes can race a version number; the
+  * loser's tables are unreferenced (vacuum food) and the manifest move
+  * is atomic either way — REALLY unreferenced, because physical version
+  * dirs carry the builder's pid+nonce mint suffix (two processes racing
+  * the same version number write DIFFERENT directories). A real
+  * deployment swaps the file move for the metastore's conditional put.
   */
 object IndexCatalog {
 
@@ -57,9 +60,17 @@ object IndexCatalog {
     * into (or the orphan-location guard deleting) ONE directory while
     * the winner probes it. Empty sfx keeps pre-round-15 names valid. */
   def tableName(family: String, v: Int, part: String,
-                sfx: String = ""): String = {
-    require(family.matches("[a-z0-9_]+"), s"family must be [a-z0-9_]+: $family")
-    s"graft_idx_${family}_v$v${sfx}_$part"
+                sfx: String = ""): String =
+    s"graft_idx_${checkFamily(family)}_v$v${sfx}_$part"
+
+  /** The family rule every entry point applies: `[a-z0-9_]+` with no
+    * `_v<digit>`, so no family's version directories or manifest can
+    * match another family's `graft_idx_<f>_v<N>` prefix. Returns the
+    * name; throws IllegalArgumentException naming it otherwise. */
+  private def checkFamily(family: String): String = {
+    require(family.matches("[a-z0-9_]+") && !family.matches(".*_v[0-9].*"),
+      s"index family must be [a-z0-9_]+ without _v<digit>: $family")
+    family
   }
 
   /** 8-byte SHA-1 hex of `s` — for folding build HYPERPARAMETERS into
@@ -103,7 +114,8 @@ object IndexCatalog {
       spark.conf.get("spark.sql.warehouse.dir")).getPath)
 
   private def manifestFile(spark: SparkSession, family: String): java.io.File =
-    new java.io.File(warehouseDir(spark), s"graft_idx_${family}_manifest.txt")
+    new java.io.File(warehouseDir(spark),
+      s"graft_idx_${checkFamily(family)}_manifest.txt")
 
   // `vecs` (unbucketed) or `vecs:vec_id:8:` / `edges:src:32:src`
   // (name:bucketCol:nBuckets:sortCol) — colon-free tokens keep the
@@ -169,26 +181,23 @@ object IndexCatalog {
   private val mintLocks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Mint the next version of `family`: `build` writes the parts given
-    * (version, part => full table name) and returns the part names it
-    * wrote; the manifest flips to the new version ATOMICALLY after all
-    * parts land — a probe pinned before or during the build never sees
-    * it. Returns the new version. */
-  def mint(spark: SparkSession, family: String)(
-      build: (Int, String => String) => Seq[String]): Int =
-    mintParts(spark, family)((v, name) => build(v, name).map(Part(_)))
+  private def lockFor(family: String): Object =
+    mintLocks.computeIfAbsent(checkFamily(family), _ => new Object)
 
-  /** [[mint]] with full part specs (bucket metadata lands in the
-    * manifest for cross-process restoration) and the source
-    * fingerprint `fp` the version is built from (empty = unrecorded,
-    * [[getOrMint]] then never reuses it). */
   private val mintNonce = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** Mint the next version of `family`: `build` writes the parts given
+    * (version, part => full table name) and returns their specs (bucket
+    * metadata lands in the manifest for cross-process restoration); the
+    * manifest flips to the new version ATOMICALLY after all parts land
+    * — a probe pinned before or during the build never sees it. `fp` is
+    * the source fingerprint the version is built from (empty =
+    * unrecorded, [[getOrMint]] then never reuses it). Returns the new
+    * version. */
   def mintParts(spark: SparkSession, family: String, fp: String = "")(
       build: (Int, String => String) => Seq[Part]): Int = {
     require(fp.matches("[0-9a-f]*"), s"fingerprint must be lowercase hex: $fp")
-    val lock = mintLocks.computeIfAbsent(family, _ => new Object)
-    lock.synchronized {
+    lockFor(family).synchronized {
       val prev = readManifest(spark, family)
       // maxOption: a manifest whose version lines were all hand-pruned
       // (or failed the line grammar) still has a current= header — mint
@@ -230,8 +239,7 @@ object IndexCatalog {
   def getOrMint(spark: SparkSession, family: String, fp: String)(
       build: (Int, String => String) => Seq[Part]): Int = {
     require(fp.matches("[0-9a-f]+"), s"fingerprint must be lowercase hex: $fp")
-    val lock = mintLocks.computeIfAbsent(family, _ => new Object)
-    lock.synchronized {
+    lockFor(family).synchronized {
       val reusable = readManifest(spark, family).flatMap(m =>
         m.versions.find(_.v == m.current).filter(e =>
           e.fp == fp && e.parts.nonEmpty &&
@@ -277,8 +285,7 @@ object IndexCatalog {
         .filter(_.nBuckets > 0)
       spec.flatMap { p =>
         try {
-          val lock = mintLocks.computeIfAbsent(family, _ => new Object)
-          lock.synchronized {
+          lockFor(family).synchronized {
             if (!spark.catalog.tableExists(t)) {
               val ddl = spark.read.parquet(d.getPath).schema.toDDL
               val sorted =
@@ -294,238 +301,73 @@ object IndexCatalog {
     }
   }
 
-  /** Resolve a part to a REGISTERED table name (restoring the external
-    * bucketed registration cross-process via [[readPart]]'s path) — for
-    * callers that hand the name to `spark.table`-based iterators. */
-  def resolvePart(spark: SparkSession, family: String, v: Int,
-                  part: String): String = {
-    readPart(spark, family, v, part) // registers if possible
-    partTableName(spark, family, v, part)
-  }
-
   /** Pin the version a probe will read: an explicit `version` if >0,
     * else the manifest's CURRENT — captured once, so everything the
     * caller derives from it stays at that snapshot. */
   def pin(spark: SparkSession, family: String, version: Int = -1): Int =
-    if (version > 0) version
+    if (version > 0) { checkFamily(family); version }
     else currentVersion(spark, family).getOrElse(
       throw new IllegalStateException(
         s"index family $family has no published version"))
 
-  /** [[vacuum]]'s full result: what was reclaimed, plus whether the
-    * ORPHAN pass was suppressed this round and why (round-16 verdict
-    * #7: the fail-closed skip was correct but invisible — a deployment
-    * at the family cap, or with a permanently corrupt sibling
-    * manifest, never learned its orphans were accumulating). */
-  final case class VacuumReport(dropped: Seq[String],
-                                orphanSweepSuppressed: Boolean,
-                                suppressedReason: String)
-
   /** Reclaim old versions: drop every version that is NOT current, NOT
     * in the newest `keep` versions, and older than `graceMs` — plus
-    * any `graft_idx_<family>_v*` table directory the manifest does not
-    * reference at all (crashed builds). Returns the dropped tables;
-    * [[vacuumReport]] additionally reports a suppressed orphan pass. */
+    * any version directory of this family the manifest does not
+    * reference at all (crashed builds), past the same grace by mtime.
+    * Returns the dropped tables. */
   def vacuum(spark: SparkSession, family: String, keep: Int = 2,
              graceMs: Long = 30L * 60 * 1000): Seq[String] =
-    vacuumReport(spark, family, keep, graceMs).dropped
-
-  def vacuumReport(spark: SparkSession, family: String, keep: Int = 2,
-                   graceMs: Long = 30L * 60 * 1000): VacuumReport = {
-    val lock = mintLocks.computeIfAbsent(family, _ => new Object)
-    lock.synchronized {
-      val mOpt = readManifest(spark, family)
-      if (mOpt.isEmpty)
-        return VacuumReport(Seq.empty, orphanSweepSuppressed = false, "")
-      val m = mOpt.get
-      val cutoff = System.currentTimeMillis() - graceMs
-      val keepVs = m.versions.map(_.v).sorted.takeRight(math.max(1, keep))
-        .toSet + m.current
-      val (dead, live) = m.versions.partition(e =>
-        !keepVs.contains(e.v) && e.publishedMs < cutoff)
-      val droppedTables = dead.flatMap(e => e.parts.map(p =>
-        tableName(family, e.v, p.name, e.sfx)))
-      // unreferenced directories (crashed builds): same grace age, by
-      // dir mtime, never a version the manifest still lists
-      val refd = m.versions.flatMap(e => e.parts.map(p =>
-        tableName(family, e.v, p.name, e.sfx)
-          .toLowerCase(java.util.Locale.ROOT))).toSet
-      // version-dir grammar + ownership check: the grammar ALONE cannot
-      // disambiguate siblings, because family names may themselves
-      // contain `_v<digit>_` — family `srp_v2`'s live
-      // `graft_idx_srp_v2_v1_cells` matches family `srp`'s version-dir
-      // pattern (`graft_idx_srp_v` + `2_v1_cells`). So a candidate is
-      // an orphan only if NO other family's manifest claims it (and
-      // manifest files themselves — `..._v2_manifest.txt` parses as a
-      // `v2` dir of the prefix family — are never orphan candidates).
-      val exactOrphan = s"graft_idx_${family}_v\\d+[a-z0-9]*_.*".r
-      // FAIL CLOSED on sibling-manifest uncertainty (round-15 advice):
-      // an unparseable/transiently-unreadable sibling manifest means
-      // the ownership authority for the grammar ambiguity is missing —
-      // a sibling's live dirs would classify as this family's orphans.
-      // Skip the orphan pass for the round; manifest-referenced dead
-      // versions (definitively ours) are still reclaimed below.
-      val claims = claimedByOtherFamilies(spark, family)
-      val others = claims.claimed
-      val orphans =
-        if (claims.uncertain) Seq.empty
-        else Option(warehouseDir(spark).listFiles())
-          .getOrElse(Array.empty).toSeq
-          .filter(f => exactOrphan.pattern.matcher(f.getName).matches() &&
-            !f.getName.contains("_manifest.txt") &&
-            !refd(f.getName) && !others(f.getName) &&
-            f.lastModified() < cutoff)
+    lockFor(family).synchronized {
+      readManifest(spark, family).fold(Seq.empty[String]) { m =>
+        val cutoff = System.currentTimeMillis() - graceMs
+        val keepVs = m.versions.map(_.v).sorted.takeRight(math.max(1, keep))
+          .toSet + m.current
+        val (dead, live) = m.versions.partition(e =>
+          !keepVs.contains(e.v) && e.publishedMs < cutoff)
+        val refd = tablesOf(family, m.versions).toSet
+        val orphans = versionDirs(spark, family)
+          .filter(f => !refd(f.getName) && f.lastModified() < cutoff)
           .map(_.getName)
-      (droppedTables ++ orphans).foreach { t =>
-        try spark.sql(s"DROP TABLE IF EXISTS $t")
-        catch { case _: Throwable => () }
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-          warehouseDir(spark), t.toLowerCase(java.util.Locale.ROOT)))
-      }
-      if (dead.nonEmpty)
-        writeManifest(spark, family, Manifest(m.current, live))
-      val reason =
-        if (!claims.uncertain) ""
-        else if (claims.overCap)
-          s"family count exceeds ownership-scan cap $MaxOwnershipScanFamilies"
-        else "unreadable sibling manifest(s): " +
-          claims.unreadable.mkString(",")
-      if (claims.uncertain)
-        System.err.println(s"[graft] vacuum($family): orphan pass " +
-          s"SUPPRESSED (fail-closed) — $reason; manifest-referenced " +
-          "dead versions were still reclaimed")
-      VacuumReport(droppedTables ++ orphans, claims.uncertain, reason)
-    }
-  }
-
-  /** Families-count guard for the ownership scan (round-15 verdict
-    * #8): [[claimedByOtherFamilies]] is O(families x their version
-    * dirs) small manifest reads — metadata-cheap at any sane family
-    * count, but a warehouse that has grown past this many families
-    * should hold ownership in a metastore, not a per-file scan. Past
-    * the cap the scan is NOT attempted and the caller fails closed
-    * (orphan sweeps skip), so the cost ceiling is discovered here, in
-    * the artifact, instead of in production. */
-  val MaxOwnershipScanFamilies: Int = 256
-
-  /** Claims by OTHER families: the table dirs (and manifest filenames,
-    * with temps) their manifests reference, plus the families whose
-    * manifest file EXISTS but could not be parsed — the fail-closed
-    * signal (an unreadable sibling manifest means its claims are
-    * unknown, so no orphan deletion may proceed this round). `overCap`
-    * fails closed the same way when the family count exceeds
-    * [[MaxOwnershipScanFamilies]]. */
-  private final case class Claims(claimed: Set[String],
-                                  unreadable: Seq[String],
-                                  overCap: Boolean = false) {
-    def uncertain: Boolean = unreadable.nonEmpty || overCap
-  }
-
-  /** Every table dir (and manifest filename, with temps) claimed by
-    * any OTHER family's manifest in this warehouse — the ownership
-    * authority for the naming-grammar ambiguity above. A LIST of
-    * manifest files + one small read each: metadata-cheap at any sane
-    * family count, but O(families x their version dirs) — a
-    * 1000-family warehouse should centralize ownership in a metastore
-    * instead; the guard in [[vacuum]]/[[dropFamily]] callers keeps the
-    * cost visible rather than discovered in production. */
-  private def claimedByOtherFamilies(spark: SparkSession,
-                                     family: String): Claims = {
-    val mre = "graft_idx_([a-z0-9_]+)_manifest\\.txt".r
-    val sibs = Option(warehouseDir(spark).listFiles())
-      .getOrElse(Array.empty).toSeq
-      .flatMap(f => f.getName match {
-        case mre(fam) if fam != family => Some((f.getName, fam))
-        case _                         => None
-      })
-    if (sibs.size > MaxOwnershipScanFamilies)
-      return Claims(Set.empty, Seq.empty, overCap = true)
-    val (claimed, unreadable) = sibs.foldLeft(
-      (Set.empty[String], Seq.empty[String])) { case ((c, u), (mf, fam)) =>
-      readManifest(spark, fam) match {
-        case Some(m) =>
-          (c + mf ++ m.versions.flatMap(e => e.parts.flatMap { p =>
-            val t = tableName(fam, e.v, p.name, e.sfx)
-            Seq(t, t.toLowerCase(java.util.Locale.ROOT))
-          }), u)
-        case None => (c + mf, u :+ fam) // exists but unparseable
+        val dropped = tablesOf(family, dead) ++ orphans
+        dropped.foreach(dropTable(spark, _))
+        if (dead.nonEmpty)
+          writeManifest(spark, family, Manifest(m.current, live))
+        dropped
       }
     }
-    Claims(claimed, unreadable)
-  }
 
-  /** Drop a whole family — manifest, every referenced table, every
-    * orphan dir (spec teardown / decommission). Returns true when the
-    * drop is COMPLETE (manifest deleted); false when sibling-manifest
-    * uncertainty suppressed the version-dir sweep — the manifest is
-    * then KEPT (round-16 advice: deleting it while dirs survive made
-    * the leak permanent, because a manifest-less family has nothing
-    * for vacuum or a dropFamily retry to read), so calling dropFamily
-    * again after the sibling heals reclaims everything. */
-  def dropFamily(spark: SparkSession, family: String): Boolean = {
-    // same grammar tableName/mint enforce — an unvalidated family here
-    // would be interpolated into the regex below, where a metachar
-    // (e.g. `.`) silently matches nothing or too much
-    require(family.matches("[a-z0-9_]+"), s"family must be [a-z0-9_]+: $family")
-    val lock = mintLocks.computeIfAbsent(family, _ => new Object)
-    lock.synchronized {
-      readManifest(spark, family).foreach(_.versions.foreach(e =>
-        e.parts.foreach { p =>
-          val t = tableName(family, e.v, p.name, e.sfx)
-          try spark.sql(s"DROP TABLE IF EXISTS $t")
-          catch { case _: Throwable => () }
-          org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
-            warehouseDir(spark), t.toLowerCase(java.util.Locale.ROOT)))
-        }))
-      // version dirs + manifest temps of THIS family only: a bare
-      // `graft_idx_<family>_` prefix would also match a family whose
-      // name extends this one (dropping `srp` must not touch
-      // `srp_docs`' `graft_idx_srp_docs_v1_*` dirs), so require the
-      // version marker or the manifest filename after the family name —
-      // and, since the grammar is still ambiguous against a sibling
-      // whose name extends this one with `_v<digit>` (see vacuum),
-      // never delete what another family's manifest claims
-      val exact = (s"graft_idx_${family}_v\\d+[a-z0-9]*_.*|" +
-        s"graft_idx_${family}_manifest\\.txt(\\.tmp_pid\\d+)?").r
-      val myManifest = s"graft_idx_${family}_manifest\\.txt(\\.tmp_pid\\d+)?".r
-      // fail closed like vacuum: with any sibling manifest unreadable,
-      // sweep only THIS family's manifest files (unambiguous), never
-      // version dirs the grammar can't disambiguate from a sibling's
-      val claims = claimedByOtherFamilies(spark, family)
-      val others = claims.claimed
+  /** Drop a whole family: every table its manifest references, every
+    * version directory it owns (crashed builds included), and the
+    * manifest with any temp a crashed publish left. */
+  def dropFamily(spark: SparkSession, family: String): Unit =
+    lockFor(family).synchronized {
+      val listed = readManifest(spark, family).fold(Seq.empty[String])(m =>
+        tablesOf(family, m.versions))
+      (listed ++ versionDirs(spark, family).map(_.getName)).distinct
+        .foreach(dropTable(spark, _))
+      val manifests = s"graft_idx_${family}_manifest\\.txt(\\.tmp_pid\\d+)?".r
       Option(warehouseDir(spark).listFiles()).getOrElse(Array.empty)
-        .filter { f =>
-          val isMyManifest = myManifest.pattern.matcher(f.getName).matches()
-          // a manifest TEMP (`...manifest.txt.tmp_pid<N>`) is always
-          // sweepable — it is this family's, and never the retry
-          // handle; the LIVE manifest and the version dirs sweep only
-          // when sibling claims are certain
-          val isMyManifestTemp = isMyManifest && !f.getName.endsWith(".txt")
-          exact.pattern.matcher(f.getName).matches() &&
-            !others(f.getName) &&
-            (isMyManifestTemp ||
-              (!claims.uncertain && isMyManifest) ||
-              (!claims.uncertain && !f.getName.contains("_manifest.txt")))
-        }
+        .filter(f => manifests.matches(f.getName))
         .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-      if (claims.uncertain) {
-        // KEEP the manifest: with it gone, the surviving version dirs
-        // have no owner — vacuum(family) early-returns on a missing
-        // manifest and the leak is permanent. Kept, the family is
-        // visibly half-dropped (probes fail on the dropped tables) and
-        // a later dropFamily/vacuum after the sibling heals reclaims.
-        System.err.println(s"[graft] dropFamily($family): version-dir " +
-          "sweep SUPPRESSED (fail-closed) — " +
-          (if (claims.overCap)
-            s"family count exceeds ownership-scan cap $MaxOwnershipScanFamilies"
-          else "unreadable sibling manifest(s): " +
-            claims.unreadable.mkString(",")) +
-          "; manifest KEPT — re-run dropFamily after the sibling heals")
-        false
-      } else {
-        manifestFile(spark, family).delete()
-        true
-      }
     }
+
+  private def tablesOf(family: String, vs: Seq[Version]): Seq[String] =
+    vs.flatMap(e => e.parts.map(p => tableName(family, e.v, p.name, e.sfx)))
+
+  /** Every `graft_idx_<family>_v<N>…` directory in the warehouse. The
+    * family rule makes the match exact: no other family's directory or
+    * manifest has this prefix (see [[checkFamily]]). */
+  private def versionDirs(spark: SparkSession,
+                          family: String): Seq[java.io.File] = {
+    val dir = s"graft_idx_${family}_v\\d+[a-z0-9]*_.*".r
+    Option(warehouseDir(spark).listFiles()).getOrElse(Array.empty).toSeq
+      .filter(f => dir.matches(f.getName))
+  }
+
+  private def dropTable(spark: SparkSession, t: String): Unit = {
+    try spark.sql(s"DROP TABLE IF EXISTS $t")
+    catch { case _: Throwable => () }
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(
+      warehouseDir(spark), t.toLowerCase(java.util.Locale.ROOT)))
   }
 }

@@ -241,10 +241,10 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val fam = "layout_spec_bucketed"
     val v = Graph.pageRankLayoutPublish(spark, edges, fam, buckets = 8)
-    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
+    val layout = graft.sources.IndexCatalog.readPart(spark, fam, v, "edges")
     try {
       // rank identity: the layout changes WHERE bytes move, never values
-      val bucketed = Graph.pageRankOnLayout(spark.table(t)).collect()
+      val bucketed = Graph.pageRankOnLayout(layout).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(bucketed === plain, "bucketed ranks diverge from unbucketed")
       // shuffle-volume law (the Metrics half of the proof), in the
@@ -263,7 +263,7 @@ class GraphSpec extends SparkSpec {
           Graph.pageRankOn(edges).write.mode("overwrite").format("noop").save()
         }
         val swBucketed = shuffled {
-          Graph.pageRankOnLayout(spark.table(t))
+          Graph.pageRankOnLayout(layout)
             .write.mode("overwrite").format("noop").save()
         }
         info(f"shuffle write: unbucketed ${swPlain / 1e3}%.0f KB vs bucketed ${swBucketed / 1e3}%.0f KB")
@@ -289,7 +289,7 @@ class GraphSpec extends SparkSpec {
     val v =
       try Graph.pageRankLayoutPublish(spark, edges, fam, buckets = 8)
       finally spark.conf.set(key, prev)
-    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
+    val t = graft.sources.IndexCatalog.partTableName(spark, fam, v, "edges")
     try {
       // checkpointed input, exactly like the bench lanes: the law is
       // about the BUILD's shuffle, not the edge derivation's
@@ -328,38 +328,37 @@ class GraphSpec extends SparkSpec {
     graft.sources.IndexCatalog.dropFamily(spark, fam)
     try {
       // build-then-serve (the explicit path) as the reference ranks
+      def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val refFam = "layout_spec_ref"
       val ref =
         try {
           val vRef = Graph.pageRankLayoutPublish(spark, edges, refFam, buckets = 8)
-          Graph.pageRankOnLayout(spark.table(graft.sources.IndexCatalog
-            .resolvePart(spark, refFam, vRef, "edges"))).collect()
-            .map(r => r.getLong(0) -> r.getLong(1)).toMap
+          ranks(Graph.pageRankFromCatalog(spark, refFam, version = vRef))
         } finally graft.sources.IndexCatalog.dropFamily(spark, refFam)
       // standing path: first call builds (and publishes family@v1)...
-      val t1 = Graph.pageRankStandingLayout(spark, edges, fam, fp)
-      val served = Graph.pageRankOnLayout(spark.table(t1)).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val v1 = Graph.pageRankLayoutGetOrPublish(spark, edges, fam, fp)
+      val served = ranks(Graph.pageRankFromCatalog(spark, fam, version = v1))
       assert(served === ref, "standing-layout ranks diverge from build-then-serve")
       // ...reuse-without-rebuild: same family+fingerprint returns the
-      // SAME table and a poisoned edge frame proves the frame is never
+      // SAME version and a poisoned edge frame proves the frame is never
       // reconstructed (the by-name law, now held by the catalog)
       val poisoned = spark.range(1).selectExpr(
         "assert_true(false) as src", "id as dst")
-      val t2 = Graph.pageRankStandingLayout(spark, poisoned.toDF(), fam, fp)
-      assert(t2 === t1, "reuse hit must return the standing table")
+      val v2 = Graph.pageRankLayoutGetOrPublish(spark, poisoned.toDF(), fam, fp)
+      assert(v2 === v1, "reuse hit must return the standing version")
       // a CHANGED fingerprint rebuilds into the next version
-      val t3 = Graph.pageRankStandingLayout(spark, edges, fam, "ffff0000")
-      assert(t3 !== t1, "new fingerprint must mint a new version")
+      val v3 = Graph.pageRankLayoutGetOrPublish(spark, edges, fam, "ffff0000")
+      assert(v3 !== v1, "new fingerprint must mint a new version")
       // concurrent same-key callers (the round-13 advice race): all
-      // land on one table, nobody's serve is dropped out from under it
+      // land on one version, nobody's serve is dropped out from under it
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
-      val names = Await.result(
+      val versions = Await.result(
         Future.sequence((1 to 4).map(_ => Future(
-          Graph.pageRankStandingLayout(spark, edges, fam, fp)))), 2.minutes)
-      assert(names.distinct.size === 1)
+          Graph.pageRankLayoutGetOrPublish(spark, edges, fam, fp)))), 2.minutes)
+      assert(versions.distinct.size === 1)
     } finally graft.sources.IndexCatalog.dropFamily(spark, fam)
   }
 

@@ -107,6 +107,39 @@ class IndexCatalogSpec extends SparkSpec {
     } finally IndexCatalog.dropFamily(spark, fam)
   }
 
+  test("PageRank layout publish records its bucket spec in the manifest") {
+    // without the spec a later process's readPart reads the layout as
+    // plain parquet and every round re-exchanges the edge table
+    val fam = "spec_prspec_" + math.abs(this.hashCode())
+    IndexCatalog.dropFamily(spark, fam)
+    try {
+      val v = Graph.pageRankLayoutPublish(spark, Graph.pageRankEdges(spark, sf),
+        fam, buckets = 4)
+      val m = IndexCatalog.readManifest(spark, fam).get
+      assert(m.versions.find(_.v == v).get.parts ===
+        Seq(IndexCatalog.Part("edges", "src", 4, "src")))
+    } finally IndexCatalog.dropFamily(spark, fam)
+  }
+
+  test("q117 rides the catalog: one family, no graft_*_bkt_* directory written") {
+    val wh = new java.io.File(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    // a persistent warehouse may hold leftovers of earlier runs, so the
+    // law is that these calls write none, not that none exists
+    def bkt(): Map[String, Long] = Option(wh.listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.matches("graft_.*_bkt_.*"))
+      .map(f => f.getName -> f.lastModified()).toMap
+    val before = bkt()
+    graft.sources.Bucketed.bucketedJoin(spark, sf).collect()
+    graft.sources.Bucketed.colocatedJoinFrame(spark, sf).count()
+    val written = bkt().filter { case (n, t) => !before.get(n).contains(t) }
+    assert(written.isEmpty, s"q117 wrote session-named tables: ${written.keys}")
+    val m = IndexCatalog.readManifest(spark, "coloc_q117")
+    assert(m.flatMap(m => m.versions.find(_.v == m.current)).map(_.parts) ===
+      Some(Seq(IndexCatalog.Part("li", "l_orderkey", 8, "l_orderkey"),
+        IndexCatalog.Part("ord", "o_orderkey", 8, "o_orderkey"))))
+  }
+
   test("vacuum drops only unpinnable history and crashed-build orphans") {
     val fam = "spec_vac_" + math.abs(this.hashCode())
     IndexCatalog.dropFamily(spark, fam)
@@ -151,10 +184,10 @@ class IndexCatalogSpec extends SparkSpec {
       // build writes a plain parquet DIRECTORY at the table location —
       // exactly what a later JVM sees of a managed table after the
       // in-memory catalog died with its writer
-      IndexCatalog.mint(spark, fam) { (v, name) =>
+      IndexCatalog.mintParts(spark, fam) { (v, name) =>
         df.write.mode("overwrite").parquet(
           new java.io.File(wh, name("part")).getPath)
-        Seq("part")
+        Seq(IndexCatalog.Part("part"))
       }
       val got = IndexCatalog.readPart(spark, fam, 1, "part")
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -170,8 +203,9 @@ class IndexCatalogSpec extends SparkSpec {
     try {
       val df = spark.range(5).selectExpr("id", "id * 3 as y")
       def publish(fam: String): Unit =
-        IndexCatalog.mint(spark, fam) { (_, name) =>
-          df.write.mode("overwrite").saveAsTable(name("part")); Seq("part")
+        IndexCatalog.mintParts(spark, fam) { (_, name) =>
+          df.write.mode("overwrite").saveAsTable(name("part"))
+          Seq(IndexCatalog.Part("part"))
         }
       publish(base); publish(sibling)
       IndexCatalog.dropFamily(spark, base)
@@ -183,36 +217,30 @@ class IndexCatalogSpec extends SparkSpec {
     } finally IndexCatalog.dropFamily(spark, sibling)
   }
 
-  test("vacuum is exact: vacuuming `f` never deletes live dirs of sibling " +
-      "family `f_v2` (family names may contain _v<digit>)") {
-    val base = "spec_vsib_" + math.abs(this.hashCode())
-    val sibling = base + "_v2" // graft_idx_<sibling>_v1_part starts with
-                               // graft_idx_<base>_v — the startsWith trap
-    IndexCatalog.dropFamily(spark, base)
-    IndexCatalog.dropFamily(spark, sibling)
-    try {
-      val df = spark.range(7).selectExpr("id", "id * 5 as y")
-      def publish(fam: String): Unit =
-        IndexCatalog.mint(spark, fam) { (_, name) =>
-          df.write.mode("overwrite").saveAsTable(name("part")); Seq("part")
-        }
-      publish(base); publish(sibling)
-      // zero grace: everything vacuum CAN claim, it claims now
-      val dropped = IndexCatalog.vacuum(spark, base, keep = 1, graceMs = 0)
-      assert(!dropped.exists(_.contains(sibling)),
-        s"vacuum of $base claimed sibling tables: $dropped")
-      assert(IndexCatalog.readPart(spark, sibling, 1, "part").count() === 7L,
-        "sibling family's live version dir must survive the vacuum")
-      // same ambiguity class for dropFamily: dropping `f` must leave
-      // `f_v2`'s manifest and live dirs intact
-      IndexCatalog.dropFamily(spark, base)
-      assert(IndexCatalog.currentVersion(spark, base).isEmpty)
-      assert(IndexCatalog.currentVersion(spark, sibling) === Some(1),
-        "dropFamily of the prefix family deleted the sibling's manifest")
-      assert(IndexCatalog.readPart(spark, sibling, 1, "part").count() === 7L,
-        "sibling family's live version dir must survive the drop")
-    } finally { IndexCatalog.dropFamily(spark, base)
-                IndexCatalog.dropFamily(spark, sibling) }
+  test("family rule: every entry point refuses a name with _v<digit>") {
+    // a family `f_v2` would write `graft_idx_f_v2_v1_*`, which is also
+    // a version directory of family `f`; refusing the name is what lets
+    // vacuum and dropFamily sweep `f`'s prefix without reading siblings
+    val bad = "spec_rule_v2"
+    def refused(call: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](call)
+      assert(e.getMessage.contains(bad), s"refusal must name the family: $e")
+    }
+    var builds = 0
+    def build(v: Int, name: String => String): Seq[IndexCatalog.Part] = {
+      builds += 1
+      Seq(IndexCatalog.Part("part"))
+    }
+    refused(IndexCatalog.mintParts(spark, bad)(build))
+    refused(IndexCatalog.getOrMint(spark, bad, "aa11")(build))
+    refused(IndexCatalog.vacuum(spark, bad))
+    refused(IndexCatalog.dropFamily(spark, bad))
+    assert(builds === 0, "a refused family must never reach its build")
+    // names in use stay valid: `_v` not followed by a digit, and digits
+    // not preceded by `_v`
+    Seq("pr_q146", "lsh_q311", "srp_q24", "ivf_q34", "srp_bench_x10",
+      "lsh_q22_served_bench", "spec_vacuum", "v2_spec").foreach(f =>
+      assert(IndexCatalog.tableName(f, 1, "part") === s"graft_idx_${f}_v1_part"))
   }
 
   test("mint survives a manifest with a current= header but no version lines") {
@@ -225,9 +253,9 @@ class IndexCatalogSpec extends SparkSpec {
       java.nio.file.Files.write(
         new java.io.File(wh, s"graft_idx_${fam}_manifest.txt").toPath,
         "current=3\n".getBytes)
-      val v = IndexCatalog.mint(spark, fam) { (_, name) =>
+      val v = IndexCatalog.mintParts(spark, fam) { (_, name) =>
         spark.range(3).write.mode("overwrite").saveAsTable(name("part"))
-        Seq("part")
+        Seq(IndexCatalog.Part("part"))
       }
       assert(v === 1, "numbering restarts when no version lines survive")
       assert(IndexCatalog.readPart(spark, fam, v, "part").count() === 3L)
@@ -341,89 +369,6 @@ class IndexCatalogSpec extends SparkSpec {
       val v3 = Similarity.srpIndexGetOrPublish(spark, emb, fam, fp, bands = 8)
       assert(v3 === 2, "a hyperparameter change must mint a new version")
     } finally IndexCatalog.dropFamily(spark, fam)
-  }
-
-  test("vacuum fails closed: an unreadable sibling manifest suspends the " +
-      "orphan sweep for the round") {
-    val fam = "spec_fc_" + math.abs(this.hashCode())
-    val sib = fam + "_sibling"
-    IndexCatalog.dropFamily(spark, fam)
-    val wh = new java.io.File(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val corrupt = new java.io.File(wh, s"graft_idx_${sib}_manifest.txt")
-    try {
-      val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 200)
-      Similarity.srpIndexPublish(emb, fam)
-      // a crashed build's orphan dir, past any grace age
-      val orphan = IndexCatalog.tableName(fam, 99, "vecs")
-      emb.limit(1).write.mode("overwrite").saveAsTable(orphan)
-      // a sibling manifest that EXISTS but cannot be parsed: its claims
-      // are unknown, so the orphan's ownership cannot be resolved —
-      // a transiently-corrupt sibling must never cost it its dirs
-      java.nio.file.Files.write(corrupt.toPath,
-        "not a manifest   garbage".getBytes)
-      val dropped = IndexCatalog.vacuum(spark, fam, keep = 1, graceMs = 0)
-      assert(!dropped.exists(_.matches(".*_v99[a-z0-9]*_.*")),
-        "fail closed: no orphan deletion while a sibling manifest is unreadable")
-      val orphanDir = new java.io.File(wh,
-        orphan.toLowerCase(java.util.Locale.ROOT))
-      assert(orphanDir.exists(), "orphan dir must survive the round")
-      // sibling healthy again: the next vacuum reclaims normally
-      corrupt.delete()
-      val dropped2 = IndexCatalog.vacuum(spark, fam, keep = 1, graceMs = 0)
-      assert(dropped2.exists(_.matches(".*_v99[a-z0-9]*_.*")),
-        "orphan reclaim resumes once ownership is resolvable")
-      assert(!orphanDir.exists())
-    } finally {
-      corrupt.delete()
-      IndexCatalog.dropFamily(spark, fam)
-    }
-  }
-
-  test("suppressed orphan pass is telemetry, not silence: vacuumReport " +
-      "records it and dropFamily keeps the manifest as the retry handle") {
-    val fam = "spec_fc2_" + math.abs(this.hashCode())
-    val sib = fam + "_sibling"
-    IndexCatalog.dropFamily(spark, fam)
-    val wh = new java.io.File(new java.net.URI(
-      spark.conf.get("spark.sql.warehouse.dir")).getPath)
-    val corrupt = new java.io.File(wh, s"graft_idx_${sib}_manifest.txt")
-    try {
-      val emb = Tables.embeddings(spark, sf).filter(col("vec_id") < 200)
-      Similarity.srpIndexPublish(emb, fam)
-      val orphan = IndexCatalog.tableName(fam, 99, "vecs")
-      emb.limit(1).write.mode("overwrite").saveAsTable(orphan)
-      val orphanDir = new java.io.File(wh,
-        orphan.toLowerCase(java.util.Locale.ROOT))
-      java.nio.file.Files.write(corrupt.toPath,
-        "not a manifest   garbage".getBytes)
-      // round-16 verdict #7: the fail-closed skip must be VISIBLE
-      val rep = IndexCatalog.vacuumReport(spark, fam, keep = 1, graceMs = 0)
-      assert(rep.orphanSweepSuppressed,
-        "a suppressed orphan pass must be reported, not silent")
-      assert(rep.suppressedReason.contains(sib),
-        "the reason names the unreadable sibling")
-      // round-16 advice: dropFamily under uncertainty keeps the
-      // manifest — deleting it while version dirs survive made the
-      // leak permanent (manifest-less families have nothing for a
-      // retry to read)
-      assert(!IndexCatalog.dropFamily(spark, fam),
-        "incomplete drop must report false")
-      assert(IndexCatalog.currentVersion(spark, fam).nonEmpty,
-        "manifest kept as the retry handle")
-      assert(orphanDir.exists(), "uncertain ownership: dir survives")
-      // sibling heals: the RETRY completes the drop and reclaims
-      corrupt.delete()
-      assert(IndexCatalog.dropFamily(spark, fam), "retry completes")
-      assert(IndexCatalog.currentVersion(spark, fam).isEmpty)
-      assert(!orphanDir.exists(), "the leak is reclaimed by the retry")
-      // healthy-path report: nothing suppressed
-      val clean = IndexCatalog.vacuumReport(spark, fam)
-      assert(!clean.orphanSweepSuppressed && clean.suppressedReason.isEmpty)
-    } finally {
-      corrupt.delete()
-      IndexCatalog.dropFamily(spark, fam)
-    }
   }
 
   test("manifest publish is atomic and tolerant: a torn temp file never " +

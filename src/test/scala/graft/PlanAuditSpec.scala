@@ -277,9 +277,9 @@ class PlanAuditSpec extends SparkSpec {
     val fam = "layout_spec_audit"
     val v = graft.operators.Graph.pageRankLayoutPublish(spark,
       graft.operators.Graph.pageRankEdges(spark, sf), fam, buckets = 8)
-    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
     try {
-      val round = graft.operators.Graph.pageRankRoundFrame(spark, t)
+      val round = graft.operators.Graph.pageRankRoundFrame(
+        graft.sources.IndexCatalog.readPart(spark, fam, v, "edges"))
       round.write.mode("overwrite").format("noop").save()
       val plan = round.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"not a merge join:\n$plan")

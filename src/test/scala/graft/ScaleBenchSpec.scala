@@ -228,7 +228,7 @@ class ScaleBenchSpec extends SparkSpec {
       "q218_weighted_jaccard" -> (f => ScaleBench.weightedJaccard(docs(f))),
       "q223_kcore" -> (f => ScaleBench.kcore(ScaleBench.kcoreEdges(spark, sf, f))),
       "q146_pagerank" -> (f =>
-        ScaleBench.pageRank(ScaleBench.pageRankEdges(spark, sf, f))))
+        graft.operators.Graph.pageRankOn(ScaleBench.pageRankEdges(spark, sf, f))))
     for ((name, mk) <- lanes) {
       val m1 = mb(mk(1))
       val m3 = mb(mk(3))
@@ -243,9 +243,9 @@ class ScaleBenchSpec extends SparkSpec {
     val fam = "layout_spec_bytelaw"
     val v = graft.operators.Graph.pageRankLayoutPublish(spark, edges, fam,
       buckets = 4)
-    val t = graft.sources.IndexCatalog.resolvePart(spark, fam, v, "edges")
     try {
-      val mBucketed = mb(graft.operators.Graph.pageRankOnLayout(spark.table(t)))
+      val mBucketed = mb(graft.operators.Graph.pageRankFromCatalog(spark, fam,
+        version = v))
       assert(mBucketed < 0.6 * mMerge,
         s"bucketed=$mBucketed MB vs merge=$mMerge MB — layout saving gone")
     } finally graft.sources.IndexCatalog.dropFamily(spark, fam)

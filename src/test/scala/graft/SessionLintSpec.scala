@@ -41,9 +41,6 @@ class SessionLintSpec extends AnyFunSuite {
     ("Tables.scala", "df.createOrReplaceTempView(n)") ->
       ("Tables.registerAll: registering views is the SQL surface's own " +
         "purpose; callers give it a child session's frames or their own session"),
-    ("Bucketed.scala", "sparkContext.applicationId") ->
-      ("q117's bucketed fact tables are still named per application; " +
-        "moving them onto the index catalog is a separate change"),
     ("GoldenFixture.scala", ".tmp${ProcessHandle.current().pid()}") ->
       "a temp file renamed over the fixture at once, never a table",
     ("IndexCatalog.scala", ".tmp_pid${ProcessHandle.current().pid()}") ->
