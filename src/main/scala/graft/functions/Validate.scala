@@ -29,6 +29,18 @@ object Validate {
   val ReIsoDate = "^\\d{4}-\\d{2}-\\d{2}$"
   val ReTime = "^\\d{2}:\\d{2}:\\d{2}$"
 
+  /** The six classes above by their `graft.plans.PatternClass` kind. */
+  private val classKinds: Map[String, String] = Map(
+    ReInt -> "int", ReEuNumeric -> "eu_numeric", ReUsNumeric -> "us_numeric",
+    ReBool -> "bool", ReIsoDate -> "iso_date", ReTime -> "time")
+
+  /** `c rlike pat`, NULL for NULL. One of the six class constants runs
+    * as a byte scan (`graft.plans.PatternClass`, value-equal to the
+    * regex; PatternClassParitySpec fuzzes it); any other pattern runs
+    * `rlike` unchanged. */
+  def matches(c: Column, pat: String): Column =
+    classKinds.get(pat).fold(c.rlike(pat))(graft.plans.GraftFunctions.pattern_class(c, _))
+
   /** True when `c` is INVALID against anchored `pat`.
     * Mirrors `_col_invalid_expr` exactly:
     *  - cast to string first so any dtype validates;
@@ -38,9 +50,9 @@ object Validate {
   def invalidExpr(c: Column, pat: String, acceptNull: Boolean = false,
                   emptyIsInvalid: Boolean = true): Column = {
     val x = c.cast("string")
-    val matches = coalesce(x.rlike(pat), lit(acceptNull))
-    if (emptyIsInvalid) coalesce(x === "", lit(false)) || !matches
-    else !matches
+    val ok = coalesce(matches(x, pat), lit(acceptNull))
+    if (emptyIsInvalid) coalesce(x === "", lit(false)) || !ok
+    else !ok
   }
 
   /** OR-fold of `invalidExpr` across a pattern map; patterns for columns
@@ -54,15 +66,25 @@ object Validate {
         invalidExpr(col(c), p, acceptNulls.contains(c), emptyIsInvalid)
     }.reduceOption(_ || _).getOrElse(lit(false))
 
+  /** The patterns whose column is in `df`; refuses when none is, since
+    * a report over no column has no shape. */
+  private def present(df: DataFrame, patterns: Seq[(String, String)])
+      : Seq[(String, String)] = {
+    val in = patterns.filter { case (c, _) => df.columns.contains(c) }
+    if (in.isEmpty) throw new IllegalArgumentException(
+      s"no pattern column (${patterns.map(_._1).mkString(", ")}) is in the " +
+        s"frame (${df.columns.mkString(", ")})")
+    in
+  }
+
   /** 1-row DataFrame of `<col>__invalid_count` per pattern column
     * (per_column_invalid_counts, data_validation.py:92-120). */
   def perColumnInvalidCounts(df: DataFrame, patterns: Seq[(String, String)],
                              acceptNulls: Set[String] = Set.empty,
                              emptyIsInvalid: Boolean = true): DataFrame = {
-    val aggs = patterns.collect {
-      case (c, p) if df.columns.contains(c) =>
-        sum(invalidExpr(col(c), p, acceptNulls.contains(c), emptyIsInvalid)
-          .cast("long")).as(s"${c}__invalid_count")
+    val aggs = present(df, patterns).map { case (c, p) =>
+      sum(invalidExpr(col(c), p, acceptNulls.contains(c), emptyIsInvalid)
+        .cast("long")).as(s"${c}__invalid_count")
     }
     df.agg(aggs.head, aggs.tail: _*)
   }
@@ -71,11 +93,10 @@ object Validate {
     * data_validation.py:252-279) — long-form (column, invalid_value). */
   def invalidValuesByColumn(df: DataFrame, patterns: Seq[(String, String)],
                             limitPerCol: Int = 100): DataFrame =
-    patterns.collect {
-      case (c, p) if df.columns.contains(c) =>
-        df.filter(invalidExpr(col(c), p))
-          .select(lit(c).as("column"), col(c).cast("string").as("invalid_value"))
-          .distinct().limit(limitPerCol)
+    present(df, patterns).map { case (c, p) =>
+      df.filter(invalidExpr(col(c), p))
+        .select(lit(c).as("column"), col(c).cast("string").as("invalid_value"))
+        .distinct().limit(limitPerCol)
     }.reduce(_ unionByName _)
 
   /** Split into (valid, invalid) by the row mask. */

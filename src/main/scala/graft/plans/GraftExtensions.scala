@@ -79,6 +79,11 @@ object GraftFunctions {
       String.valueOf(e.eval())
     })
 
+  private def mkPatternClass(exprs: Seq[Expression]): PatternClass = {
+    require(exprs(1).foldable, s"graft_pattern_class kind must be a literal: ${exprs(1)}")
+    PatternClass(exprs.head, String.valueOf(exprs(1).eval()))
+  }
+
   /** The one function table: SQL name -> builder over the call's
     * argument expressions. The `mk*` builders check that the arguments
     * the expression keeps as Scala values are literals. */
@@ -92,6 +97,7 @@ object GraftFunctions {
     ("morton_key", e => MortonKey(e(0), e(1))),
     ("graft_srp_sig", mkSrpSig),
     ("graft_placeholder_null", mkPlaceholderNull),
+    ("graft_pattern_class", mkPatternClass),
     ("graft_media_meta", e => MediaHeaderMeta(e.head)),
     ("graft_regexp_count", mkRegexCount),
     ("graft_pcm16_features", e => Pcm16Features(e.head)),
@@ -143,6 +149,12 @@ object GraftFunctions {
     * [[PlaceholderNull]] for the measured rationale. */
   def placeholder_null(c: Column, tokens: Seq[String]): Column =
     column(PlaceholderNull(expression(c), tokens))
+
+  /** Membership in one of the validation core's lexical classes
+    * (`PatternClass.Kinds`) — the regex-free form of `rlike` on the
+    * class's anchored pattern; see [[PatternClass]]. */
+  def pattern_class(c: Column, kind: String): Column =
+    column(PatternClass(expression(c), kind))
 
   /** One-node media-header decode returning the full meta struct; see
     * [[MediaHeaderMeta]] for the measured rationale. */

@@ -86,12 +86,12 @@ object Profiler {
       .when(x === "", "empty")
       .when(lower(x).isin(Validate.defaultNullTokens.filter(_.nonEmpty)
         .map(_.toLowerCase): _*), "null_token")
-      .when(x.rlike(Validate.ReInt), "int")
-      .when(x.rlike(Validate.ReUsNumeric), "us_numeric")
-      .when(x.rlike(Validate.ReEuNumeric), "eu_numeric")
-      .when(lower(x).rlike(Validate.ReBool), "bool")
-      .when(x.rlike(Validate.ReIsoDate), "iso_date")
-      .when(x.rlike(Validate.ReTime), "time")
+      .when(Validate.matches(x, Validate.ReInt), "int")
+      .when(Validate.matches(x, Validate.ReUsNumeric), "us_numeric")
+      .when(Validate.matches(x, Validate.ReEuNumeric), "eu_numeric")
+      .when(Validate.matches(lower(x), Validate.ReBool), "bool")
+      .when(Validate.matches(x, Validate.ReIsoDate), "iso_date")
+      .when(Validate.matches(x, Validate.ReTime), "time")
       .otherwise("other")
     df.select(cls.as("value_class"))
       .groupBy("value_class").agg(count(lit(1)).as("n"))

@@ -1,7 +1,17 @@
 package graft.sources
 
+import scala.util.Try
+
+import com.univocity.parsers.csv.CsvParser
 import graft.functions.Validate
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.CodecStreams
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -25,14 +35,53 @@ import org.apache.spark.sql.types._
   */
 object CsvSource {
 
-  /** S1/S2: read a `|`-CSV with every column as nullable string. */
+  /** S1/S2: read a `|`-CSV with every column as nullable string.
+    *
+    * On a path that names one non-empty file, the header is resolved on
+    * the driver: the first non-empty line, read with Spark's own
+    * `CSVUtils.readHeaderLine`, parsed with the reader's parser settings
+    * and named by `CSVUtils.makeSafeHeader` under the session's case
+    * sensitivity, then passed as an explicit all-string schema. That is
+    * the code `TextInputCSVDataSource.infer` runs inside a `take(1)` job
+    * when `inferSchema` is off, so the schema and rows are unchanged and
+    * the job is gone (CsvHeaderParitySpec). A directory, a glob or an
+    * empty file keeps Spark's inference. */
   def readRaw(spark: SparkSession, path: String, sep: String = "|",
-              header: Boolean = true): DataFrame =
-    spark.read
-      .option("sep", sep)
-      .option("header", header.toString)
-      .option("mode", "PERMISSIVE")
-      .csv(path)
+              header: Boolean = true): DataFrame = {
+    val opts = Map("sep" -> sep, "header" -> header.toString, "mode" -> "PERMISSIVE")
+    val reader = spark.read.options(opts)
+    headerSchema(spark, path, opts).fold(reader.csv(path))(reader.schema(_).csv(path))
+  }
+
+  private def headerSchema(spark: SparkSession, path: String,
+                           opts: Map[String, String]): Option[StructType] =
+    singleFile(spark, path).flatMap { case (p, hadoopConf) =>
+      val conf = spark.sessionState.conf
+      val options = new CSVOptions(opts, conf.csvColumnPruning,
+        conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+      CSVUtils.readHeaderLine(p, options, hadoopConf)
+        .flatMap(line => Option(new CsvParser(options.asParserSettings).parseLine(line)))
+        .map { first =>
+          val names = CSVUtils.makeSafeHeader(first, conf.caseSensitiveAnalysis, options)
+          StructType(names.toSeq.map(StructField(_, StringType)))
+        }
+    }
+
+  /** `path` as one readable non-empty file, or None for what the reader
+    * lists or globs (a directory, glob characters), a name its listing
+    * treats as hidden, or a missing or empty file — the cases that stay
+    * on the reader. */
+  private def singleFile(spark: SparkSession, path: String)
+      : Option[(Path, Configuration)] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else {
+      val p = new Path(path)
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val hidden = p.getName.startsWith("_") || p.getName.startsWith(".")
+      Try(p.getFileSystem(hadoopConf).getFileStatus(p)).toOption
+        .filter(st => !hidden && st.isFile && st.getLen > 0)
+        .map(_ => (p, hadoopConf))
+    }
 
   /** Align a raw (all-string) frame to a typed target schema
     * (pipeline.py:237-260): lowercase headers, apply renames, drop
@@ -111,11 +160,28 @@ object CsvSource {
 
   /** S5: delimiter sniffing — count candidate delimiters in the first
     * line(s) of the file (dataset_profiling.py:85-99). Driver-side by
-    * nature (inspects bytes before a reader exists). */
+    * nature (inspects bytes before a reader exists): a single file is
+    * read with Hadoop's `LineReader`, the reader `CSVUtils.readHeaderLine`
+    * uses, so it launches no job; any other path takes its first lines
+    * from `spark.read.text`. */
   def sniffDelimiter(spark: SparkSession, path: String,
                      candidates: Seq[String] = Seq("|", ",", ";", "\t")): String = {
-    val head = spark.read.text(path).limit(5).collect().map(_.getString(0))
+    val head = singleFile(spark, path).fold(
+      spark.read.text(path).limit(5).collect().map(_.getString(0)).toSeq) {
+      case (p, hadoopConf) => firstLines(p, hadoopConf, 5)
+    }
     candidates.maxBy(d => head.map(l => l.split(java.util.regex.Pattern.quote(d), -1).length - 1).sum)
+  }
+
+  /** Up to `n` lines of a file, split and decoded as `spark.read.text`
+    * does (`\n`, `\r\n` or `\r`; UTF-8). */
+  private def firstLines(p: Path, hadoopConf: Configuration, n: Int): Seq[String] = {
+    val in = new LineReader(CodecStreams.createInputStream(hadoopConf, p))
+    try {
+      val text = new Text
+      Iterator.continually(in.readLine(text)).takeWhile(_ > 0).take(n)
+        .map(_ => text.toString).toList
+    } finally in.close()
   }
 
   /** Planted multi-delimiter fixtures for the sniffing oracle (q74):

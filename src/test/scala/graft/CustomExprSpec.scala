@@ -112,6 +112,7 @@ class CustomExprSpec extends SparkSpec {
     GraftFunctions.morton_key(col("x"), col("y")),
     GraftFunctions.srp_sig(col("a"), 1, 4, 3),
     GraftFunctions.placeholder_null(col("raw"), Seq("n/a", "null")),
+    GraftFunctions.pattern_class(col("raw"), "bool"),
     GraftFunctions.media_meta(col("wav")),
     GraftFunctions.regexp_count_only(col("s"), "[a-z]+"),
     GraftFunctions.pcm16_features(col("wav")),
@@ -129,6 +130,7 @@ class CustomExprSpec extends SparkSpec {
     "morton_key(x, y)",
     "graft_srp_sig(a, 1, 4, 3)",
     "graft_placeholder_null(raw, 'n/a', 'null')",
+    "graft_pattern_class(raw, 'bool')",
     "graft_media_meta(wav)",
     "graft_regexp_count(s, '[a-z]+')",
     "graft_pcm16_features(wav)",

@@ -1,6 +1,8 @@
 package graft
 
+import graft.functions.Validate
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** Content-scale A/B for the round-18 media kernels (optimization
   * guide §1.4: noop sink, §1.2 per-task work): the planted oracle
@@ -20,6 +22,7 @@ object KernelProbe {
     val spc = if (args.length > 1) args(1).toInt else 40000
     val dim = if (args.length > 2) args(2).toInt else 256
     val reps = if (args.length > 3) args(3).toInt else 3
+    val nValues = if (args.length > 4) args(4).toLong else 4000000L
     val spark = Session.get("graft-kernel-probe")
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
@@ -53,11 +56,15 @@ object KernelProbe {
       }
       best
     }
-    def pair(label: String, fast: => DataFrame, slow: => DataFrame): Unit = {
+    /** `evals`: per-value kernel calls in one rep, for ns per call. */
+    def pair(label: String, fast: => DataFrame, slow: => DataFrame,
+             evals: Long = 0L): Unit = {
       val f = time(s"$label kernel", fast)
       val s = time(s"$label columns", slow)
+      val perEval = if (evals == 0L) "" else
+        f" kernel_ns=${f * 1e9 / evals}%.1f columns_ns=${s * 1e9 / evals}%.1f"
       println(f"KERNELPROBE SUMMARY $label: kernel=$f%.3f s " +
-        f"columns=$s%.3f s speedup=${s / f}%.1fx")
+        f"columns=$s%.3f s speedup=${s / f}%.1fx$perEval")
     }
     pair("audioEnergy", Multimodal.audioEnergy(wavs),
       MediaColumns.audioEnergyColumns(wavs))
@@ -71,6 +78,27 @@ object KernelProbe {
       MediaColumns.imageResizeStatsColumns(bmps))
     pair("imagePHash", Multimodal.imagePHash(bmps),
       MediaColumns.imagePHashColumns(bmps))
+
+    val id = col("id")
+    val shapes = Seq(
+      id.cast("string"),
+      concat(id % 1000, lit(","), id % 100),
+      concat(id % 1000, lit("."), lpad((id % 1000).cast("string"), 3, "0"), lit(","), id % 100),
+      concat(id % 1000, lit(","), lpad((id % 1000).cast("string"), 3, "0"), lit("."), id % 100),
+      date_format(date_add(lit("2020-01-01").cast("date"), (id % 1000).cast("int")), "yyyy-MM-dd"),
+      format_string("%02d:%02d:%02d", id % 24, id % 60, id % 59),
+      element_at(array(lit("true"), lit("n"), lit("#NO VALUE"), lit("abc")), (id % 4 + 1).cast("int")),
+      concat(lit("-"), id % 97, lit(".5")))
+    val values = spark.range(nValues)
+      .select(element_at(array(shapes: _*), (id % shapes.length + 1).cast("int")).as("v"))
+      .localCheckpoint(true)
+    val classes = Seq(Validate.ReInt, Validate.ReEuNumeric, Validate.ReUsNumeric,
+      Validate.ReBool, Validate.ReIsoDate, Validate.ReTime)
+    println(s"KERNELPROBE values: $nValues CSV-shaped strings x ${classes.length} classes")
+    pair("patternClass",
+      values.select(classes.map(Validate.matches(col("v"), _)): _*),
+      values.select(classes.map(col("v").rlike(_)): _*),
+      nValues * classes.length)
     spark.stop()
   }
 }

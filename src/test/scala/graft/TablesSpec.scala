@@ -1,32 +1,10 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** `Tables` resolves a table's schema once per session and file
   * identity, and still gives every call a new relation. */
 class TablesSpec extends SparkSpec {
-
-  private val Tag = "graft.test.tables"
-
-  /** Jobs that `body` launches from this thread. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID.toString
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(Tag) == tag)) n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(Tag, tag)
-    try { body; TestBus.drain(sc) }
-    finally { sc.setLocalProperty(Tag, null); sc.removeSparkListener(l) }
-    n.get
-  }
 
   private def inferred(s: SparkSession, dir: String, name: String) =
     s.read.parquet(s"$dir/$name.parquet").schema

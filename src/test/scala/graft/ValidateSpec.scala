@@ -37,6 +37,20 @@ class ValidateSpec extends SparkSpec {
     assert(df.select(mask.as("m")).collect().head.getBoolean(0) === false)
   }
 
+  test("perColumnInvalidCounts refuses a frame with no pattern column") {
+    val df = Seq(("a1", "x")).toDF("known", "other")
+    val e = intercept[IllegalArgumentException](
+      Validate.perColumnInvalidCounts(df, Seq("missing" -> Validate.ReInt)))
+    assert(e.getMessage.contains("missing") && e.getMessage.contains("known, other"))
+  }
+
+  test("invalidValuesByColumn refuses a frame with no pattern column") {
+    val df = Seq(("a1", "x")).toDF("known", "other")
+    val e = intercept[IllegalArgumentException](
+      Validate.invalidValuesByColumn(df, Seq("gone" -> Validate.ReInt, "lost" -> "^z$")))
+    assert(e.getMessage.contains("gone, lost") && e.getMessage.contains("known, other"))
+  }
+
   test("decimalComma parses EU decimals exactly") {
     val out = Seq("1234,56", "0,803097", "17", null).toDF("v")
       .select(Validate.decimalComma(col("v")).as("d"))
