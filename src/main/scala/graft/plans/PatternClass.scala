@@ -1,7 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,16 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the integer part, then an optional `<frac>\d+`.
   */
 case class PatternClass(child: Expression, kind: String)
-    extends UnaryExpression {
+    extends UnaryExpression with ImplicitCastInputTypes {
 
   require(PatternClass.Kinds.contains(kind),
     s"graft_pattern_class kind must be one of ${PatternClass.Kinds.mkString(", ")}: $kind")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"graft_pattern_class requires STRING, got ${t.simpleString}")
-  }
+  /** A non-string input is cast to string first, as `rlike` does. */
+  override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = BooleanType
   override def prettyName: String = "graft_pattern_class"

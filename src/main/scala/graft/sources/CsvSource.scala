@@ -162,14 +162,10 @@ object CsvSource {
     * line(s) of the file (dataset_profiling.py:85-99). Driver-side by
     * nature (inspects bytes before a reader exists): a single file is
     * read with Hadoop's `LineReader`, the reader `CSVUtils.readHeaderLine`
-    * uses, so it launches no job; any other path takes its first lines
-    * from `spark.read.text`. */
+    * uses, so it launches no job. `path` names one file. */
   def sniffDelimiter(spark: SparkSession, path: String,
                      candidates: Seq[String] = Seq("|", ",", ";", "\t")): String = {
-    val head = singleFile(spark, path).fold(
-      spark.read.text(path).limit(5).collect().map(_.getString(0)).toSeq) {
-      case (p, hadoopConf) => firstLines(p, hadoopConf, 5)
-    }
+    val head = firstLines(new Path(path), spark.sessionState.newHadoopConf(), 5)
     candidates.maxBy(d => head.map(l => l.split(java.util.regex.Pattern.quote(d), -1).length - 1).sum)
   }
 

@@ -37,6 +37,17 @@ class ValidateSpec extends SparkSpec {
     assert(df.select(mask.as("m")).collect().head.getBoolean(0) === false)
   }
 
+  test("matches takes a non-string column as rlike does, class constant or not") {
+    val df = Seq(Some(12), Some(-7), None).toDF("n")
+    Seq(Validate.ReInt, Validate.ReBool, "^1\\d$").foreach { pat =>
+      val got = df.select(Validate.matches(col("n"), pat).as("m"), col("n").rlike(pat).as("r"))
+        .collect().map(r => (Option(r.get(0)), Option(r.get(1))))
+      assert(got.forall { case (m, r) => m == r }, pat)
+    }
+    assert(df.select(Validate.matches(col("n"), Validate.ReInt)).collect()
+      .map(r => Option(r.get(0))).toSeq === Seq(Some(true), Some(true), None))
+  }
+
   test("perColumnInvalidCounts refuses a frame with no pattern column") {
     val df = Seq(("a1", "x")).toDF("known", "other")
     val e = intercept[IllegalArgumentException](
